@@ -1,5 +1,5 @@
 """Spectral audio fingerprinting — the AUDIO tier of the dedup stack,
-sharing the Hamming near-dup join with ``ops/imagehash``.
+sharing the Hamming near-dup join with the text SimHash.
 
 ``spectral_hash64`` is the clip-level form of the Philips robust hash
 (Haitsma & Kalker, "A Highly Robust Audio Fingerprinting System",
@@ -19,7 +19,7 @@ the same bands — measured: 2x resample and 16-bit quantization are
 hash-IDENTICAL, mild noise flips ~3 bits, distinct clips sit near the
 random baseline (~32).
 
-Near-dup: ``hamming_neardup_pairs`` (ops/imagehash — pigeonhole-banded,
+Near-dup: ``hamming_neardup_pairs`` (ops/dedup — pigeonhole-banded,
 COMPLETE) over the fingerprint column; the decoders are the repo's own
 real WAV/AIFF/AU/FLAC codecs (``ops/multimodal.decode_audio_samples``),
 mp3/ogg surface as decode_status per the documented container
@@ -28,7 +28,7 @@ limitation.
 100 TB shape: hashing is scan-bound mapInPandas over binary shards;
 one rFFT per time slice (numpy, vectorized) — microseconds per clip
 slice; the join tier is the banding cost model shared with
-MinHash-LSH/pHash.
+MinHash-LSH.
 """
 
 from __future__ import annotations
@@ -46,8 +46,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from osmart_etl_spark.ops.imagehash import _bits_to_int64
-
 _T_SLICES = 9
 _N_BANDS = 9
 #: ABSOLUTE band range in Hz (the Philips choice: the perceptually
@@ -55,6 +53,21 @@ _N_BANDS = 9
 #: are what make the hash survive resampling: the same content at
 #: 8 kHz and 16 kHz maps to the same Hz bands.
 _HZ_LO, _HZ_HI = 300.0, 2000.0
+
+
+def _bits_to_int64(bits: np.ndarray) -> int:
+    """Pack a flat 0/1 array (MSB first) into a SIGNED 64-bit int —
+    the two's-complement value a Spark/DuckDB BIGINT column carries."""
+    v = 0
+    for b in bits.astype(np.uint64).flat:
+        v = (v << 1) | int(b)
+    if v >= 1 << 63:
+        v -= 1 << 64
+    return v
+
+
+def hamming64(a: int, b: int) -> int:
+    return bin((a ^ b) & ((1 << 64) - 1)).count("1")
 
 
 def _band_energies(mono: np.ndarray, rate: int) -> np.ndarray:

@@ -81,8 +81,8 @@ def _crc16(data: bytes) -> int:
 
 
 class BitReader:
-    """MSB-first bit reader over a frame byte window (mirrors the
-    LSB-first reader in ops/vp8l.py; FLAC is big-endian/MSB-first)."""
+    """MSB-first bit reader over a frame byte window (FLAC is
+    big-endian/MSB-first)."""
 
     def __init__(self, data: bytes, start: int = 0):
         self.data = data

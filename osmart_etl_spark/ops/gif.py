@@ -26,7 +26,7 @@ r7): a handful of crafted bytes cannot make a worker allocate
 gigapixels.
 
 Reference parity: the reference repo has no image surface — extension
-tier, same as ops/jpeg.py / ops/vp8l.py / ops/video.py.
+tier, same as ops/jpeg.py / ops/imagefmt.py.
 """
 
 from __future__ import annotations

@@ -19,7 +19,7 @@ Header-bomb contract (ADVICE r7): declared dimensions are capped at
 ``_MAX_PIXELS`` before any allocation.
 
 Reference parity: the reference repo has no image surface — extension
-tier alongside ops/jpeg.py / ops/gif.py / ops/vp8l.py.
+tier alongside ops/jpeg.py / ops/gif.py.
 """
 
 from __future__ import annotations

@@ -29,9 +29,7 @@ audio test data): none exists, and there is no reference decoder
 either. Reproducing ~1,500 constants from memory with no validation
 path risks a decoder that parses fine but emits silently-wrong PCM
 tagged ``'ok'`` — the exact failure mode the ``decode_status``
-contract exists to prevent (contrast ops/vp8.py, whose RFC 6386
-tables WERE cross-validated bit-exactly against the container's own
-libwebp). So PCM stays an honest ``fake_decoder`` stub in
+contract exists to prevent. So PCM stays an honest ``fake_decoder`` stub in
 ops/multimodal.py, while the structural layer here — which a 100 TB
 crawl pipeline needs for audio triage (duration/bitrate/mode filters,
 corrupt-stream quarantine) far more often than it needs samples — is

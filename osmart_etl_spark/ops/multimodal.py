@@ -28,30 +28,10 @@ Two tiers of codec honesty:
   4:4:4/4:2:2/4:2:0 chroma upsampling, restart markers, BT.601
   YCbCr->RGB; plus a baseline 4:4:4 encoder for fixtures). Progressive
   JPEG raises ValueError -> decode_status, never a job failure.
-- WebP is implemented FOR REAL in pure numpy in BOTH forms: lossless
-  VP8L (``ops/vp8l.py``: RFC 9649 bitstream — canonical/meta Huffman,
-  LZ77 with the 2D distance map, color cache, predictor/cross-color/
-  subtract-green/color-indexing inverse transforms, plus the ALPH
-  lossless alpha-plane form and a literal-only encoder for fixtures)
-  and, since round 7, lossy VP8 key frames (``ops/vp8.py``: RFC 6386
-  boolean arithmetic decoder, intra prediction incl. all ten 4x4
-  sub-modes, token-tree residuals, inverse DCT/WHT, normal in-loop
-  deblocking, YUV420->RGB — validated bit-exact against the system
-  libwebp across random encoder outputs, plus a prediction-only
-  encoder for fixtures).
-- Video decodes FOR REAL for Y4M (YUV4MPEG2 raw planar YUV, BT.601
-  conversion) and AVI/MJPEG (per-frame T.81 JPEG incl. the omitted-DHT
-  quirk) via ``ops/video.py`` (round 7).
-- Video CONTAINERS parse structurally without sample decode: MP4/
-  ISO-BMFF via ``ops/mp4.py`` (round 11 — box tables, H.264 SPS,
-  keyframe byte offsets) and, since round 12, Matroska/WebM via
-  ``ops/mkv.py`` (RFC 8794/9559 EBML walk: tracks, codec ids, dims,
-  duration, SimpleBlock keyframe offsets), IVF via ``probe_ivf``, and
-  the VP9 uncompressed frame header via ``ops/vp9.py`` (keyframe
-  detection + coded dims from the codec's own bytes).
-- Remaining COMPRESSED formats (mp3/ogg audio, inter-frame video like
-  H.264/VP9 sample decode) need libsndfile/ffmpeg, absent from this
-  container — those paths are stubbed behind
+- GIF (``ops/gif.py``) and PNM/BMP/RAS/TIFF/SGI/XBM/EXR
+  (``ops/imagefmt.py``) likewise decode FOR REAL.
+- Remaining formats (WebP images, mp3/ogg audio, all video) have no
+  in-tree decoder — those paths are stubbed behind
   ``DECODERS``: each stub either raises
   NotImplementedError (-> decode_status ``stub_not_implemented``) or
   raises ``FakeDecodeFeature`` with a deterministic fake feature
@@ -91,7 +71,7 @@ from pyspark.sql.types import (
 )
 
 # What a malformed/truncated payload may raise out of the pure-Python
-# parsers (ops/mp4, ops/video, the codec decoders): explicit ValueError
+# parsers (ops/mp3, the codec decoders): explicit ValueError
 # rejections, struct.unpack on a short buffer (struct.error), and raw
 # indexing past the end (IndexError). Every mapInPandas loop that turns
 # bad rows into *_status data must catch ALL three — a single malformed
@@ -449,18 +429,13 @@ def decode_image_pixels(payload: bytes) -> np.ndarray:
     pure-stdlib codec above, JPEG payloads decode FOR REAL via the
     pure-numpy codec (ops/jpeg.py — T.81 sequential AND progressive
     DCT with 4:4:4/4:2:2/4:2:0 and restart markers; arithmetic/
-    hierarchical/12-bit raise ValueError -> decode_status), and WebP
-    decodes FOR REAL in both forms — lossless VP8L via ops/vp8l.py
-    (RFC 9649) and, since round 7, lossy VP8 key frames via ops/vp8.py
-    (RFC 6386: boolean decoder, intra prediction, token trees, inverse
-    DCT/WHT, in-loop deblocking — validated bit-exact against the
-    system libwebp), and GIF decodes FOR REAL via ops/gif.py (LZW,
-    interlace, animation composition; third-party-fixture validated).
-    Returns the PIXEL array (H, W[, C]) uint8. Unknown image formats
-    raise ``ValueError('unknown image format')`` — ``_decode_image``
-    maps that to the deterministic fake feature (decode_status
-    'fake_decoder') and ``ops/imagehash`` maps it to a per-row
-    decode_status."""
+    hierarchical/12-bit raise ValueError -> decode_status), GIF decodes
+    FOR REAL via ops/gif.py (LZW, interlace, animation composition;
+    third-party-fixture validated), and the ops/imagefmt.py formats
+    decode FOR REAL. Returns the PIXEL array (H, W[, C]) uint8. Unknown
+    image formats raise ``ValueError('unknown image format')`` —
+    ``_decode_image`` maps that to the deterministic fake feature
+    (decode_status 'fake_decoder')."""
     if payload[:8] == _PNG_MAGIC:
         return decode_png(payload)
     if payload[:2] == b"\xff\xd8":
@@ -470,10 +445,6 @@ def decode_image_pixels(payload: bytes) -> np.ndarray:
         if img.ndim == 2:  # grayscale JPEG -> single-channel plane
             img = img[:, :, None]
         return img
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        from osmart_etl_spark.ops.vp8l import decode_webp
-
-        return decode_webp(payload)
     if payload[:6] in (b"GIF87a", b"GIF89a"):
         from osmart_etl_spark.ops.gif import decode_gif
 
@@ -543,13 +514,13 @@ class FakeDecodeFeature(Exception):
 
 def _fake_decode_image(payload: bytes) -> np.ndarray:
     """STUB — deterministic fake decoder for unknown image formats
-    (PNG, JPEG, and BOTH WebP forms decode for real above): a real
-    implementation calls PIL/opencv here. The fake
+    (PNG, JPEG, GIF and the ops/imagefmt.py formats decode for real
+    above): a real implementation calls PIL/opencv here. The fake
     derives a 4-dim feature from payload bytes — FOUR dims to match
     ``_quadrant_feature``, because a media_type's feature dimensionality
-    must not depend on which codec decoded the row (a mixed webp corpus
-    with real VP8L and fake VP8 rows would otherwise yield ragged
-    vectors; ADVICE r7). The plumbing (batching, schema, determinism)
+    must not depend on which codec decoded the row (a mixed corpus of
+    real and fake rows would otherwise yield ragged vectors; ADVICE
+    r7). The plumbing (batching, schema, determinism)
     stays testable, and ``FakeDecodeFeature`` tags the row
     ``fake_decoder``, not ``ok``."""
     arr = np.frombuffer(payload[:64].ljust(64, b"\0"), dtype=np.uint8).astype(np.float32)
@@ -713,64 +684,11 @@ def _fake_decode_audio(payload: bytes) -> np.ndarray:
     raise FakeDecodeFeature(arr.reshape(2 * _AUDIO_N_FRAMES, 4).std(axis=1) / 255.0)
 
 
-_VIDEO_SAMPLE_K = 8
-
-
-def _sample_evenly(frames: list, k: int) -> list:
-    """Up to k frames at evenly spaced indices (always includes the
-    first and last frame when n > 1) — deterministic, order-preserving."""
-    n = len(frames)
-    if n <= k:
-        return frames
-    idx = sorted({(i * (n - 1)) // (k - 1) for i in range(k)})
-    return [frames[i] for i in idx]
-
-
-def _video_feature(frames: list) -> np.ndarray:
-    """REAL video featurizer: evenly sample up to 8 frames, take the
-    4-dim quadrant feature of each, and emit per-quadrant mean + std
-    across the samples (8-dim float32, fixed for all video rows — a
-    single-frame video simply has zero temporal std)."""
-    feats = np.stack([_quadrant_feature(f) for f in _sample_evenly(frames, _VIDEO_SAMPLE_K)])
-    return np.concatenate([feats.mean(axis=0), feats.std(axis=0)]).astype(np.float32)
-
-
-def decode_video_frames(payload: bytes) -> list:
-    """Video FRAME dispatch: Y4M (YUV4MPEG2 raw planar YUV) and
-    AVI/MJPEG (per-frame baseline JPEG incl. the omitted-DHT quirk)
-    decode FOR REAL via ops/video.py — pure numpy + the in-tree T.81
-    codec, no ffmpeg; returns the RGB frame list. Inter-frame codecs
-    (MP4/H.264, VP9, MKV) remain an HONEST stub: NotImplementedError
-    -> decode_status 'stub_not_implemented', never fabricated frames."""
-    if payload[:9] == b"YUV4MPEG2":
-        from osmart_etl_spark.ops.video import decode_y4m
-
-        return decode_y4m(payload)
-    if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-        from osmart_etl_spark.ops.video import decode_avi
-
-        return decode_avi(payload)
-    if len(payload) >= 12 and payload[4:8] == b"ftyp":
-        raise NotImplementedError(
-            "MP4 parses structurally (ops/mp4.probe_mp4: codec, tables, "
-            "keyframe offsets) but H.264 sample decode needs ffmpeg"
-        )
-    if payload[:4] == b"\x1aE\xdf\xa3" or payload[:4] == b"DKIF":
-        raise NotImplementedError(
-            "Matroska/WebM and IVF parse structurally (ops/mkv.probe_mkv /"
-            " probe_ivf: tracks, keyframe offsets; ops/vp9 header parse) "
-            "but VP9/AV1 sample decode needs libvpx/ffmpeg"
-        )
-    raise NotImplementedError(
-        "inter-frame video codecs need ffmpeg (not in container); "
-        "Y4M and AVI/MJPEG decode for real via ops/video.py"
-    )
-
-
 def _decode_video(payload: bytes) -> np.ndarray:
-    """Video FEATURE dispatch: real frames via ``decode_video_frames``,
-    featurized over evenly sampled frames."""
-    return _video_feature(decode_video_frames(payload))
+    """STUB — video sample decode needs ffmpeg (not in container):
+    NotImplementedError -> decode_status 'stub_not_implemented', never
+    fabricated frames."""
+    raise NotImplementedError("video decode needs ffmpeg (not in container)")
 
 
 DECODERS = {
@@ -871,164 +789,6 @@ def audio_stream_info(media: DataFrame, batch_size_hint: int = 64) -> DataFrame:
             yield pd.DataFrame(out)
 
     return media.mapInPandas(run, schema=AUDIO_INFO_SCHEMA)
-
-
-VIDEO_INFO_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("container", StringType(), True),
-        StructField("codec", StringType(), True),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("duration_s", DoubleType(), True),
-        StructField("n_frames", LongType(), True),
-        StructField("n_keyframes", LongType(), True),
-        StructField("first_keyframe_offset", LongType(), True),
-        StructField("probe_status", StringType(), False),
-    ]
-)
-
-
-#: RFC 9559 codec-id → triage codec name (parse tier only — none of
-#: these decode samples here).
-_MKV_CODEC_NAMES = {
-    "V_VP9": "vp9", "V_VP8": "vp8", "V_AV1": "av1",
-    "V_MPEG4/ISO/AVC": "h264", "V_MPEGH/ISO/HEVC": "hevc",
-}
-_IVF_CODEC_NAMES = {"VP90": "vp9", "VP80": "vp8", "AV01": "av1"}
-
-
-def _probe_video_one(payload: bytes) -> tuple:
-    """(container, codec, w, h, duration_s, n_frames, n_keyframes,
-    first_keyframe_offset) for one video payload. Y4M/AVI probe via the
-    real frame decoders (every frame is a keyframe in those intra-only
-    containers); MP4 probes STRUCTURALLY via ops/mp4.probe_mp4 — box
-    tables, no sample decode — so triage works on containers whose
-    codec we honestly do not decode. Raw H.264 Annex-B streams walk
-    NALs for IDR keyframe offsets. Unknown formats raise ValueError."""
-    if payload[:9] == b"YUV4MPEG2":
-        from osmart_etl_spark.ops.video import decode_y4m
-
-        frames = decode_y4m(payload)
-        h, w = (frames[0].shape[0], frames[0].shape[1]) if frames else (None, None)
-        return ("y4m", "rawvideo", w, h, None, len(frames), len(frames), None)
-    if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-        from osmart_etl_spark.ops.video import decode_avi_mjpeg_frames
-
-        raw = decode_avi_mjpeg_frames(payload)
-        return ("avi", "mjpeg", None, None, None, len(raw), len(raw), None)
-    if len(payload) >= 12 and payload[4:8] == b"ftyp":
-        from osmart_etl_spark.ops.mp4 import probe_mp4
-
-        info = probe_mp4(payload)
-        vid = next(
-            (t for t in info["tracks"] if t.get("handler") == "vide"), None
-        )
-        if vid is None:
-            raise ValueError("BMFF container with no video track")
-        offs = vid.get("keyframe_offsets") or []
-        return (
-            "mp4", vid.get("codec"), vid.get("width"), vid.get("height"),
-            vid.get("duration_s"), vid.get("n_samples"),
-            len(vid.get("keyframe_samples") or []),
-            offs[0] if offs else None,
-        )
-    if payload[:4] == b"\x1aE\xdf\xa3":
-        from osmart_etl_spark.ops.mkv import probe_mkv
-
-        info = probe_mkv(payload)
-        vid = next(
-            (t for t in info["tracks"] if t["track_type"] == "video"), None
-        )
-        if vid is None:
-            raise ValueError("EBML container with no video track")
-        codec = _MKV_CODEC_NAMES.get(vid["codec_id"], vid["codec_id"])
-        offs = info["keyframe_offsets"]
-        return (
-            "webm" if info["doctype"] == "webm" else "mkv",
-            codec, vid["width"], vid["height"], info["duration_s"],
-            info["n_blocks"], len(offs), offs[0] if offs else None,
-        )
-    if payload[:4] == b"DKIF":
-        from osmart_etl_spark.ops.mkv import probe_ivf
-        from osmart_etl_spark.ops.vp9 import parse_vp9_frame_header
-
-        info = probe_ivf(payload)
-        codec = _IVF_CODEC_NAMES.get(info["codec"], info["codec"])
-        key_offs = []
-        if codec == "vp9":
-            # the codec's own headers say which frames are keyframes —
-            # bounded per-frame work (a few header bytes each), no decode
-            for off in info["frame_offsets"]:
-                h = parse_vp9_frame_header(payload[off : off + 16])
-                if h["frame_type"] == "key":
-                    key_offs.append(off)
-        return (
-            "ivf", codec, info["width"], info["height"], info["duration_s"],
-            info["n_frames"], len(key_offs) if codec == "vp9" else None,
-            key_offs[0] if key_offs else None,
-        )
-    if payload[:3] == b"\x00\x00\x01" or payload[:4] == b"\x00\x00\x00\x01":
-        from osmart_etl_spark.ops.mp4 import (
-            annexb_keyframe_offsets,
-            annexb_sps_info,
-            walk_annexb_nals,
-        )
-
-        nals = walk_annexb_nals(payload)
-        idr = annexb_keyframe_offsets(payload)
-        sps = annexb_sps_info(payload)
-        return ("h264-annexb", "h264",
-                sps["width"] if sps else None,
-                sps["height"] if sps else None,
-                None, len(nals), len(idr),
-                idr[0] if idr else None)
-    raise ValueError("unknown video container")
-
-
-def video_stream_info(media: DataFrame, batch_size_hint: int = 64) -> DataFrame:
-    """Video triage over ``mapInPandas`` — sibling of
-    ``audio_stream_info``: per-row container, codec, dimensions,
-    duration, frame/keyframe counts and the first keyframe's byte
-    offset. The MP4 tier (round 11) is PARSE-ONLY (ops/mp4.py): real
-    box-table metadata and keyframe offsets without any H.264 sample
-    decode, so the 100 TB triage question ("which clips are worth a
-    frame fetch, and where do their keyframes live?") is answerable on
-    real containers while frame decode stays an honest stub. Same
-    scale shape as ``extract_features``: per-row work inside the scan,
-    zero shuffle, malformed rows become ``probe_status`` data."""
-
-    cols = ("media_id", "container", "codec", "width", "height",
-            "duration_s", "n_frames", "n_keyframes",
-            "first_keyframe_offset", "probe_status")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in cols}
-            for _, row in pdf.iterrows():
-                out["media_id"].append(row["media_id"])
-                if row["media_type"] != "video" or row["payload"] is None:
-                    for k in cols[1:-1]:
-                        out[k].append(None)
-                    out["probe_status"].append("not_video")
-                    continue
-                try:
-                    vals = _probe_video_one(bytes(row["payload"]))
-                    for k, v in zip(cols[1:-1], vals):
-                        out[k].append(v)
-                    out["probe_status"].append("ok")
-                except _PARSE_ERRORS:
-                    for k in cols[1:-1]:
-                        out[k].append(None)
-                    out["probe_status"].append("probe_error")
-            pdf_out = pd.DataFrame(out)
-            for k in ("width", "height"):
-                pdf_out[k] = pd.array(pdf_out[k], dtype="Int32")
-            for k in ("n_frames", "n_keyframes", "first_keyframe_offset", "media_id"):
-                pdf_out[k] = pd.array(pdf_out[k], dtype="Int64")
-            yield pdf_out
-
-    return media.mapInPandas(run, schema=VIDEO_INFO_SCHEMA)
 
 
 def resize_raw_images(media: DataFrame, out_h: int, out_w: int) -> DataFrame:

@@ -1982,21 +1982,18 @@ def text_readability_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def simhash_hamming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs within Hamming distance 3 of the 60-bit SimHash —
-    ``ops/imagehash.hamming_neardup_pairs`` (COMPLETE pigeonhole
+    ``ops/dedup.hamming_neardup_pairs`` (COMPLETE pigeonhole
     banding: 4 contiguous 15-bit bands, a <=3-distance pair must match
     at least one band exactly; per-band bucket join + one
     bit_count(XOR) verification, all codegen) put under the driver's
-    oracle gate against a brute-force DuckDB cross join. The SAME
-    operator serves the image tier (phash64/dhash64 over the real
-    pixel decoders) where no SQL oracle can exist — this query is the
-    banding's correctness certificate.
+    oracle gate against a brute-force DuckDB cross join — this query is
+    the banding's correctness certificate.
 
     Scale shape: banding shuffles bands x corpus 16-byte rows instead
     of the O(n²) brute force; the verify touches only bucket
     collisions. Same cost model as the MinHash-LSH band join.
     """
-    from osmart_etl_spark.ops.dedup import simhash60
-    from osmart_etl_spark.ops.imagehash import hamming_neardup_pairs
+    from osmart_etl_spark.ops.dedup import hamming_neardup_pairs, simhash60
 
     d = read_table(spark, sf_dir, "documents")
     fp = simhash60(d, "doc_id", "text")

@@ -7,8 +7,8 @@ from __future__ import annotations
 
 import numpy as np
 
-from osmart_etl_spark.ops.audiofp import audio_fingerprints, spectral_hash64
-from osmart_etl_spark.ops.imagehash import hamming64, hamming_neardup_pairs
+from osmart_etl_spark.ops.audiofp import audio_fingerprints, hamming64, spectral_hash64
+from osmart_etl_spark.ops.dedup import hamming_neardup_pairs
 
 
 def _clip(seed: int = 7, sr: int = 8000, secs: float = 2.0) -> np.ndarray:

@@ -16,7 +16,7 @@ import pytest
 from osmart_etl_spark.caching import ledger_size, release_persisted
 from osmart_etl_spark.queries.base import REGISTRY
 
-from conftest import SF_SMALL
+from tests.conftest import SF_SMALL
 
 #: queries whose implementations persist intermediates (directly or via
 #: ops helpers) — one per persist-site family touched in round 14.

@@ -1,8 +1,12 @@
 """Tests for queries/linkage.py: exact ssjoin vs brute force, tier
-coverage arithmetic, PageRank mass conservation."""
+coverage arithmetic, PageRank mass conservation; and the Hamming-banded
+near-dup join (ops/dedup.hamming_neardup_pairs) vs brute force."""
 
 from __future__ import annotations
 
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
@@ -130,3 +134,53 @@ def test_lsh_recall_audit_finds_all_ground_truth(spark):
     assert r.n_exact > 0, "audit sample must contain ground-truth pairs"
     assert r.n_found == r.n_exact and r.recall == 1.0
     assert r.n_candidates >= r.n_found
+
+
+def test_banding_completeness_vs_brute_force(spark):
+    """Pigeonhole banding must find EVERY pair within max_dist — seeded
+    random 64-bit hashes plus planted near-dup clusters, compared
+    against the O(n²) definition."""
+    from osmart_etl_spark.ops.dedup import hamming_neardup_pairs
+
+    rng = random.Random(42)
+    rows = []
+    base_hashes = [rng.getrandbits(64) for _ in range(60)]
+    hid = 0
+    for h in base_hashes:
+        rows.append((hid, h - (1 << 64) if h >= 1 << 63 else h))
+        hid += 1
+        if rng.random() < 0.4:  # planted near-dup: flip <=3 bits
+            flipped = h
+            for _ in range(rng.randint(0, 3)):
+                flipped ^= 1 << rng.randrange(64)
+            rows.append(
+                (hid, flipped - (1 << 64) if flipped >= 1 << 63 else flipped)
+            )
+            hid += 1
+    df = spark.createDataFrame(rows, "id bigint, h bigint")
+    got = {
+        (r.id_a, r.id_b, r.hamming)
+        for r in hamming_neardup_pairs(df, "id", "h", max_dist=3).collect()
+    }
+    want = set()
+    for i, (ia, ha) in enumerate(rows):
+        for ib, hb in rows[i + 1 :]:
+            d = bin((ha ^ hb) & ((1 << 64) - 1)).count("1")
+            if d <= 3:
+                want.add((min(ia, ib), max(ia, ib), d))
+    assert got == want and len(want) > 0
+
+
+def test_hamming_neardup_rejects_degenerate_banding(spark):
+    """max_dist+1 > bits would make width 0 (all-zero masks → one bucket
+    per band → silent O(n²) cross join); must raise at entry, as must
+    bits outside 1..64 and negative max_dist (round-11 ADVICE)."""
+    from osmart_etl_spark.ops.dedup import hamming_neardup_pairs
+
+    df = spark.createDataFrame([(1, 0), (2, 1)], "id bigint, h bigint")
+    with pytest.raises(ValueError, match="bands cannot partition"):
+        hamming_neardup_pairs(df, "id", "h", max_dist=8, bits=4)
+    with pytest.raises(ValueError, match="bits"):
+        hamming_neardup_pairs(df, "id", "h", max_dist=3, bits=65)
+    with pytest.raises(ValueError, match="max_dist"):
+        hamming_neardup_pairs(df, "id", "h", max_dist=-1)
