@@ -10,8 +10,8 @@ SOD state (as-of, J7), replay with state continuity (W2/T5), daily net →
 calendar scaffold → SOD → sparse change-points, upsert into the points
 table, advance the date watermark (update_stock_points.py).
 
-Both run as single Catalyst DAGs; the per-store loop of the reference is
-a partition column. Sink layout: the raw log partitions by event date so
+Each run covers one store, as in the reference (the orchestrator loops
+stores). Sink layout: the raw log partitions by event date so
 incremental reads prune to the slice (the Spark analogue of the
 reference's (art_id,tienda_id,fecha) index, §4).
 """
@@ -68,8 +68,10 @@ def run_raw_movements_incremental(
     """EP2: append movements past the ts watermark to the raw log.
 
     Restart point = last_ts + 1s buffer, then a belt-and-braces re-filter
-    ``fecha > last_ts`` (T2) — re-extraction overlap is absorbed by the
-    downstream UNION-distinct / upsert (T6).
+    ``fecha > last_ts`` (T2). The raw log is append-only and nothing
+    downstream deduplicates on ``id``: a crash after the append commits
+    but before the watermark advances re-appends the slice on the next
+    tick (ROADMAP direction 1 tracks closing that window).
     """
     store = WatermarkStore(spark, watermark_path)
 
@@ -264,7 +266,9 @@ def run_stock_points_incremental(
             )
             .first()
         )
-        new_wm_holder[0] = row["m"].isoformat() if row["m"] is not None else None
+        if row["m"] is None:
+            return None  # empty slice: no prior-points read, no replay
+        new_wm_holder[0] = row["m"].isoformat()
         stats_holder[0] = {
             "max_key_rows": int(row["max_key_rows"] or 0),
             "n_keys": int(row["n_keys"] or 0),

@@ -5,9 +5,9 @@ The reference runs three jobs in fixed order per cron tick
 stock points incremental), looping stores with per-store failure
 isolation (try/except-continue — update_clean_data.py:36-113).
 
-Spark-first: stores are a column, so the per-store loop exists only for
-failure isolation of *sources* (one broken store DB must not block the
-others), not for compute. Each stage is one Spark job over all stores.
+The per-store loop is kept as in the reference: each stage runs once
+per store, with its own watermark and its own failure isolation (one
+broken store DB must not block the others).
 """
 
 from __future__ import annotations

@@ -6,10 +6,12 @@ buffer and a client-side re-filter, T2), load idempotently (S7 upserts),
 advance the watermark in the same run (update_raw_stock_movements.py:
 19-110). This module is that loop, Spark-first:
 
-- the watermark store is a tiny parquet table keyed by pipeline/store,
-  updated with keep-latest upsert semantics (io/sinks.upsert_keep_latest);
+- the watermark store is one small JSON map per committed version of a
+  ``io/atomic`` commit-log table, read and CAS-published on the driver —
+  reading or advancing a watermark launches no Spark job;
 - extraction is any DataFrame-producing callable; the watermark predicate
-  composes onto it and pushes down to the scan;
+  composes onto it and pushes down to the scan. An extract that already
+  knows its slice is empty returns None and the run stops there;
 - the sink is idempotent by construction (append of a deterministic
   slice, or keyed upsert), so re-runs after failure are safe (T6) —
   the watermark only advances after the sink commits.
@@ -21,11 +23,12 @@ works against any batch source.
 
 from __future__ import annotations
 
+import json
+import uuid
 from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     StringType,
     StructField,
@@ -33,6 +36,10 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from osmart_etl_spark.io import atomic
+
+#: Row layout of the earlier parquet format of the watermark table (one
+#: row per pipeline/store). Only read, to upgrade an existing store.
 WATERMARK_SCHEMA = StructType(
     [
         StructField("pipeline", StringType(), False),
@@ -42,94 +49,73 @@ WATERMARK_SCHEMA = StructType(
     ]
 )
 
+_WM_FILE = "_watermarks.json"
+
 
 class WatermarkStore:
-    """Tiny keyed watermark table (the ``etl_progress`` analogue, S11).
+    """Keyed watermarks (the ``etl_progress`` analogue, S11).
 
-    Values are stored stringified (timestamps ISO, ids decimal) exactly
-    like the reference keeps typed columns per watermark kind; parsing is
-    the caller's contract. At scale this table stays O(pipelines×stores)
-    rows — read it whole, broadcast-join if ever needed.
+    Each committed version directory of the table at ``path`` holds one
+    ``_watermarks.json`` = ``{"v": 1, "wm": {pipeline: {store: value}}}``.
+    ``set``/``reset`` stage the changed map under a fresh version token
+    and publish it with a CAS on the sequence they read
+    (``io/atomic.publish_staged``): a crash leaves the previous map
+    readable, an unpublished stage is never read (and is swept by the
+    TTL GC), and a concurrent writer raises ``ConcurrentCommitError``
+    instead of losing an update. Values are stored stringified
+    (timestamps ISO, ids decimal); parsing is the caller's contract.
+
+    A current version without ``_watermarks.json`` is the earlier
+    parquet format (``WATERMARK_SCHEMA`` rows); it is read once per call
+    and the next ``set`` rewrites it as JSON, so an upgraded lake keeps
+    its watermarks rather than re-extracting its whole history.
     """
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
-        self.path = path
+        self.path = path.rstrip("/")
 
-    def read_all(self) -> DataFrame:
-        from osmart_etl_spark.io.atomic import current_version, read_committed
-        from osmart_etl_spark.io.sources import path_exists
+    def _read(self) -> tuple[int, dict[str, dict[str, str]]]:
+        """(committed seq, watermark map); (0, {}) for a missing store."""
+        cur = atomic.current_version(self.spark, self.path)
+        if cur is None:
+            return 0, {}
+        ver = f"{self.path}/_v-{cur[1]}"
+        _, fs, hpath = atomic._fs(self.spark, f"{ver}/{_WM_FILE}")
+        if fs.exists(hpath):
+            text = atomic._read_small_text(self.spark, f"{ver}/{_WM_FILE}")
+            return cur[0], json.loads(text)["wm"]
+        wm: dict[str, dict[str, str]] = {}
+        for r in self.spark.read.schema(WATERMARK_SCHEMA).parquet(ver).collect():
+            wm.setdefault(r["pipeline"], {})[r["store"]] = r["wm_value"]
+        return cur[0], wm
 
-        # Only a genuinely missing store reads as empty; a transient FS
-        # error must raise, not silently reset the watermark (which would
-        # re-extract and duplicate-append the whole history).
-        if current_version(self.spark, self.path) is not None:
-            return read_committed(self.spark, self.path).select(
-                *[f.name for f in WATERMARK_SCHEMA.fields]
-            )
-        if not path_exists(self.spark, self.path):
-            return self.spark.createDataFrame([], WATERMARK_SCHEMA)
-        # pre-round-12 plain layout — adopted on the next set()
-        return self.spark.read.schema(WATERMARK_SCHEMA).parquet(self.path)
+    def _publish(self, seq: int, wm: dict[str, dict[str, str]]) -> None:
+        if seq == 0:
+            # a crashed creator's dead lock on seq 1 would otherwise wedge
+            # the store: _gc (TTL-gated) normally runs only after a commit
+            atomic._gc(self.spark, self.path, 2, 3600.0)
+        token = uuid.uuid4().hex[:12]
+        atomic._write_small_json(
+            self.spark, f"{self.path}/_v-{token}/{_WM_FILE}", {"v": 1, "wm": wm}
+        )
+        atomic.publish_staged(self.spark, self.path, token, expected_seq=seq)
 
     def get(self, pipeline: str, store: str) -> str | None:
-        rows = (
-            self.read_all()
-            .filter((F.col("pipeline") == pipeline) & (F.col("store") == store))
-            .select("wm_value")
-            .collect()
-        )
-        return rows[0]["wm_value"] if rows else None
+        return self._read()[1].get(pipeline, {}).get(store)
 
     def set(self, pipeline: str, store: str, value: str) -> None:
-        # Round 12 (review): the old in-place mode("overwrite") rewrite
-        # had a delete-then-write window — a crash there lost EVERY
-        # pipeline's watermark at once, and the next tick's full
-        # re-extract duplicate-appended whole histories into append
-        # sinks. The manifest-committed upsert closes the window (a
-        # crash leaves the previous version readable), adopts an
-        # existing plain-layout store on first write, and turns a
-        # concurrent tick's lost update into a loud
-        # ConcurrentCommitError (the tick retries; loads are
-        # idempotent).
-        from osmart_etl_spark.io.atomic import upsert_versioned
-
-        new = self.spark.createDataFrame(
-            [(pipeline, store, value, None)], WATERMARK_SCHEMA
-        ).withColumn("updated_at", F.current_timestamp())
-        upsert_versioned(
-            self.spark, new, self.path,
-            keys=["pipeline", "store"], order_col="updated_at",
-        )
+        seq, wm = self._read()
+        wm.setdefault(pipeline, {})[store] = value
+        self._publish(seq, wm)
 
     def reset(self, pipeline: str, store: str) -> None:
-        """reset_last_*.sql analogue — drop the watermark row (a full
-        REPLACE version through the same commit log as ``set``)."""
-        from osmart_etl_spark.io.atomic import (
-            commit_version,
-            current_version,
-            upsert_versioned,
-        )
-        from osmart_etl_spark.io.sources import path_exists
-
-        if current_version(self.spark, self.path) is None:
-            if not path_exists(self.spark, self.path):
-                return  # nothing to reset
-            # legacy plain layout: adopt it (merge of an empty batch
-            # commits the existing rows as v1 and sweeps the plain
-            # files), then the CAS replace below drops the row
-            empty = self.spark.createDataFrame([], WATERMARK_SCHEMA)
-            upsert_versioned(
-                self.spark, empty, self.path,
-                keys=["pipeline", "store"], order_col="updated_at",
-            )
-        kept = self.read_all().filter(
-            ~((F.col("pipeline") == pipeline) & (F.col("store") == store))
-        )
-        commit_version(
-            self.spark, kept, self.path,
-            expected_seq=current_version(self.spark, self.path)[0],
-        )
+        """reset_last_*.sql analogue — drop one watermark (a new version
+        through the same commit log as ``set``)."""
+        seq, wm = self._read()
+        if store in wm.get(pipeline, {}):
+            del wm[pipeline][store]
+            self._publish(seq, wm)
 
 
 def run_incremental(
@@ -138,7 +124,7 @@ def run_incremental(
     store: WatermarkStore,
     pipeline: str,
     source_name: str,
-    extract: Callable[[SparkSession, Any | None], DataFrame],
+    extract: Callable[[SparkSession, Any | None], DataFrame | None],
     load: Callable[[DataFrame], None],
     wm_expr: Callable[[DataFrame], Any],
 ) -> Any | None:
@@ -146,7 +132,8 @@ def run_incremental(
     watermark, load, advance the watermark (T1/T2/T6).
 
     ``extract(spark, last_wm)`` returns only rows beyond ``last_wm``
-    (None = full backfill — the seed_* scripts' default-epoch path);
+    (None = full backfill — the seed_* scripts' default-epoch path), or
+    None when it already knows nothing lies past it;
     ``wm_expr(df)`` computes the new high-water mark (scalar, A4).
     The watermark writes only after ``load`` returns, so a crash between
     load and checkpoint re-processes the slice — which the idempotent
@@ -154,6 +141,8 @@ def run_incremental(
     """
     last = store.get(pipeline, source_name)
     batch = extract(spark, last)
+    if batch is None:
+        return None  # extract found nothing past the watermark
     # ONE evaluation of the extract lineage (round-12 review): wm_expr's
     # aggregate and load's sink write used to each run the full DAG —
     # doubling every tick's scan/groupBy cost and letting the two

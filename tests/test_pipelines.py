@@ -42,49 +42,67 @@ def test_watermark_store_roundtrip(spark, tmp_path):
     assert ws.get("sales", "s2") == "7"
 
 
-@pytest.mark.slow
 def test_watermark_store_is_versioned_and_adopts_legacy(spark, tmp_path):
-    """Round-12 (review): the watermark table goes through the
-    manifest-committed upsert — no in-place overwrite window that could
-    lose EVERY pipeline's watermark at once. A pre-round-12 plain
-    parquet store is adopted transparently, and a crash mid-set leaves
-    the previous version fully readable."""
+    """The watermark map is a JSON file inside each committed version of
+    a commit-log table: an unpublished stage is never read, writes are a
+    CAS on the sequence, and a store in the earlier parquet format
+    (upsert_versioned rows) keeps its watermarks across the upgrade."""
+    import json
     import os
 
-    from osmart_etl_spark.io.atomic import current_version
+    from osmart_etl_spark.io.atomic import (
+        ConcurrentCommitError,
+        current_version,
+        upsert_versioned,
+    )
     from osmart_etl_spark.streaming.incremental import (
         WATERMARK_SCHEMA,
         WatermarkStore,
     )
 
-    # legacy plain-layout store from an earlier deployment
-    p = str(tmp_path / "wm_legacy")
-    spark.createDataFrame(
-        [("sales", "s1", "100", None)], WATERMARK_SCHEMA
-    ).write.parquet(p)
+    # earlier parquet format, written the way the old set() wrote it
+    p = str(tmp_path / "wm_parquet")
+    upsert_versioned(
+        spark,
+        spark.createDataFrame(
+            [("sales", "s1", "100", None), ("stock_points", "s1", "2025-01-03", None)],
+            WATERMARK_SCHEMA,
+        ),
+        p, keys=["pipeline", "store"], order_col="updated_at",
+    )
     ws = WatermarkStore(spark, p)
-    assert ws.get("sales", "s1") == "100"  # readable pre-adoption
-    ws.set("inventory", "s1", "42")  # first versioned write adopts
-    assert current_version(spark, p) is not None
-    assert ws.get("sales", "s1") == "100"  # legacy row survived adoption
-    assert ws.get("inventory", "s1") == "42"
-    # plain legacy files swept; only the versioned layout remains
-    assert all(n.startswith(("_", ".")) for n in os.listdir(p))
+    assert ws.get("sales", "s1") == "100"
+    assert ws.get("stock_points", "s1") == "2025-01-03"
+    ws.set("raw_movements", "s1", "42")  # first write upgrades to JSON
+    assert ws.get("sales", "s1") == "100"  # parquet rows survived
+    assert ws.get("stock_points", "s1") == "2025-01-03"
+    assert ws.get("raw_movements", "s1") == "42"
+    assert os.path.exists(f"{p}/_v-{current_version(spark, p)[1]}/_watermarks.json")
 
     # crash mid-set: a fully staged but unpublished version is invisible
     ws.set("sales", "s1", "200")
     seq_before = current_version(spark, p)[0]
-    orphan = f"{p}/_v-deadbeef0000"
-    spark.createDataFrame(
-        [("sales", "s1", "999", None)], WATERMARK_SCHEMA
-    ).write.parquet(orphan)
+    orphan = tmp_path / "wm_parquet" / "_v-deadbeef0000"
+    orphan.mkdir()
+    (orphan / "_watermarks.json").write_text(
+        json.dumps({"v": 1, "wm": {"sales": {"s1": "999"}}})
+    )
     assert ws.get("sales", "s1") == "200"  # orphan never read
 
-    # reset drops one row through the same commit log
-    ws.reset("inventory", "s1")
-    assert ws.get("inventory", "s1") is None
+    # reset drops one entry through the same commit log
+    ws.reset("raw_movements", "s1")
+    assert ws.get("raw_movements", "s1") is None
     assert ws.get("sales", "s1") == "200"
     assert current_version(spark, p)[0] > seq_before
+
+    # CAS: two writers read the same seq; the second set loses loudly
+    a, b = WatermarkStore(spark, p), WatermarkStore(spark, p)
+    snapshot = b._read()
+    b._read = lambda: snapshot  # b read before a committed
+    a.set("sales", "s1", "300")
+    with pytest.raises(ConcurrentCommitError):
+        b.set("sales", "s1", "301")
+    assert ws.get("sales", "s1") == "300"
 
 
 def test_upsert_keep_latest(spark):
@@ -488,6 +506,62 @@ def test_orchestrator_full_tick(spark, tmp_path, events_parquet):
     assert "raw_movements:tienda_01" in part.succeeded
     assert "stock_points:tienda_01" in part.succeeded
     assert read_committed(spark, str(tmp_path / "points3")).count() > 0
+
+
+def test_noop_tick_commits_nothing_and_launches_few_jobs(spark, tmp_path):
+    """A tick with nothing past any watermark is the tick a cron loop
+    runs most: it must leave the watermark table and every sink at its
+    committed version, and its fixed cost must stay small — watermark
+    reads launch no Spark job, and an empty stock-points slice stops
+    after its histogram aggregate."""
+    import glob
+
+    from osmart_etl_spark.io.atomic import current_version
+    from osmart_etl_spark.pipelines.orchestrator import run_etl
+
+    kinds = ["purchase", "click", "signup", "error"]
+    events = str(tmp_path / "events")
+    spark.createDataFrame(
+        [
+            (i, dt.datetime(2025, 1, 1 + i // 12, i % 12), i % 5, kinds[i % 4],
+             float(i), "{}")
+            for i in range(36)
+        ],
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string",
+    ).write.parquet(events)
+    paths = {
+        "events_path": events,
+        "ventas_path": str(tmp_path / "ventas"),
+        "raw_log_path": str(tmp_path / "raw"),
+        "points_path": str(tmp_path / "points"),
+        "watermark_path": str(tmp_path / "wm"),
+    }
+
+    def versions():
+        tables = [
+            paths["watermark_path"], paths["points_path"],
+            f"{paths['ventas_path']}_accum",
+            *sorted(glob.glob(f"{paths['ventas_path']}/bucket=*")),
+        ]
+        return {t: current_version(spark, t) for t in tables}
+
+    def last_job_id():
+        return max(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+    first = run_etl(spark, **paths)
+    assert first.failed == {}
+    assert all(v is not None for v in first.watermarks.values())
+    before = versions()
+    assert all(v is not None for v in before.values())
+
+    j0 = last_job_id()
+    second = run_etl(spark, **paths)
+    jobs = last_job_id() - j0
+    assert second.failed == {}
+    assert second.watermarks and all(v is None for v in second.watermarks.values())
+    assert versions() == before
+    assert jobs <= 12, f"no-op tick launched {jobs} Spark jobs"
 
 
 @pytest.mark.slow
