@@ -28,7 +28,12 @@ composes with a later ledger release.
 
 from __future__ import annotations
 
+import logging
+
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
+
+log = logging.getLogger(__name__)
 
 _LEDGER: list[tuple[str | None, DataFrame]] = []
 _CURRENT: str | None = None
@@ -51,9 +56,24 @@ def led_register(df: DataFrame) -> DataFrame:
     return df
 
 
+def _unpersist(df: DataFrame) -> None:
+    """Release one ledger entry. With no active SparkContext there is
+    nothing left to release (the blocks died with it), so the call is
+    skipped; any other failure is logged and the release goes on, so
+    one bad entry cannot strand the rest of the ledger."""
+    if SparkContext._active_spark_context is None:
+        return
+    try:
+        df.unpersist()
+    except Exception:  # noqa: BLE001 — logged, never swallowed silently
+        log.warning("cache ledger: unpersist failed", exc_info=True)
+
+
 def begin_query(name: str) -> None:
     """Called by the ``@query`` decorator at build start: release every
-    ledger entry belonging to a DIFFERENT query, keep this query's own.
+    ledger entry belonging to a DIFFERENT query, keep this query's own,
+    and tag persists made during the build with ``name`` (the decorator
+    resets the tag to None when the build returns).
 
     Keeping same-name entries matters for measurement semantics, not
     just speed: re-building the same query re-persists byte-identical
@@ -69,10 +89,7 @@ def begin_query(name: str) -> None:
     kept = [(tag, df) for tag, df in _LEDGER if tag == name]
     for tag, df in _LEDGER:
         if tag != name:
-            try:
-                df.unpersist()
-            except Exception:  # a stopped SparkContext must not mask errors
-                pass
+            _unpersist(df)
     _LEDGER[:] = kept
 
 
@@ -81,10 +98,7 @@ def release_persisted() -> int:
     entries were released."""
     n = len(_LEDGER)
     while _LEDGER:
-        try:
-            _LEDGER.pop()[1].unpersist()
-        except Exception:  # a stopped SparkContext must not mask errors
-            pass
+        _unpersist(_LEDGER.pop()[1])
     return n
 
 

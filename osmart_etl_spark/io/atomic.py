@@ -1,12 +1,13 @@
 """Manifest-committed versioned parquet tables — atomic overwrite
 without a table format (SURVEY.md §2.1 S7-S10 hardening).
 
-``upsert_parquet``/``compact`` (io/sinks.py, io/layout.py) rewrite a
-plain directory in place; their documented weakness is the window where
-the directory is mid-swap (compact's two renames) or mid-overwrite
-(upsert's delete-then-write) — a crash there loses or hides the table.
-The reference has the same exposure in its tmp-file ``os.replace``
-CSV dance (dq_exclusions_csv.py) and simply accepts it.
+Rewriting a plain directory in place (delete-then-write, or a
+two-rename swap) leaves a window where a crash loses or hides the
+table. The reference has the same exposure in its tmp-file
+``os.replace`` CSV dance (dq_exclusions_csv.py) and simply accepts it.
+Every keyed sink here (``upsert_versioned`` below, and
+``merge_upsert_partitioned`` / ``merge_accumulate_versioned`` in
+io/sinks.py) writes through this module instead.
 
 This module removes the window with the two-phase protocol already
 proven for the Python DataSource sink (io/pydatasource.py
@@ -32,8 +33,7 @@ JsonLinesWriter: stage under job-token names, publish via a manifest):
   EXACTLY ``expected_seq+1``, so two racing writers cannot both claim
   a sequence and a racer that committed first is always detected:
   first wins, the loser's merge was based on a stale snapshot and must
-  re-run — a real CAS, unlike the single-writer-by-convention contract
-  of ``merge_accumulate``.
+  re-run — a real CAS.
 - Readers resolve the highest committed sequence and read that version
   directory only: they never observe a partial write, and a reader
   mid-scan keeps a consistent snapshot because version directories are
@@ -47,12 +47,12 @@ of returning a mix of versions.
 
 Scale notes: the commit log is O(commits) empty files and version
 resolution is one directory listing — no data scan. Each commit writes
-one full new version, which is the right cost model for compaction and
-for the keep-latest upsert below at dimension-table scale; for 100 TB
-fact tables the bucket-granular ``merge_upsert_partitioned`` remains
-the O(delta) path — and since round 10 it RUNS this protocol per
-bucket directory (staged ``_v-<token>`` rename + ``publish_staged``
-CAS), so both upsert tiers share one crash-safety story.
+one full new version, which is the right cost model for the
+keep-latest upsert below at dimension-table scale; for 100 TB fact
+tables the bucket-granular ``merge_upsert_partitioned`` is the
+O(delta) path, and it RUNS this protocol per bucket directory (staged
+``_v-<token>`` rename + ``publish_staged`` CAS), so both upsert tiers
+share one crash-safety story.
 """
 
 from __future__ import annotations
@@ -65,7 +65,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 _MARKER_RE = re.compile(r"^(\d{8})-([0-9a-f]{12})$")
 _LOCK_RE = re.compile(r"^(\d{8})\.lock$")
-_MIGRATION_SENTINEL = "_legacy-migration"
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -421,11 +420,9 @@ def _gc(
             # markerless lock is a dead claim (TTL-gated: inside the
             # TTL it may be a live writer between claim and marker)
             fs.delete(jvm.org.apache.hadoop.fs.Path(full), False)
-        elif not m and not lk and name != _MIGRATION_SENTINEL and _old_enough(full):
+        elif not m and not lk and _old_enough(full):
             # foreign debris (e.g. an editor/tool temp file) — swept on
-            # the same TTL so resolution listings stay small (the
-            # migration sentinel is exempt: it must survive arbitrarily
-            # long crash gaps so the legacy sweep can resume)
+            # the same TTL so resolution listings stay small
             fs.delete(jvm.org.apache.hadoop.fs.Path(full), False)
 
 
@@ -457,7 +454,7 @@ def upsert_versioned(
     sidecar: dict | None = None,
 ) -> int:
     """Keep-latest upsert (S7/S8 semantics, io/sinks.upsert_keep_latest)
-    materialized through the commit log. Versus ``upsert_parquet``:
+    materialized through the commit log:
 
     - no ``localCheckpoint(eager=True)`` barrier — the merge reads the
       OLD version directory while writing a NEW one, so nothing is ever
@@ -467,131 +464,45 @@ def upsert_versioned(
     - a concurrent upsert is detected (CAS on the sequence), not
       silently lost.
 
-    Legacy migration (round-8 ADVICE): pointing this sink at an
-    existing PLAIN-parquet table (no ``_commits`` log — the old
-    ``upsert_parquet`` layout) used to drop its rows silently, because
-    the separate WatermarkStore had already marked the source events
-    processed so they would never be recomputed. Now the first
-    versioned commit ADOPTS the legacy files as the prior snapshot:
-    merge(legacy, new) is committed as version 1 and the plain files
-    are then removed. Crash-safety: a ``_commits/_legacy-migration``
-    sentinel is created before the publish and removed only after the
-    legacy sweep completes, so a crash anywhere in between resumes the
-    sweep on the next call; plain data files found WITHOUT the
-    sentinel on an already-versioned table are foreign (not ours to
-    delete) and raise loudly instead.
+    The table directory holds only ``_``/``.``-prefixed entries (the
+    commit log and version directories). Any other entry — plain
+    parquet written by some other tool, or a stray file — is refused
+    with a ``RuntimeError`` naming it and is left untouched: merging
+    without it would drop its rows, and deleting it is not this sink's
+    call. Move such files aside, or load them as the first batch.
     """
     from osmart_etl_spark.io.sinks import upsert_keep_latest
 
     base = table.rstrip("/")
+    plain = sorted(n for n in _listdir(spark, base) if not n.startswith(("_", ".")))
+    if plain:
+        raise RuntimeError(
+            f"{base}: holds entries outside the commit log {plain} — refusing "
+            "to upsert over rows it cannot read. Move them aside or re-point "
+            "the sink."
+        )
     cur = current_version(spark, base)
-    jvm, fs, _ = _fs(spark, base)
     if cur is None:
-        # Round-9 (ADVICE): the adoption/create path CAS-claims exactly
-        # lock 00000001, and _gc — the only thing that TTL-sweeps a
-        # crashed claimant's dead markerless lock — otherwise runs only
-        # AFTER a successful commit on this table, which a dead first
-        # lock makes unreachable: every retry would raise
+        # Round-9 (ADVICE): the create path CAS-claims exactly lock
+        # 00000001, and _gc — the only thing that TTL-sweeps a crashed
+        # claimant's dead markerless lock — otherwise runs only AFTER a
+        # successful commit on this table, which a dead first lock
+        # makes unreachable: every retry would raise
         # ConcurrentCommitError forever. Sweep on entry instead; inside
         # the TTL the conflict stays (could be a live racer mid-publish,
         # the documented bounded-liveness window), past it the table
         # unwedges itself.
         _gc(spark, base, keep_versions, 3600.0)
-    legacy = [n for n in _listdir(spark, base) if not n.startswith(("_", "."))]
-    sentinel = jvm.org.apache.hadoop.fs.Path(f"{base}/_commits/{_MIGRATION_SENTINEL}")
-
-    def _sweep_legacy() -> None:
-        for n in legacy:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{base}/{n}"), True)
-
-    if cur is None:
-        if legacy:
-            # adopt the plain-parquet table as the prior snapshot; the
-            # read's file listing is resolved before commit_version
-            # stages under ``_v-<token>``, and the legacy files are only
-            # deleted after the merged version is durably committed
-            old = spark.read.parquet(base)
-            merged = upsert_keep_latest(old, new, keys, order_col)
-            fs.mkdirs(jvm.org.apache.hadoop.fs.Path(f"{base}/_commits"))
-            fs.create(sentinel, True).close()
-            seq = commit_version(
-                spark, merged, base, expected_seq=0,
-                keep_versions=keep_versions, sidecar=sidecar,
-            )
-            _sweep_legacy()
-            fs.delete(sentinel, False)
-            return seq
-        merged = upsert_keep_latest(None, new, keys, order_col)
         # expected_seq=0, NOT None: a blind create would let two
         # concurrent FIRST upserts both publish (the second computes
         # next_seq past the first's lock and silently shadows its
         # batch). Claiming exactly seq 1 makes the loser surface as
-        # ConcurrentCommitError — the same CAS every later upsert gets
-        # (round-12 review; the adoption branch above already did this).
-        return commit_version(
-            spark, merged, base, expected_seq=0,
-            keep_versions=keep_versions, sidecar=sidecar,
-        )
-
-    if legacy:
-        if not fs.exists(sentinel):
-            raise RuntimeError(
-                f"{base}: plain data files {legacy} coexist with a commit log "
-                "and no migration sentinel — refusing to guess whether they "
-                "were already merged. Move them aside or re-point the sink."
-            )
-        _sweep_legacy()  # resume a crashed migration's sweep (already in v1)
-    if fs.exists(sentinel):
-        fs.delete(sentinel, False)
-
-    old = read_committed(spark, base)
-    merged = upsert_keep_latest(old, new, keys, order_col)
+        # ConcurrentCommitError — the same CAS every later upsert gets.
+        merged, expected = upsert_keep_latest(None, new, keys, order_col), 0
+    else:
+        old = read_committed(spark, base)
+        merged, expected = upsert_keep_latest(old, new, keys, order_col), cur[0]
     return commit_version(
-        spark, merged, base, expected_seq=cur[0],
+        spark, merged, base, expected_seq=expected,
         keep_versions=keep_versions, sidecar=sidecar,
     )
-
-
-def compact_versioned(
-    spark: SparkSession,
-    table: str,
-    target_rows_per_file: int,
-    *,
-    sort_within: list[str] | None = None,
-    keep_versions: int = 2,
-) -> dict:
-    """Small-files compaction through the commit log. Versus
-    ``io/layout.compact``'s sibling-dir double-rename: there is no
-    moment where the table path is missing or half-swapped — the old
-    version stays the committed one until the single marker rename, and
-    stays on disk for ``keep_versions`` commits after."""
-    import math
-
-    from pyspark.sql import functions as F
-
-    cur = current_version(spark, table)
-    if cur is None:
-        raise FileNotFoundError(f"no committed version at {table}")
-    df = read_committed(spark, table)
-    files_before = df.select(F.input_file_name()).distinct().count()
-    n_rows = df.count()
-    n_out = max(1, math.ceil(n_rows / target_rows_per_file))
-    out = df.repartition(n_out)
-    if sort_within:
-        out = out.sortWithinPartitions(*sort_within)
-    seq = commit_version(
-        spark, out, table, expected_seq=cur[0], keep_versions=keep_versions,
-        # compaction is a pure LAYOUT change: the previous version's
-        # stats sidecar still describes the rows, so carry it forward —
-        # otherwise read_sidecar silently reverts downstream consumers
-        # to their unhinted path (round-12 review)
-        sidecar=read_sidecar(spark, table),
-    )
-    after = read_committed(spark, table)
-    files_after = after.select(F.input_file_name()).distinct().count()
-    return {
-        "files_before": files_before,
-        "files_after": files_after,
-        "n_rows": n_rows,
-        "seq": seq,
-    }

@@ -113,8 +113,7 @@ def file_stats(spark, path: str, cols: list[str]) -> DataFrame:
     touching footers directly; one scan, one small aggregate (rows =
     |files|). Use it to VERIFY a layout does what it claims: after
     ``write_zordered`` the per-file min/max spans should be narrow in
-    every clustered dimension; after ``compact`` the per-file row
-    counts should sit near the target."""
+    every clustered dimension."""
     df = spark.read.parquet(path)
     aggs = [F.count(F.lit(1)).alias("n_rows")]
     for c in cols:
@@ -122,71 +121,3 @@ def file_stats(spark, path: str, cols: list[str]) -> DataFrame:
         aggs.append(F.max(c).alias(f"max_{c}"))
     return df.groupBy(F.input_file_name().alias("file")).agg(*aggs)
 
-
-def compact(
-    spark,
-    path: str,
-    target_rows_per_file: int,
-    *,
-    sort_within: list[str] | None = None,
-) -> dict:
-    """Small-files compaction — the maintenance job every long-running
-    ingest needs: streaming/incremental sinks accrete thousands of tiny
-    files whose per-file open/footer overhead eventually dominates scan
-    time. Rewrites the directory into ⌈rows/target⌉ files, optionally
-    re-sorting within partitions (pass the Z-order/cluster columns to
-    preserve data-skipping locality through the rewrite).
-
-    Crash-safety discipline: the rewrite lands in a SIBLING temp
-    directory first, then swaps in via two metadata renames
-    (path→backup, tmp→path) and drops the backup. A failure during the
-    (long) rewrite leaves the original untouched; a failure between the
-    renames leaves the full dataset intact in the backup directory for
-    manual recovery — versus the previous in-place overwrite whose
-    delete-then-write window could lose the dataset outright, and whose
-    localCheckpoint barrier pinned every row in executor memory (gone on
-    executor loss). True single-rename atomicity needs a table format
-    (Delta/Iceberg); this is the strongest contract plain directories
-    offer. Returns {files_before, files_after, n_rows} so callers (and
-    tests) can assert the layout contract.
-    """
-    import math
-
-    df = spark.read.parquet(path)
-    files_before = df.select(F.input_file_name()).distinct().count()
-    n_rows = df.count()
-    n_out = max(1, math.ceil(n_rows / target_rows_per_file))
-    out = df.repartition(n_out)
-    if sort_within:
-        out = out.sortWithinPartitions(*sort_within)
-
-    base = path.rstrip("/")
-    tmp, bak = base + "__compact_tmp", base + "__compact_bak"
-    out.write.mode("overwrite").parquet(tmp)
-
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(base)
-    fs = hpath.getFileSystem(hconf)
-    p_tmp = jvm.org.apache.hadoop.fs.Path(tmp)
-    p_bak = jvm.org.apache.hadoop.fs.Path(bak)
-    fs.delete(p_bak, True)
-    if not fs.rename(hpath, p_bak):
-        raise IOError(f"compact: could not move {base} aside to {bak}")
-    if not fs.rename(p_tmp, hpath):
-        if fs.rename(p_bak, hpath):  # roll back; original data intact
-            raise IOError(f"compact: could not move {tmp} into place; rolled back")
-        raise IOError(
-            f"compact: could not move {tmp} into place AND rollback failed — "
-            f"dataset is intact at {bak}; restore it manually"
-        )
-    fs.delete(p_bak, True)
-
-    files_after = (
-        spark.read.parquet(path).select(F.input_file_name()).distinct().count()
-    )
-    return {
-        "files_before": files_before,
-        "files_after": files_after,
-        "n_rows": n_rows,
-    }

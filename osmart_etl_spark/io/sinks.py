@@ -9,9 +9,12 @@ Spark-first:
   write atomic — the reference's tmp-file ``os.replace`` dance, S9, is
   free);
 - upsert sink = Delta ``MERGE INTO`` where Delta is available, else the
-  plain-parquet fallback implemented here: union new over old and keep
-  the newest row per key via ``row_number()`` — same keep-latest
-  semantics as ON DUPLICATE KEY UPDATE.
+  keep-latest transform here (union new over old, keep the newest row
+  per key via ``row_number()`` — same semantics as ON DUPLICATE KEY
+  UPDATE), published through io/atomic's commit log. Every keyed sink
+  has exactly one write path: ``io/atomic.upsert_versioned`` (whole-table
+  versions), ``merge_upsert_partitioned`` (per-bucket versions) and
+  ``merge_accumulate_versioned`` (aggregate + ledger in one version).
 
 Partitioned layout replaces MySQL index design (§4): the raw event log
 partitions by store + event date, files sorted by (art_id, fecha) so
@@ -40,20 +43,6 @@ def write_append(
     writer.save(path)
 
 
-def write_overwrite(
-    df: DataFrame,
-    path: str,
-    *,
-    partition_by: tuple[str, ...] = (),
-    fmt: str = "parquet",
-) -> None:
-    """Full-refresh sink (S10's drop+create analogue)."""
-    writer = df.write.mode("overwrite").format(fmt)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(path)
-
-
 def upsert_keep_latest(
     old: DataFrame | None,
     new: DataFrame,
@@ -66,9 +55,11 @@ def upsert_keep_latest(
     composite PK (db_helpers.py:25-40): for each key, the row with the
     greatest ``order_col`` wins, new rows out-ranking old on ties.
 
-    Pure DataFrame→DataFrame so it composes and stays testable; the
-    ``upsert_parquet`` wrapper materializes it. With Delta available the
-    same semantics are one ``MERGE INTO`` keyed on ``keys``.
+    Pure DataFrame→DataFrame so it composes and stays testable;
+    ``io/atomic.upsert_versioned`` (whole table) and
+    ``merge_upsert_partitioned`` (touched buckets only) materialize it.
+    With Delta available the same semantics are one ``MERGE INTO`` keyed
+    on ``keys``.
     """
     staged = new.withColumn("__gen", F.lit(1))
     if old is not None:
@@ -81,38 +72,10 @@ def upsert_keep_latest(
     )
 
 
-def upsert_parquet(
-    spark: SparkSession,
-    new: DataFrame,
-    path: str,
-    keys: list[str],
-    order_col: str,
-    *,
-    partition_by: tuple[str, ...] = (),
-) -> None:
-    """Materialized upsert into a parquet table (S7/S8 fallback path).
-
-    Note for scale: rewriting the whole table is O(table); with Delta the
-    MERGE touches only matching files. At 100 TB use
-    ``merge_upsert_partitioned`` below — the bucket-granular O(delta)
-    path with crash-safe per-bucket versioned publishes.
-    """
-    from osmart_etl_spark.io.sources import path_exists
-
-    # Existence is checked explicitly; any error reading an EXISTING table
-    # (transient FS failure, corrupt footer, permissions) propagates
-    # instead of being mistaken for "first write" — a broad except here
-    # would overwrite the table with only the new batch.
-    old = spark.read.parquet(path) if path_exists(spark, path) else None
-    merged = upsert_keep_latest(old, new, keys, order_col)
-    if old is not None:
-        # Sever lineage to the files about to be overwritten (no driver
-        # round-trip — localCheckpoint materializes on the executors).
-        merged = merged.localCheckpoint(eager=True)
-    writer = merged.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+#: Partition column of the merge sink's staging write, pinned in every
+#: ``_layout`` sidecar under the ``bucket_col`` key. Committed bucket
+#: versions live under ``bucket=<b>/``.
+_BUCKET_COL = "__bucket"
 
 
 def merge_upsert_partitioned(
@@ -123,15 +86,15 @@ def merge_upsert_partitioned(
     order_col: str,
     *,
     n_buckets: int = 64,
-    bucket_col: str = "__bucket",
 ) -> list[int]:
     """MERGE-style upsert with O(delta) write cost (S7/S8 scale path).
 
     The MySQL reference upserts via ``INSERT … ON DUPLICATE KEY UPDATE``
     (db_helpers.py:25-40) — the engine touches only the rows whose PKs
-    appear in the batch. ``upsert_parquet`` above is semantically right
-    but rewrites the WHOLE table per batch; at 100 TB that is the first
-    real wall. This sink restores the O(delta) property on plain parquet:
+    appear in the batch. ``io/atomic.upsert_versioned`` has the same
+    semantics but rewrites the WHOLE table per batch; at 100 TB that is
+    the first real wall. This sink restores the O(delta) property on
+    plain parquet:
 
     1. the table is laid out partitioned by ``pmod(hash(keys…), n_buckets)``
        — a deterministic function of the key, so every key lives in
@@ -155,6 +118,10 @@ def merge_upsert_partitioned(
     every later batch: a batch with a different n_buckets or key order
     would hash keys to DIFFERENT directories, silently leaving stale
     versions unmerged — that is a hard error here, not a corruption.
+    A table whose ``_layout`` is a directory (the Spark-written sidecar
+    of the pre-commit-log layout, plain ``__bucket=<b>`` data dirs) is
+    refused by ``_read_layout``: its rows live outside any commit log,
+    and merging on top would drop them silently.
 
     Returns the list of touched bucket ids (for tests / observability).
     """
@@ -165,7 +132,7 @@ def merge_upsert_partitioned(
 
     base = path.rstrip("/")
     bucketed = new.withColumn(
-        bucket_col, F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(n_buckets))
+        _BUCKET_COL, F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(n_buckets))
     )
     # ONE materialization of the incoming batch: the touched-bucket set
     # and the written rows must come from the same evaluation — a
@@ -178,7 +145,7 @@ def merge_upsert_partitioned(
         "n_buckets": n_buckets,
         "keys": list(keys),
         "order_col": order_col,
-        "bucket_col": bucket_col,
+        "bucket_col": _BUCKET_COL,
     }
     layout_path = f"{base}/_layout"
     if path_exists(spark, path):
@@ -203,18 +170,17 @@ def merge_upsert_partitioned(
             from osmart_etl_spark.io.atomic import _listdir
 
             entries = _listdir(spark, base)
-            bucket_pfx = (f"{bucket_col}=", "bucket=")
-            bucketish = [e for e in entries if e.startswith(bucket_pfx)]
+            bucketish = [e for e in entries if e.startswith("bucket=")]
             if isinstance(exc, FileNotFoundError):
                 # heal ONLY a table that is recognizably this sink's
                 # layout (bucket dirs, nothing else): a plain parquet
-                # dir missing _layout is a FOREIGN table — recreating a
-                # sidecar there would silently shadow the user's files
-                # (read_merge_table reads bucket dirs only). Keep the
-                # loud failure for that case.
+                # dir — or plain `__bucket=<b>` dirs — missing _layout
+                # is a FOREIGN table; recreating a sidecar there would
+                # silently shadow its rows (read_merge_table reads
+                # committed bucket versions only). Keep the loud failure.
                 foreign = [
                     e for e in entries
-                    if not e.startswith(("_", ".")) and not e.startswith(bucket_pfx)
+                    if not e.startswith((".", "_layout", "_stage-", "bucket="))
                 ]
                 if foreign or not bucketish:
                     raise
@@ -255,12 +221,6 @@ def merge_upsert_partitioned(
                 "Changing n_buckets/keys re-homes keys to different directories; "
                 "rebuild the table instead."
             )
-        # Pre-round-10 tables (dynamic-partition-overwrite layout) pass
-        # the _layout check but store rows as plain `<bucket_col>=<b>`
-        # dirs with no per-bucket commit log — invisible to
-        # _bucket_snapshot, so merging on top of them would silently
-        # drop every pre-existing row. Adopt them first.
-        _adopt_legacy_buckets(spark, base, bucket_col)
     elif not _write_layout_exclusive(spark, layout_path, layout):
         # lost the creation race (round-11 contention probe: concurrent
         # first-writers used to collide overwriting the same sidecar) —
@@ -273,7 +233,7 @@ def merge_upsert_partitioned(
             )
 
     # ≤ n_buckets small ints — a bounded driver-side read, not a data scan.
-    touched = sorted(r[0] for r in bucketed.select(bucket_col).distinct().collect())
+    touched = sorted(r[0] for r in bucketed.select(_BUCKET_COL).distinct().collect())
     # snapshot each touched bucket's (version dir, committed seq): the
     # seq makes every publish a CAS — a writer that committed to the
     # same bucket after this read surfaces as ConcurrentCommitError
@@ -286,7 +246,7 @@ def merge_upsert_partitioned(
         # the directory); recompute the bucket from the keys — the same
         # deterministic hash — to restore the merge/partition column
         old_touched = spark.read.parquet(*old_dirs).withColumn(
-            bucket_col, F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(n_buckets))
+            _BUCKET_COL, F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(n_buckets))
         )
         merged = upsert_keep_latest(old_touched, bucketed, keys, order_col)
     else:
@@ -314,9 +274,9 @@ def merge_upsert_partitioned(
     # tasks leaves a file in every bucket it touches (n_par x buckets
     # small files per batch)
     (
-        merged.repartition(max(len(touched), 1), F.col(bucket_col))
+        merged.repartition(max(len(touched), 1), F.col(_BUCKET_COL))
         .write.mode("overwrite")
-        .partitionBy(bucket_col)
+        .partitionBy(_BUCKET_COL)
         .parquet(stage)
     )
     jvm, fs, _ = _fs(spark, base)
@@ -337,7 +297,7 @@ def merge_upsert_partitioned(
         bdir = f"{base}/bucket={b}"
         fs.mkdirs(Path(bdir))
         if not fs.rename(
-            Path(f"{stage}/{bucket_col}={b}"), Path(f"{bdir}/_v-{token}")
+            Path(f"{stage}/{_BUCKET_COL}={b}"), Path(f"{bdir}/_v-{token}")
         ):
             raise IOError(f"staging rename failed for bucket {b} under {base}")
         publish_staged(spark, bdir, token, expected_seq=snapshots[b][1])
@@ -364,9 +324,8 @@ def writer_bucket_shard(
     of a shared/replicated feed before merging touch pairwise-disjoint
     bucket directories, so the per-bucket CAS never conflicts: the
     fully-contended overlap storm becomes the zero-retry disjoint
-    regime (measured in tools/merge_contention_probe.py's
-    ``overlap_sharded`` row — the backoff-dominated wall collapses to
-    protocol throughput).
+    regime (SCALE.md's ``overlap_sharded`` row: the backoff-dominated
+    wall collapses to protocol throughput).
 
     Use when every writer can see the same batch stream (replicated
     queue, fan-out consumer group) or as the ownership predicate when
@@ -380,123 +339,6 @@ def writer_bucket_shard(
         raise ValueError(f"writer_id {writer_id} not in [0, {n_writers})")
     bucket = F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(n_buckets))
     return df.filter(bucket % F.lit(n_writers) == F.lit(writer_id))
-
-
-_LEGACY_SENTINEL = "_legacy-migration"
-
-
-def _legacy_bucket_dirs(
-    spark: SparkSession, base: str, bucket_col: str
-) -> dict[int, str]:
-    """Pre-round-10 bucket directories: top-level ``<bucket_col>=<b>`` (or
-    ``bucket=<b>``) dirs holding plain data files with NO per-bucket
-    ``_commits`` log — the old dynamic-partition-overwrite layout. Keyed
-    by bucket id."""
-    from osmart_etl_spark.io.atomic import _listdir
-
-    out: dict[int, str] = {}
-    prefixes = {f"{bucket_col}=", "bucket="}
-    for name in _listdir(spark, base):
-        pfx = next((p for p in prefixes if name.startswith(p)), None)
-        if pfx is None:
-            continue
-        b = name[len(pfx):]
-        if not b.isdigit():
-            continue
-        entries = _listdir(spark, f"{base}/{name}")
-        if "_commits" in entries:
-            continue  # current versioned layout
-        if any(not e.startswith(("_", ".")) for e in entries):
-            out[int(b)] = f"{base}/{name}"
-    return out
-
-
-def _adopt_legacy_buckets(
-    spark: SparkSession, base: str, bucket_col: str
-) -> list[int]:
-    """Migrate legacy (pre-commit-log) bucket directories into the
-    versioned layout — mirror of ``upsert_versioned``'s sentinel
-    protocol (io/atomic.py), per bucket:
-
-    - a ``_legacy-migration`` sentinel at the table root marks the
-      migration in flight; it is created before the first mutation and
-      removed only after every legacy dir is swept, so a crash anywhere
-      resumes the migration on the next call;
-    - each legacy dir's rows are committed as the bucket's version 1
-      (``expected_seq=0`` — a racing writer surfaces as
-      ConcurrentCommitError, never a lost update), then the legacy dir
-      is deleted;
-    - a bucket with BOTH a commit log and a plain legacy dir but NO
-      sentinel is ambiguous (were the plain files already merged? are
-      they foreign?) and raises loudly instead of guessing.
-
-    Returns the adopted bucket ids.
-    """
-    from osmart_etl_spark.io.atomic import _fs, commit_version, current_version
-
-    legacy = _legacy_bucket_dirs(spark, base, bucket_col)
-    jvm, fs, _ = _fs(spark, base)
-    sentinel = jvm.org.apache.hadoop.fs.Path(f"{base}/{_LEGACY_SENTINEL}")
-    if not legacy:
-        # crash window: all buckets adopted+swept, sentinel not yet removed
-        if fs.exists(sentinel):
-            fs.delete(sentinel, False)
-        return []
-    already_committed = [
-        b for b in legacy if current_version(spark, f"{base}/bucket={b}") is not None
-    ]
-    if already_committed and not fs.exists(sentinel):
-        raise RuntimeError(
-            f"{base}: plain bucket dirs {sorted(legacy)} coexist with committed "
-            f"versions for buckets {sorted(already_committed)} and no migration "
-            "sentinel — refusing to guess whether they were already merged. "
-            "Move them aside or rebuild the table."
-        )
-    if not fs.exists(sentinel):
-        fs.create(sentinel, True).close()
-    for b, d in sorted(legacy.items()):
-        bdir = f"{base}/bucket={b}"
-        if current_version(spark, bdir) is None:
-            # partitionBy stripped the bucket column from the files, so the
-            # legacy dir already stores exactly the user columns a version
-            # directory holds; the file listing resolves before staging and
-            # the legacy dir is deleted only after the commit is durable.
-            commit_version(spark, spark.read.parquet(d), bdir, expected_seq=0)
-        if d.rstrip("/") == bdir.rstrip("/"):
-            # bucket_col == "bucket": the legacy dir IS the commit target
-            # (commit_version just published _v-<token> + _commits inside
-            # it), so a recursive delete of `d` would wipe the commit we
-            # made durable one line up. Sweep only the plain legacy data
-            # files; underscore/dot entries (the versioned layout) stay.
-            _sweep_plain_entries(spark, d)
-        else:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(d), True)
-    # Crash-resume closure for the d == bdir shape: once commit_version
-    # ran, the dir has a _commits log, so _legacy_bucket_dirs never
-    # returns it again and its plain files would linger forever. While
-    # the sentinel attests a migration, sweep plain entries from EVERY
-    # committed bucket dir (same trust rule as upsert_versioned's
-    # sentinel-attested _sweep_legacy).
-    from osmart_etl_spark.io.atomic import _listdir
-
-    for name in _listdir(spark, base):
-        if name.startswith(f"{bucket_col}=") or name.startswith("bucket="):
-            bdir = f"{base}/{name}"
-            if "_commits" in _listdir(spark, bdir):
-                _sweep_plain_entries(spark, bdir)
-    fs.delete(sentinel, False)
-    return sorted(legacy)
-
-
-def _sweep_plain_entries(spark: SparkSession, d: str) -> None:
-    """Delete the non-underscore/non-dot entries of one directory,
-    leaving the versioned layout (_v-*, _commits, markers) intact."""
-    from osmart_etl_spark.io.atomic import _fs, _listdir
-
-    jvm, fs, _ = _fs(spark, d)
-    for name in _listdir(spark, d):
-        if not name.startswith(("_", ".")):
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{d}/{name}"), True)
 
 
 def _bucket_snapshot(
@@ -514,37 +356,22 @@ def _bucket_snapshot(
     return (None, 0) if cur is None else (f"{bdir}/_v-{cur[1]}", cur[0])
 
 
-def _bucket_version_dir(spark: SparkSession, base: str, bucket: int) -> str | None:
-    """Current committed version directory of one bucket, or None if the
-    bucket has never been written."""
-    return _bucket_snapshot(spark, base, bucket)[0]
-
-
 def _write_layout_exclusive(spark: SparkSession, layout_path: str, layout: dict) -> bool:
     """Create the ``_layout`` sidecar as ONE file with an exclusive
     create — the same CAS primitive as io/atomic's sequence locks — so
     concurrent table CREATORS race safely: exactly one wins, the loser
-    returns False and validates against the winner's layout. (The old
-    Spark-job ``overwrite`` write let two first-writers collide on the
-    sidecar's _temporary directory — found by
-    tools/merge_contention_probe.py.) Returns True if this writer
-    created the sidecar."""
+    returns False and validates against the winner's layout. Returns
+    True if this writer created the sidecar."""
     import json as _json
+    import os as _os
 
-    from osmart_etl_spark.io.atomic import _fs
-
-    from osmart_etl_spark.io.atomic import _assert_atomic_create_scheme
+    from osmart_etl_spark.io.atomic import _assert_atomic_create_scheme, _fs
 
     data = _json.dumps(layout, sort_keys=True)
     jvm, fs, hpath = _fs(spark, layout_path)
     fs.mkdirs(hpath.getParent())
-    if fs.getUri().getScheme() != "file":
-        # same CAS-atomicity rule as io/atomic's commit locks: refuse
-        # schemes whose create-no-overwrite is a check/act race
-        _assert_atomic_create_scheme(spark, fs.getUri().getScheme())
-    if fs.getUri().getScheme() == "file":
-        import os as _os
-
+    scheme = fs.getUri().getScheme()
+    if scheme == "file":
         local = hpath.toUri().getPath()
         try:
             fd = _os.open(local, _os.O_CREAT | _os.O_EXCL | _os.O_WRONLY)
@@ -553,6 +380,9 @@ def _write_layout_exclusive(spark: SparkSession, layout_path: str, layout: dict)
         with _os.fdopen(fd, "w") as fh:
             fh.write(data)
         return True
+    # same CAS-atomicity rule as io/atomic's commit locks: refuse
+    # schemes whose create-no-overwrite is a check/act race
+    _assert_atomic_create_scheme(spark, scheme)
     try:
         out = fs.create(hpath, False)
     except Exception as exc:  # py4j surfaces FileAlreadyExistsException
@@ -575,11 +405,16 @@ class EmptyLayoutError(RuntimeError):
 def _read_layout(
     spark: SparkSession, layout_path: str, *, dead_ttl_s: float = 3600.0
 ) -> dict:
-    """Read the ``_layout`` sidecar of a merge table (internal). Two
-    on-disk forms: a single JSON file (round-11 exclusive-create path)
-    or a Spark-written JSON directory (older tables). A just-created
-    file may be momentarily empty to a racing reader (create/write are
-    two steps); retry briefly before giving up.
+    """Read the ``_layout`` sidecar of a merge table (internal): one JSON
+    file, written by ``_write_layout_exclusive``. A just-created file may
+    be momentarily empty to a racing reader (create/write are two
+    steps); retry briefly before giving up.
+
+    A DIRECTORY at ``_layout`` is the Spark-written sidecar of the
+    pre-commit-log layout, whose rows sit in plain ``__bucket=<b>`` dirs
+    that no commit log covers. It raises ``RuntimeError`` and touches
+    nothing, so neither ``merge_upsert_partitioned`` nor
+    ``read_merge_table`` can treat such a table as empty.
 
     A PERMANENTLY empty sidecar (creator crashed between the exclusive
     create and the content write) would otherwise wedge the table
@@ -591,110 +426,74 @@ def _read_layout(
     import json as _json
     import time as _time
 
-    from osmart_etl_spark.io.atomic import _fs
+    from osmart_etl_spark.io.atomic import _fs, _read_small_text
 
     jvm, fs, hpath = _fs(spark, layout_path)
-    row = None
     saw_empty_file = False
     for _ in range(100):
         if not fs.exists(hpath):
             _time.sleep(0.05)
             continue
         if fs.getFileStatus(hpath).isDirectory():
-            row = spark.read.json(layout_path).collect()[0].asDict()
-            break
-        from osmart_etl_spark.io.atomic import _read_small_text
-
+            raise RuntimeError(
+                f"{layout_path} is a directory: this merge table predates "
+                "per-bucket commit logs and its rows sit in plain bucket dirs "
+                "a merge would drop. Rebuild it: read those dirs and load them "
+                "into a new merge_upsert_partitioned table."
+            )
         content = _read_small_text(spark, layout_path)
         if content.strip():
-            row = _json.loads(content)
-            break
+            return _json.loads(content)
         saw_empty_file = True
         _time.sleep(0.05)  # winner mid-write
-    if row is None:
-        if saw_empty_file and fs.exists(hpath):
-            age_s = _time.time() - fs.getFileStatus(hpath).getModificationTime() / 1000.0
-            if age_s > dead_ttl_s:
-                # TOCTOU guard (round-12 review): a healer may have
-                # swept and RECREATED the sidecar with valid content
-                # between our last empty read and this delete — re-read
-                # once and, if content appeared, return it instead of
-                # deleting a freshly pinned layout.
-                from osmart_etl_spark.io.atomic import _read_small_text
-
-                content = _read_small_text(spark, layout_path)
-                if content.strip():
-                    row = _json.loads(content)
-                    return {
-                        "n_buckets": int(row["n_buckets"]),
-                        "keys": list(row["keys"]),
-                        "order_col": row["order_col"],
-                        "bucket_col": row["bucket_col"],
-                    }
-                fs.delete(hpath, False)  # dead creation — sweep it
-                exc = EmptyLayoutError(
-                    f"empty _layout sidecar at {layout_path} (creator died "
-                    f"mid-write, age {age_s:.0f}s > TTL {dead_ttl_s:.0f}s) — "
-                    "removed; the next merge_upsert_partitioned recreates it"
-                )
-                exc.swept = True
-                raise exc
-            exc = EmptyLayoutError(
-                f"empty _layout sidecar at {layout_path}: a creator may be "
-                f"mid-write (age {age_s:.0f}s <= TTL {dead_ttl_s:.0f}s); "
-                "retry, or remove the file to repair if it persists"
-            )
-            exc.swept = False
-            raise exc
+    if not (saw_empty_file and fs.exists(hpath)):
         raise FileNotFoundError(f"no readable layout at {layout_path}")
-    return {
-        "n_buckets": int(row["n_buckets"]),
-        "keys": list(row["keys"]),
-        "order_col": row["order_col"],
-        "bucket_col": row["bucket_col"],
-    }
+    age_s = _time.time() - fs.getFileStatus(hpath).getModificationTime() / 1000.0
+    if age_s <= dead_ttl_s:
+        exc = EmptyLayoutError(
+            f"empty _layout sidecar at {layout_path}: a creator may be "
+            f"mid-write (age {age_s:.0f}s <= TTL {dead_ttl_s:.0f}s); "
+            "retry, or remove the file to repair if it persists"
+        )
+        exc.swept = False
+        raise exc
+    # TOCTOU guard (round-12 review): a healer may have swept and
+    # RECREATED the sidecar with valid content between our last empty
+    # read and this delete — re-read once and, if content appeared,
+    # return it instead of deleting a freshly pinned layout.
+    content = _read_small_text(spark, layout_path)
+    if content.strip():
+        return _json.loads(content)
+    fs.delete(hpath, False)  # dead creation — sweep it
+    exc = EmptyLayoutError(
+        f"empty _layout sidecar at {layout_path} (creator died "
+        f"mid-write, age {age_s:.0f}s > TTL {dead_ttl_s:.0f}s) — "
+        "removed; the next merge_upsert_partitioned recreates it"
+    )
+    exc.swept = True
+    raise exc
 
 
-def read_merge_table(spark: SparkSession, path: str, bucket_col: str = "__bucket") -> DataFrame:
+def read_merge_table(spark: SparkSession, path: str) -> DataFrame:
     """Read a ``merge_upsert_partitioned`` table: resolve every bucket's
     current committed version through its commit log (one directory
     listing per bucket — O(n_buckets) metadata, no data scan) and union
     the immutable version directories. An in-flight merge is invisible:
-    unpublished ``_v-*`` staging never appears in a commit log.
-
-    Legacy (pre-commit-log) bucket dirs are resolved read-only: a bucket
-    with no committed version reads its plain directory directly; a
-    bucket with BOTH (mid-migration crash) reads the committed version —
-    it already absorbed the legacy rows — when the migration sentinel
-    attests that, and raises otherwise (same ambiguity rule as the
-    writer's adoption)."""
-    from osmart_etl_spark.io.atomic import _fs, _listdir
+    unpublished ``_v-*`` staging never appears in a commit log. The
+    ``_layout`` sidecar is read first, so a pre-commit-log table raises
+    (see ``_read_layout``) instead of reading as empty."""
+    from osmart_etl_spark.io.atomic import _listdir
     from osmart_etl_spark.io.sources import path_exists
 
     base = path.rstrip("/")
     if path_exists(spark, f"{base}/_layout"):
-        bucket_col = _read_layout(spark, f"{base}/_layout")["bucket_col"]
-    legacy = _legacy_bucket_dirs(spark, base, bucket_col)
-    dirs = list(legacy.values())
-    overlap = []
-    for name in _listdir(spark, base):
-        if not name.startswith("bucket="):
-            continue
-        b = int(name.split("=", 1)[1])
-        d = _bucket_version_dir(spark, base, b)
-        if d is not None:
-            dirs.append(d)
-            if b in legacy:
-                overlap.append(b)
-                dirs.remove(legacy[b])  # committed version supersedes
-    if overlap:
-        jvm, fs, _ = _fs(spark, base)
-        if not fs.exists(jvm.org.apache.hadoop.fs.Path(f"{base}/{_LEGACY_SENTINEL}")):
-            raise RuntimeError(
-                f"{base}: buckets {sorted(overlap)} have both a committed version "
-                "and a plain legacy dir with no migration sentinel — run "
-                "merge_upsert_partitioned to adopt, or move the plain dirs aside."
-            )
+        _read_layout(spark, f"{base}/_layout")
+    snapshots = (
+        _bucket_snapshot(spark, base, int(name.split("=", 1)[1]))
+        for name in _listdir(spark, base)
+        if name.startswith("bucket=")
+    )
+    dirs = [d for d, _seq in snapshots if d is not None]
     if not dirs:
         raise FileNotFoundError(f"no committed buckets under {base}")
     return spark.read.parquet(*dirs)
@@ -799,86 +598,6 @@ def scd2_apply(
     return out
 
 
-def merge_accumulate(
-    spark: SparkSession,
-    updates: DataFrame,
-    path: str,
-    keys: list[str],
-    sum_cols: list[str],
-    *,
-    batch_id: str,
-    ledger_path: str,
-    max_cols: list[str] | None = None,
-) -> bool:
-    """Incremental-view maintenance for an ADDITIVE aggregate: fold a
-    batch's partial sums into a materialized per-key aggregate table.
-    Returns True if the batch was applied, False if skipped as a
-    duplicate.
-
-    Keep-latest upserts (``upsert_parquet``) are naturally idempotent —
-    re-applying a batch rewrites the same rows. Accumulation is NOT:
-    re-adding a redelivered batch double-counts. The exactly-once
-    contract therefore needs a batch LEDGER: applied batch_ids are
-    recorded next to the table, and a batch already in the ledger is a
-    no-op. This is the same idea Structured Streaming uses for sink
-    idempotence (epoch ids in the commit log), available here to any
-    cron-style incremental run (cf. the reference's watermark +
-    re-filter pattern, update_raw_stock_movements.py:69).
-
-    SINGLE-WRITER contract: two concurrent invocations both read the
-    pre-merge table and the later overwrite silently drops the earlier
-    batch's contribution (lost update) while its ledger entry survives
-    — an unrecoverable loss, unlike keep-latest upserts where replay
-    self-heals. Serialize runs (the orchestrator's job ordering, a
-    scheduler lock, or a transactional table format); this sink does
-    not lock. For concurrent or crash-exposed writers use
-    ``merge_accumulate_versioned`` below (round 11): table + ledger in
-    one CAS-published commit closes both this hole and the
-    table-updated/ledger-missing crash window documented further down.
-
-    Scale shape: the batch is reduced to per-key partials FIRST
-    (map-side combine — the shuffle carries one row per key in the
-    batch, not batch rows), then a full-outer merge against the
-    aggregate table, which is one row per key EVER — the compact thing
-    a 100 TB event history folds down to. Same full-rewrite caveat as
-    upsert_parquet: with a table format, the merge touches only
-    matching files; on raw parquet, partition by a key prefix.
-    """
-    from osmart_etl_spark.io.sources import path_exists
-
-    if path_exists(spark, ledger_path):
-        # membership test pushed to the scan — never collect the whole
-        # ledger to the driver (it grows one row per batch forever)
-        dup = (
-            spark.read.parquet(ledger_path)
-            .filter(F.col("batch_id") == batch_id)
-            .limit(1)
-            .count()
-        )
-        if dup:
-            return False
-
-    partial, acc_types = _additive_partial(updates, keys, sum_cols, max_cols)
-    if path_exists(spark, path):
-        cur = spark.read.parquet(path)
-        merged = _additive_merge(cur, partial, keys, sum_cols, acc_types, max_cols)
-        merged = merged.localCheckpoint(eager=True)
-        merged.write.mode("overwrite").parquet(path)
-    else:
-        partial.write.mode("overwrite").parquet(path)
-    # Ledger append AFTER the table commit: a crash between the two
-    # re-applies the batch on retry, which the pre-check then rejects
-    # only if the ledger write happened — so the failure mode is
-    # "table updated, ledger missing" → retry double-counts. Document:
-    # for strict exactly-once use a transactional table format holding
-    # table+ledger in one commit; on raw parquet the ledger-last order
-    # at least guarantees at-most-once ledger entries per batch.
-    spark.createDataFrame([(batch_id,)], ["batch_id"]).write.mode("append").parquet(
-        ledger_path
-    )
-    return True
-
-
 def _additive_partial(
     updates: DataFrame,
     keys: list[str],
@@ -957,15 +676,17 @@ def _additive_merge(
 
 
 def _parse_ledger_json(spark: SparkSession, path: str) -> dict:
-    """Applied-batch ledger file → ``{"hwm": {...}, "ids": [...]}``.
-    A bare JSON list is the pre-round-12 all-opaque format."""
+    """Applied-batch ledger file ``{"v": 2, "hwm": {...}, "ids": [...]}``
+    → ``{"hwm": {...}, "ids": [...]}``. Any other form raises: a ledger
+    this code cannot read must not pass as "nothing applied yet", or a
+    redelivered batch would double-count."""
     import json as _json
 
     from osmart_etl_spark.io.atomic import _read_small_text
 
     obj = _json.loads(_read_small_text(spark, path))
-    if isinstance(obj, list):
-        return {"hwm": {}, "ids": obj}
+    if not isinstance(obj, dict) or obj.get("v") != 2:
+        raise ValueError(f"{path}: not a v2 applied-batch ledger: {str(obj)[:80]}")
     return {"hwm": obj.get("hwm", {}), "ids": obj.get("ids", [])}
 
 
@@ -996,15 +717,20 @@ def merge_accumulate_versioned(
     max_retries: int = 10,
     max_cols: list[str] | None = None,
 ) -> bool:
-    """Exactly-once additive incremental-view maintenance — the
-    CAS-protected completion of ``merge_accumulate`` (round 11). That
-    sink documents two honest holes: a SINGLE-WRITER contract (two
-    concurrent folds both read the pre-merge table; the later overwrite
-    silently drops the earlier batch — an unrecoverable lost update)
-    and a crash window between the table overwrite and the ledger
-    append (retry double-counts). Both close by making the aggregate
-    table AND its applied-batch ledger one atomic commit through
-    ``io/atomic``'s log:
+    """Exactly-once additive incremental-view maintenance: fold a batch's
+    per-key partial sums (and ``max_cols`` maxima) into a materialized
+    per-key aggregate table. The batch is reduced to per-key partials
+    first (map-side combine), then full-outer merged into the table,
+    which holds one row per key ever.
+
+    Keep-latest upserts are naturally idempotent — re-applying a batch
+    rewrites the same rows. Accumulation is NOT: re-adding a redelivered
+    batch double-counts, and two folds that both read the same snapshot
+    would each drop the other's contribution. Both are closed by making
+    the aggregate table AND its applied-batch ledger one atomic commit
+    through ``io/atomic``'s log (the same idea Structured Streaming uses
+    for sink idempotence — epoch ids in the commit log — available to
+    any cron-style incremental run):
 
     - each committed version directory holds the aggregate rows at its
       root and the FULL ledger as a ``_ledger.json`` sidecar file
@@ -1039,13 +765,12 @@ def merge_accumulate_versioned(
       years, prefer the tuple form.
 
     Both forms coexist in one ledger; a version's ``_ledger.json`` is
-    ``{"v": 2, "hwm": {writer: seq}, "ids": [...]}`` (a bare list from
-    a pre-round-12 version reads as all-opaque). Read the aggregate
-    with ``io/atomic.read_committed``. ``keep_versions`` defaults
-    HIGHER than the upsert sinks (8 vs 2): a version here is a small
-    per-key aggregate, and under W concurrent folders a loser's
-    snapshot must survive up to W-1 winner commits or its attempts burn
-    on GC'd-snapshot reads instead of clean CAS losses.
+    ``{"v": 2, "hwm": {writer: seq}, "ids": [...]}`` (any other form
+    raises). Read the aggregate with ``io/atomic.read_committed``.
+    ``keep_versions`` defaults HIGHER than the upsert sinks (8 vs 2): a
+    version here is a small per-key aggregate, and under W concurrent
+    folders a loser's snapshot must survive up to W-1 winner commits or
+    its attempts burn on GC'd-snapshot reads instead of clean CAS losses.
 
     Returns True if the batch was applied, False if it was already in
     the committed ledger.
@@ -1147,34 +872,3 @@ def merge_accumulate_versioned(
         _time.sleep(delay * (0.5 + (hash((batch_id, attempt)) % 1000) / 2000.0))
     return False  # unreachable; loop either returns or raises
 
-
-def write_sharded_corpus(
-    docs: DataFrame,
-    path: str,
-    *,
-    id_col: str = "doc_id",
-    token_col: str = "tokens",
-    n_shards: int = 16,
-) -> None:
-    """Materialize the corpus as token-balanced contiguous shards —
-    the writer behind ``corpus_shard_packing``'s plan: shard ids come
-    from ``ops.packing.assign_token_shards`` (distributed prefix sum),
-    the layout is ``shard_id=<k>/`` hive partitions so a trainer (or a
-    resume) addresses shards by directory, and each shard coalesces its
-    rows before writing so one shard = one file at test scale
-    (``maxRecordsPerFile`` takes over when shards outgrow single
-    files). Contiguity by construction: shard k holds a contiguous
-    ``id_col`` range, so re-runs and partial reads are range-addressable.
-    """
-    from osmart_etl_spark.ops.packing import assign_token_shards
-
-    assigned = assign_token_shards(
-        docs, id_col, token_col, n_shards=n_shards
-    )
-    (
-        assigned.repartition(n_shards, "shard_id")
-        .sortWithinPartitions("shard_id", id_col)
-        .write.mode("overwrite")
-        .partitionBy("shard_id")
-        .parquet(path)
-    )

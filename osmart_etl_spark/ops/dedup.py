@@ -747,9 +747,9 @@ def span_excision(
     occ = span_occurrences(df, id_col, text_col, k)
     # Deliberately NO numbered repartition under this agg (the round-5
     # AQE serial-reduce fix used elsewhere): measured under the worst
-    # realistic skew (tools/span_skew_smoke.py, 50k docs, 50%
-    # boilerplate — SCALE.md round 7), the count_distinct reduce is
-    # byte-sized correctly by AQE (3 tasks @ ~46 MB each, never 1),
+    # realistic skew (50k docs, 50% boilerplate — SCALE.md round 7),
+    # the count_distinct reduce is byte-sized correctly by AQE (3 tasks
+    # @ ~46 MB each, never 1),
     # because unlike the candidate-pair reduces this one is cheap per
     # record. Forcing 64 partitions here was tried and measured SLOWER
     # (skewed wall 5.8 s -> 9.1 s, 13x cumulative executor time from

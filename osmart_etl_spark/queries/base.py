@@ -53,10 +53,15 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
         # round 14), so a build never releases its own intermediates.
         @wraps(fn)
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            from osmart_etl_spark.caching import begin_query
+            from osmart_etl_spark import caching
 
-            begin_query(name)
-            return fn(spark, sf_dir)
+            caching.begin_query(name)
+            try:
+                return fn(spark, sf_dir)
+            finally:
+                # a persist made after the build (a pipeline, a test) is
+                # untagged, so the next build of ANY query releases it
+                caching._CURRENT = None
 
         REGISTRY[name] = QueryDef(fn=wrapped, oracle=oracle, tags=tags)
         return wrapped

@@ -380,7 +380,7 @@ def ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("vec_id", (-F.col("b.ns")).cast("bigint").alias("cluster_id"))
     )
-    # Round 13 (measured, tools/stage_profile): the cold query was ~15
+    # Round 13 (measured per Spark stage): the cold query was ~15
     # serialized sub-second driver jobs — every broadcast build and
     # both `cand` consumers re-derived their shared lineage from the
     # scan. Persist + one eager materialization each for the two

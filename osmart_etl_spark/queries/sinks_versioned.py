@@ -153,10 +153,11 @@ def accumulate_versioned_batch_fold(spark: SparkSession, sf_dir: str) -> DataFra
     double-counted redelivery, or a wrong-version read all diverge
     under the driver's value hash.
 
-    This is the ledger-transactional completion of ``merge_accumulate``
-    (whose single-writer contract and table/ledger crash window are
-    documented there), put under the same driver gate
-    ``upsert_versioned_batch_diff`` provides for the keep-latest tier.
+    The aggregate table and its applied-batch ledger are one commit, so
+    neither a concurrent fold nor a crash between table and ledger can
+    lose or double-count a batch; this query puts that sink under the
+    same oracle-parity gate ``upsert_versioned_batch_diff`` provides for
+    the keep-latest tier.
 
     Scale: each fold shuffles one row per (key, map partition) —
     map-side combined partials — and the table is one row per key ever;

@@ -6,13 +6,11 @@ swept, and the publish is a real CAS under writer races."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from osmart_etl_spark.io import atomic
 from osmart_etl_spark.io.atomic import (
     ConcurrentCommitError,
     commit_version,
-    compact_versioned,
     current_version,
     read_committed,
     upsert_versioned,
@@ -218,82 +216,13 @@ def test_time_travel_within_retention(spark, tmp_path):
     assert {r["v"] for r in read_committed(spark, t, at=2).collect()} == {"b"}
 
 
-@pytest.mark.slow
-def test_compact_versioned_preserves_data_and_counts_files(spark, tmp_path):
-    t = str(tmp_path / "tbl")
-    df = spark.range(1000).select(
-        F.col("id").alias("k"),
-        (F.col("id") % 7).alias("v"),
-        F.lit(1).alias("ts"),
-    ).repartition(16)
-    commit_version(spark, df, t)
-    before = _rows(read_committed(spark, t))
-    stats = compact_versioned(spark, t, target_rows_per_file=500)
-    assert stats["files_before"] >= 8
-    assert stats["files_after"] <= 4
-    assert stats["n_rows"] == 1000
-    assert _rows(read_committed(spark, t)) == before
-    # previous version retained → a reader that resolved seq 1 before
-    # the compaction can still finish its scan
-    assert {r["k"] for r in read_committed(spark, t, at=1).collect()} == set(
-        range(1000)
-    )
-
-
-@pytest.mark.slow
-def test_legacy_plain_parquet_adopted_on_first_versioned_commit(spark, tmp_path):
-    """Round-8 ADVICE: switching a sink from upsert_parquet to
-    upsert_versioned must not silently drop the previously landed rows
-    — the first versioned commit adopts them as the prior snapshot."""
-    t = str(tmp_path / "tbl")
-    _mk(spark, [(1, "a", 10), (2, "b", 10)]).write.parquet(t)  # legacy layout
-    upsert_versioned(spark, _mk(spark, [(2, "B", 20), (3, "c", 5)]), t, ["k"], "ts")
-    got = {r["k"]: (r["v"], r["ts"]) for r in read_committed(spark, t).collect()}
-    assert got == {1: ("a", 10), 2: ("B", 20), 3: ("c", 5)}
-    # legacy plain files removed; only _-prefixed versioned layout remains
-    names = atomic._listdir(spark, t)
-    assert all(n.startswith(("_", ".")) for n in names), names
-    # and the table keeps working as a normal versioned sink afterwards
-    upsert_versioned(spark, _mk(spark, [(1, "A", 30)]), t, ["k"], "ts")
-    got = {r["k"]: r["v"] for r in read_committed(spark, t).collect()}
-    assert got == {1: "A", 2: "B", 3: "c"}
-
-
-@pytest.mark.slow
-def test_crashed_legacy_migration_sweep_resumes(spark, tmp_path, monkeypatch):
-    """Crash between the migration commit and the legacy sweep: the
-    sentinel survives, so the next upsert finishes the sweep instead of
-    refusing (and the rows are not double-counted — keep-latest)."""
-    t = str(tmp_path / "tbl")
-    _mk(spark, [(1, "a", 10)]).write.parquet(t)
-    real_commit = atomic.commit_version
-
-    def crash_after_commit(*a, **kw):
-        real_commit(*a, **kw)
-        raise RuntimeError("simulated crash before legacy sweep")
-
-    monkeypatch.setattr(atomic, "commit_version", crash_after_commit)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        upsert_versioned(spark, _mk(spark, [(2, "b", 20)]), t, ["k"], "ts")
-    monkeypatch.undo()
-    # v1 committed, legacy files still on disk, sentinel present
-    assert current_version(spark, t)[0] == 1
-    assert any(not n.startswith(("_", ".")) for n in atomic._listdir(spark, t))
-    upsert_versioned(spark, _mk(spark, [(3, "c", 30)]), t, ["k"], "ts")
-    got = {r["k"]: r["v"] for r in read_committed(spark, t).collect()}
-    assert got == {1: "a", 2: "b", 3: "c"}
-    names = atomic._listdir(spark, t)
-    assert all(n.startswith(("_", ".")) for n in names), names
-    assert atomic._MIGRATION_SENTINEL not in atomic._listdir(spark, f"{t}/_commits")
-
-
 def test_foreign_plain_files_on_versioned_table_fail_loudly(spark, tmp_path):
-    """Plain data files on an already-versioned table WITHOUT the
-    migration sentinel are not ours to delete — loud error, no guess."""
+    """Plain data files on an already-versioned table are not ours to
+    delete or to ignore — loud error naming them, no guess."""
     t = str(tmp_path / "tbl")
     upsert_versioned(spark, _mk(spark, [(1, "a", 10)]), t, ["k"], "ts")
     (tmp_path / "tbl" / "stray.parquet").write_bytes(b"not ours")
-    with pytest.raises(RuntimeError, match="migration sentinel"):
+    with pytest.raises(RuntimeError, match=r"outside the commit log \['stray.parquet'\]"):
         upsert_versioned(spark, _mk(spark, [(2, "b", 20)]), t, ["k"], "ts")
     # the stray file is untouched and the table is still readable
     assert (tmp_path / "tbl" / "stray.parquet").exists()
@@ -312,9 +241,8 @@ def test_dead_adoption_claim_unwedges_after_ttl(spark, tmp_path):
     import os
 
     t = str(tmp_path / "tbl")
-    _mk(spark, [(1, "a", 10)]).write.parquet(t)  # legacy layout
     lock = tmp_path / "tbl" / "_commits" / "00000001.lock"
-    lock.parent.mkdir()
+    lock.parent.mkdir(parents=True)
     lock.write_text("")
     # fresh dead lock: inside the TTL the conflict must survive
     with pytest.raises(ConcurrentCommitError):
@@ -324,7 +252,7 @@ def test_dead_adoption_claim_unwedges_after_ttl(spark, tmp_path):
     upsert_versioned(spark, _mk(spark, [(2, "b", 20)]), t, ["k"], "ts")
     assert current_version(spark, t)[0] == 1
     got = {r["k"]: r["v"] for r in read_committed(spark, t).collect()}
-    assert got == {1: "a", 2: "b"}
+    assert got == {2: "b"}
 
 
 def test_sidecar_rides_the_commit(spark, tmp_path):

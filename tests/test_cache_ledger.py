@@ -66,3 +66,42 @@ def test_next_build_releases_previous(spark):
     REGISTRY["asof_lookup"].fn(spark, SF_SMALL)
     assert _cache_manager_empty(spark)
     assert ledger_size() == 0
+
+
+def test_persist_after_build_is_untagged_and_released(spark):
+    """The decorator resets the ledger tag when a build returns: a frame
+    persisted afterwards (a pipeline, a notebook cell) belongs to no
+    query, so rebuilding the SAME query still releases it."""
+    from osmart_etl_spark import caching
+
+    REGISTRY["asof_lookup"].fn(spark, SF_SMALL)
+    df = caching.led_persist(spark.range(10))
+    tag, entry = caching._LEDGER[-1]
+    assert tag is None and entry is df
+    assert not _cache_manager_empty(spark)
+    REGISTRY["asof_lookup"].fn(spark, SF_SMALL)
+    assert ledger_size() == 0
+    assert _cache_manager_empty(spark)
+
+
+def test_failed_unpersist_is_logged(spark, caplog):
+    """With a live SparkContext a failing release is logged, not
+    swallowed, and the rest of the ledger is still released."""
+    import logging
+
+    from osmart_etl_spark import caching
+
+    class Broken:
+        def unpersist(self):
+            raise RuntimeError("boom")
+
+    caching.led_persist(spark.range(5))
+    caching.led_register(Broken())
+    with caplog.at_level(logging.WARNING, logger="osmart_etl_spark.caching"):
+        assert release_persisted() == 2
+    assert any(
+        r.levelno == logging.WARNING and r.exc_info and "boom" in str(r.exc_info[1])
+        for r in caplog.records
+    )
+    assert ledger_size() == 0
+    assert _cache_manager_empty(spark)

@@ -222,162 +222,42 @@ def _write_legacy_merge_table(spark, path, df, keys, order_col, n_buckets):
     )
 
 
-@pytest.mark.slow
-def test_merge_upsert_adopts_legacy_layout(spark, tmp_path):
-    """Round-11 (ADVICE): pointing the versioned sink at a pre-round-10
-    table (plain `__bucket=<b>` dirs, no commit logs) must ADOPT the
-    legacy rows, not silently ignore them."""
+def test_old_layouts_fail_loudly_and_keep_their_files(spark, tmp_path):
+    """Tables older than the commit log — a plain parquet dir, and a
+    merge table of plain `__bucket=<b>` dirs with a Spark-written
+    `_layout` directory — are refused by the keyed sinks and by the
+    merge-table reader: no `_commits` appears and every file survives,
+    so no row is dropped silently."""
     import os
 
-    from osmart_etl_spark.io.sinks import (
-        merge_upsert_partitioned,
-        read_merge_table,
-        upsert_keep_latest,
-    )
-
-    path = str(tmp_path / "legacy_tbl")
-    base = spark.createDataFrame(
-        [(i, i % 3, float(i), 1) for i in range(100)],
-        "k1 int, k2 int, v double, ver int",
-    )
-    _write_legacy_merge_table(spark, path, base, ["k1", "k2"], "ver", 16)
-
-    # read-only resolution BEFORE any migration: all legacy rows visible
-    assert read_merge_table(spark, path).count() == 100
-
-    batch = spark.createDataFrame(
-        [(i, i % 3, 999.0, 2) for i in range(10)],
-        "k1 int, k2 int, v double, ver int",
-    )
-    merge_upsert_partitioned(spark, batch, path, ["k1", "k2"], "ver", n_buckets=16)
-
-    expect = {
-        (r["k1"], r["k2"]): (r["v"], r["ver"])
-        for r in upsert_keep_latest(base, batch, ["k1", "k2"], "ver").collect()
-    }
-    assert _merge_rows(spark, path) == expect
-    # legacy dirs swept, sentinel gone
-    names = set(os.listdir(path))
-    assert not any(n.startswith("__bucket=") for n in names)
-    assert "_legacy-migration" not in names
-
-
-@pytest.mark.slow
-def test_merge_upsert_adopts_legacy_bucket_named_dir(spark, tmp_path):
-    """Round-12 (ADVICE high): a legacy dir literally named ``bucket=<b>``
-    (bucket_col='bucket') IS the commit target directory — the adoption
-    sweep must not recursively delete it after committing, or the just-
-    published version and commit log vanish silently."""
-    import os
-
-    from osmart_etl_spark.io.sinks import (
-        merge_upsert_partitioned,
-        read_merge_table,
-        upsert_keep_latest,
-    )
-
-    path = str(tmp_path / "legacy_bucket_tbl")
-    base = spark.createDataFrame(
-        [(i, i % 3, float(i), 1) for i in range(100)],
-        "k1 int, k2 int, v double, ver int",
-    )
-    # legacy layout whose partition dirs are literally bucket=<b>
-    bucketed = base.withColumn(
-        "bucket", F.pmod(F.hash(F.col("k1"), F.col("k2")), F.lit(16))
-    )
-    bucketed.write.mode("overwrite").partitionBy("bucket").parquet(path)
-    layout = {
-        "n_buckets": 16,
-        "keys": ["k1", "k2"],
-        "order_col": "ver",
-        "bucket_col": "bucket",
-    }
-    spark.createDataFrame([layout]).coalesce(1).write.mode("overwrite").json(
-        path + "/_layout"
-    )
-
-    assert read_merge_table(spark, path, bucket_col="bucket").count() == 100
-
-    batch = spark.createDataFrame(
-        [(i, i % 3, 999.0, 2) for i in range(10)],
-        "k1 int, k2 int, v double, ver int",
-    )
-    merge_upsert_partitioned(
-        spark, batch, path, ["k1", "k2"], "ver", n_buckets=16, bucket_col="bucket"
-    )
-
-    expect = {
-        (r["k1"], r["k2"]): (r["v"], r["ver"])
-        for r in upsert_keep_latest(base, batch, ["k1", "k2"], "ver").collect()
-    }
-    got = {
-        (r["k1"], r["k2"]): (r["v"], r["ver"])
-        for r in read_merge_table(spark, path, bucket_col="bucket").collect()
-    }
-    assert got == expect  # every legacy row survived the in-place adoption
-    assert "_legacy-migration" not in os.listdir(path)
-    # plain legacy data files swept; every bucket dir is now versioned
-    for name in os.listdir(path):
-        if name.startswith("bucket="):
-            entries = os.listdir(os.path.join(path, name))
-            assert "_commits" in entries
-            assert all(e.startswith(("_", ".")) for e in entries)
-
-    # idempotent re-merge on the adopted table still works
-    merge_upsert_partitioned(
-        spark, batch, path, ["k1", "k2"], "ver", n_buckets=16, bucket_col="bucket"
-    )
-    got2 = {
-        (r["k1"], r["k2"]): (r["v"], r["ver"])
-        for r in read_merge_table(spark, path, bucket_col="bucket").collect()
-    }
-    assert got2 == expect
-
-
-@pytest.mark.slow
-def test_legacy_bucket_named_midcrash_plain_files_swept(spark, tmp_path):
-    """Round-12 closure: crash AFTER committing an in-place adoption
-    (d == bdir gains _commits) but BEFORE the sweep — the dir stops
-    looking 'legacy', so the plain files used to linger forever. The
-    resumed migration must sweep them under the sentinel."""
-    import os
-
-    from osmart_etl_spark.io.atomic import commit_version
+    from osmart_etl_spark.io.atomic import upsert_versioned
     from osmart_etl_spark.io.sinks import merge_upsert_partitioned, read_merge_table
 
-    path = str(tmp_path / "crash_bucket_tbl")
-    base = spark.createDataFrame(
-        [(i, float(i), 1) for i in range(60)], "k1 int, v double, ver int"
-    )
-    bucketed = base.withColumn("bucket", F.pmod(F.hash(F.col("k1")), F.lit(8)))
-    bucketed.write.mode("overwrite").partitionBy("bucket").parquet(path)
-    layout = {"n_buckets": 8, "keys": ["k1"], "order_col": "ver", "bucket_col": "bucket"}
-    spark.createDataFrame([layout]).coalesce(1).write.mode("overwrite").json(
-        path + "/_layout"
-    )
-    # simulate: one bucket adopted in place (commit INTO the legacy dir),
-    # crash before its plain files were swept
-    b0 = sorted(
-        n for n in os.listdir(path) if n.startswith("bucket=")
-    )[0]
-    d0 = os.path.join(path, b0)
-    commit_version(spark, spark.read.parquet(d0), d0, expected_seq=0)
-    open(os.path.join(path, "_legacy-migration"), "w").close()
-    assert any(not e.startswith(("_", ".")) for e in os.listdir(d0))
+    def files(root):
+        return sorted(
+            os.path.relpath(os.path.join(d, f), root)
+            for d, _dirs, names in os.walk(root)
+            for f in names
+        )
 
-    batch = spark.createDataFrame([(0, 999.0, 2)], "k1 int, v double, ver int")
-    merge_upsert_partitioned(
-        spark, batch, path, ["k1"], "ver", n_buckets=8, bucket_col="bucket"
-    )
-    # plain files swept everywhere; only versioned layout remains
-    for name in os.listdir(path):
-        if name.startswith("bucket="):
-            entries = os.listdir(os.path.join(path, name))
-            assert all(e.startswith(("_", ".")) for e in entries), (name, entries)
-    assert "_legacy-migration" not in os.listdir(path)
-    out = {r["k1"]: (r["v"], r["ver"]) for r in
-           read_merge_table(spark, path, bucket_col="bucket").collect()}
-    assert len(out) == 60 and out[0] == (999.0, 2)
+    schema = "k1 int, k2 int, v double, ver int"
+    rows = spark.createDataFrame([(i, i % 3, float(i), 1) for i in range(20)], schema)
+    batch = spark.createDataFrame([(0, 0, 9.0, 2)], schema)
+    plain, merge = str(tmp_path / "plain_tbl"), str(tmp_path / "merge_tbl")
+    rows.write.parquet(plain)
+    _write_legacy_merge_table(spark, merge, rows, ["k1", "k2"], "ver", 4)
+    before = {p: files(p) for p in (plain, merge)}
+
+    with pytest.raises(RuntimeError, match="outside the commit log"):
+        upsert_versioned(spark, batch, plain, ["k1", "k2"], "ver")
+    with pytest.raises(RuntimeError, match="predates per-bucket commit logs"):
+        merge_upsert_partitioned(spark, batch, merge, ["k1", "k2"], "ver", n_buckets=4)
+    with pytest.raises(RuntimeError, match="predates per-bucket commit logs"):
+        read_merge_table(spark, merge)
+    for p, names in before.items():
+        assert "_commits" not in os.listdir(p)
+        assert files(p) == names
+    assert spark.read.parquet(plain).count() == 20
 
 
 @pytest.mark.slow
@@ -454,76 +334,6 @@ def test_empty_layout_sidecar_self_heals(spark, tmp_path):
     assert open(sidecar).read() == good  # layout re-pinned identically
     out = {r["k1"]: r["v"] for r in read_merge_table(spark, path).collect()}
     assert out[0] == 999.0 and len(out) == 20
-
-
-@pytest.mark.slow
-def test_merge_upsert_legacy_ambiguity_raises(spark, tmp_path):
-    """A plain bucket dir coexisting with a committed version and NO
-    migration sentinel is ambiguous — reader and writer must refuse."""
-    import pytest
-
-    from osmart_etl_spark.io.sinks import merge_upsert_partitioned, read_merge_table
-
-    path = str(tmp_path / "ambig_tbl")
-    base = spark.createDataFrame(
-        [(i, 0, float(i), 1) for i in range(50)], "k1 int, k2 int, v double, ver int"
-    )
-    merge_upsert_partitioned(spark, base, path, ["k1", "k2"], "ver", n_buckets=8)
-    touched = sorted(
-        int(n.split("=", 1)[1])
-        for n in __import__("os").listdir(path)
-        if n.startswith("bucket=")
-    )
-    # drop a foreign plain dir next to a committed bucket
-    foreign = spark.createDataFrame([(999, 0, -1.0, 9)], "k1 int, k2 int, v double, ver int")
-    foreign.drop("k2").write.parquet(f"{path}/__bucket={touched[0]}")
-
-    with pytest.raises(RuntimeError, match="sentinel"):
-        read_merge_table(spark, path)
-    with pytest.raises(RuntimeError, match="sentinel"):
-        merge_upsert_partitioned(spark, base, path, ["k1", "k2"], "ver", n_buckets=8)
-
-
-@pytest.mark.slow
-def test_merge_upsert_legacy_midcrash_resumes(spark, tmp_path):
-    """Crash-injection: sentinel present + some buckets already adopted
-    (commit log exists, legacy dir not yet swept) — the next call must
-    finish the sweep without double-counting, and the reader must prefer
-    the committed version while the overlap exists."""
-    import os
-
-    from osmart_etl_spark.io.atomic import commit_version
-    from osmart_etl_spark.io.sinks import (
-        _legacy_bucket_dirs,
-        merge_upsert_partitioned,
-        read_merge_table,
-    )
-
-    path = str(tmp_path / "crash_tbl")
-    base = spark.createDataFrame(
-        [(i, i % 3, float(i), 1) for i in range(100)],
-        "k1 int, k2 int, v double, ver int",
-    )
-    _write_legacy_merge_table(spark, path, base, ["k1", "k2"], "ver", 16)
-
-    # simulate a migration that adopted ONE bucket then crashed pre-sweep
-    legacy = _legacy_bucket_dirs(spark, path, "__bucket")
-    b0, d0 = sorted(legacy.items())[0]
-    commit_version(spark, spark.read.parquet(d0), f"{path}/bucket={b0}", expected_seq=0)
-    open(os.path.join(path, "_legacy-migration"), "w").close()
-
-    # reader: overlap resolved to the committed version → still 100 rows
-    assert read_merge_table(spark, path).count() == 100
-
-    # writer: resumes the migration and applies the batch once
-    batch = spark.createDataFrame(
-        [(0, 0, 999.0, 2)], "k1 int, k2 int, v double, ver int"
-    )
-    merge_upsert_partitioned(spark, batch, path, ["k1", "k2"], "ver", n_buckets=16)
-    out = read_merge_table(spark, path)
-    assert out.count() == 100  # keep-latest: same key count
-    assert not any(n.startswith("__bucket=") for n in os.listdir(path))
-    assert "_legacy-migration" not in os.listdir(path)
 
 
 @pytest.mark.slow

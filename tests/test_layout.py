@@ -121,48 +121,3 @@ def test_zorder_clustering_narrows_file_ranges(spark, tmp_path_factory):
     # layout must not lose or duplicate rows
     assert spark.read.parquet(zord).count() == ev.count()
 
-
-def test_compact_small_files(spark, tmp_path):
-    """Compaction: 64 tiny files → ⌈rows/target⌉ files, content
-    identical, per-file rows near target (file_stats verifies)."""
-    from osmart_etl_spark.io.layout import compact, file_stats
-    from osmart_etl_spark.io.sources import read_table
-    from tests.conftest import SF_SMALL
-
-    p = str(tmp_path / "tiny_files")
-    ev = read_table(spark, SF_SMALL, "events")
-    ev.repartition(64).write.parquet(p)
-    before = {(r["event_id"]) for r in spark.read.parquet(p).collect()}
-
-    stats = compact(spark, p, target_rows_per_file=250)
-    assert stats["files_before"] == 64
-    assert stats["files_after"] == (stats["n_rows"] + 249) // 250
-    assert stats["files_after"] < 64
-
-    after_df = spark.read.parquet(p)
-    assert {(r["event_id"]) for r in after_df.collect()} == before
-
-    fs = file_stats(spark, p, ["event_id"]).collect()
-    assert len(fs) == stats["files_after"]
-    assert sum(r["n_rows"] for r in fs) == stats["n_rows"]
-    # balanced output: round-robin repartition keeps files near target
-    assert max(r["n_rows"] for r in fs) <= 2 * 250
-
-
-def test_compact_preserves_sort_locality(spark, tmp_path):
-    """Compacting with sort_within keeps per-file ranges narrow (the
-    Z-order/cluster locality survives the rewrite)."""
-    from osmart_etl_spark.io.layout import compact, file_stats
-    from osmart_etl_spark.io.sources import read_table
-    from tests.conftest import SF_SMALL
-
-    p = str(tmp_path / "sorted_files")
-    read_table(spark, SF_SMALL, "events").repartition(32).write.parquet(p)
-    compact(spark, p, target_rows_per_file=250, sort_within=["user_id"])
-    fs = file_stats(spark, p, ["user_id"]).collect()
-    n_users = (
-        read_table(spark, SF_SMALL, "events").select("user_id").distinct().count()
-    )
-    spans = [r["max_user_id"] - r["min_user_id"] for r in fs]
-    # sortWithinPartitions bounds each file's span well below the domain
-    assert sum(spans) / len(spans) < n_users

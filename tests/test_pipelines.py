@@ -593,61 +593,6 @@ def test_stock_points_complete_days_only(spark, tmp_path, events_parquet):
 
 
 @pytest.mark.slow
-def test_merge_accumulate_incremental_equals_full(spark, tmp_path):
-    """Three batches folded via merge_accumulate must equal the one-shot
-    aggregate over all events; a redelivered batch must be a ledger
-    no-op (additive merges are NOT naturally idempotent — the ledger is
-    the exactly-once contract)."""
-    from pyspark.sql import functions as F
-
-    from osmart_etl_spark.io.sinks import merge_accumulate
-    from osmart_etl_spark.io.sources import read_table
-    from tests.conftest import SF_SMALL
-
-    ev = read_table(spark, SF_SMALL, "events").select(
-        "user_id", F.col("value").cast("decimal(18,2)").alias("value"),
-        (F.dayofmonth("ts") % 3).alias("__b"),
-    )
-    path = str(tmp_path / "agg_tbl")
-    ledger = str(tmp_path / "agg_ledger")
-    schemas = []
-    for b in range(3):
-        applied = merge_accumulate(
-            spark,
-            ev.filter(F.col("__b") == b).drop("__b"),
-            path,
-            keys=["user_id"],
-            sum_cols=["value"],
-            batch_id=f"batch-{b}",
-            ledger_path=ledger,
-        )
-        assert applied
-        schemas.append(spark.read.parquet(path).schema.simpleString())
-    # the accumulator type is pinned: decimal sums must NOT widen by a
-    # digit per merge (28,2 -> 29,2 -> ...), which would change the
-    # stored schema on every batch until the 38-digit cap
-    assert len(set(schemas)) == 1, schemas
-
-    # redelivery: same batch_id → skipped, table unchanged
-    before = {(r["user_id"], str(r["value"])) for r in spark.read.parquet(path).collect()}
-    assert not merge_accumulate(
-        spark,
-        ev.filter(F.col("__b") == 1).drop("__b"),
-        path,
-        keys=["user_id"],
-        sum_cols=["value"],
-        batch_id="batch-1",
-        ledger_path=ledger,
-    )
-    after = {(r["user_id"], str(r["value"])) for r in spark.read.parquet(path).collect()}
-    assert after == before
-
-    full = ev.drop("__b").groupBy("user_id").agg(F.sum("value").alias("value"))
-    want = {(r["user_id"], str(r["value"])) for r in full.collect()}
-    assert after == want
-
-
-@pytest.mark.slow
 def test_merge_accumulate_versioned_equals_full_and_dedups(spark, tmp_path):
     """The CAS-protected accumulator: three batches equal the one-shot
     aggregate, a redelivered batch is a committed-ledger no-op, the
@@ -763,55 +708,10 @@ def test_merge_accumulate_versioned_hwm_ledger_is_bounded(spark, tmp_path):
     assert all(v == n_folds + 2 for v in got.values())
 
 
-def test_merge_accumulate_versioned_legacy_bare_list_ledger_reads(spark, tmp_path):
-    """A pre-round-12 version directory stores the ledger as a bare JSON
-    list — folding on top of it must honor those opaque entries (reject
-    redelivery) and upgrade the written format to v2."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from osmart_etl_spark.io.atomic import current_version, read_committed
-    from osmart_etl_spark.io.sinks import merge_accumulate_versioned
-
-    table = str(tmp_path / "agg_legacy_led")
-    batch = spark.range(10).select(
-        F.col("id").alias("k"), F.lit(1).cast("bigint").alias("n")
-    )
-    assert merge_accumulate_versioned(
-        spark, batch, table, keys=["k"], sum_cols=["n"], batch_id="old-0"
-    )
-    # rewrite the committed ledger in the PRE-round-12 bare-list format
-    # (drop Hadoop LocalFileSystem's checksum sidecar too — a direct
-    # rewrite invalidates it and fs.open would raise ChecksumException)
-    import os
-
-    cur = current_version(spark, table)
-    vdir = f"{table}/_v-{cur[1]}"
-    with open(f"{vdir}/_ledger.json", "w") as fh:
-        json.dump(["old-0"], fh)
-    crc = f"{vdir}/._ledger.json.crc"
-    if os.path.exists(crc):
-        os.remove(crc)
-
-    assert not merge_accumulate_versioned(  # legacy entry still rejects
-        spark, batch, table, keys=["k"], sum_cols=["n"], batch_id="old-0"
-    )
-    assert merge_accumulate_versioned(
-        spark, batch, table, keys=["k"], sum_cols=["n"], batch_id=("w", 1)
-    )
-    cur = current_version(spark, table)
-    with open(f"{table}/_v-{cur[1]}/_ledger.json") as fh:
-        led = json.load(fh)
-    assert led == {"v": 2, "hwm": {"w": 1}, "ids": ["old-0"]}
-    got = {r["k"]: r["n"] for r in read_committed(spark, table).collect()}
-    assert all(v == 2 for v in got.values()) and len(got) == 10
-
-
 @pytest.mark.slow
 def test_merge_accumulate_versioned_concurrent_writers_lose_nothing(spark, tmp_path):
-    """The exact scenario plain merge_accumulate documents as
-    unrecoverable: concurrent folds racing on one table. With the CAS
+    """A lost update without the CAS commit: concurrent folds racing on
+    one table, each reading the same snapshot. With the CAS
     commit the loser retries from a fresh snapshot, so EVERY batch's
     contribution survives — final state equals the serial fold of all
     six batches."""

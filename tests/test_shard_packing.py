@@ -44,36 +44,3 @@ def test_shard_packing_matches_serial_cumsum(spark):
     for r in rows[:-1]:
         assert abs(r.n_tokens - target) <= max_doc
 
-
-def test_write_sharded_corpus_roundtrip(spark, tmp_path):
-    """The writer materializes exactly the plan the query computes:
-    hive shard dirs, contiguous id ranges, nothing lost."""
-    from pyspark.sql import functions as F
-
-    from osmart_etl_spark.io.sinks import write_sharded_corpus
-    from osmart_etl_spark.ops.text import token_count
-
-    docs = (
-        spark.read.parquet(SF_SMALL + "/documents.parquet")
-        .select("doc_id", token_count(F.col("text")).cast("bigint").alias("tokens"))
-    )
-    out = str(tmp_path / "shards")
-    write_sharded_corpus(docs, out, n_shards=_SP_SHARDS)
-
-    back = spark.read.parquet(out)
-    assert back.count() == docs.count()
-    stats = {
-        r.shard_id: (r.n, r.lo, r.hi)
-        for r in back.groupBy("shard_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("doc_id").alias("lo"),
-            F.max("doc_id").alias("hi"),
-        )
-        .collect()
-    }
-    plan = {
-        r.shard_id: (r.n_docs, r.first_doc, r.last_doc)
-        for r in REGISTRY["corpus_shard_packing"].fn(spark, SF_SMALL).collect()
-    }
-    assert stats == plan

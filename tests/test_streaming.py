@@ -114,7 +114,7 @@ def test_foreachbatch_upsert_sink(spark, tmp_path, events_stream_dir):
     foreachBatch + keyed upsert. Re-delivered micro-batches overwrite
     idempotently, so the sink holds one row per key with the latest
     state regardless of redelivery."""
-    from osmart_etl_spark.io.sinks import upsert_parquet
+    from osmart_etl_spark.io.atomic import read_committed, upsert_versioned
 
     sink = str(tmp_path / "fb_sink")
 
@@ -122,7 +122,7 @@ def test_foreachbatch_upsert_sink(spark, tmp_path, events_stream_dir):
         agg = batch_df.groupBy("user_id").agg(
             F.max("ts").alias("last_ts"), F.count(F.lit(1)).alias("n")
         )
-        upsert_parquet(
+        upsert_versioned(
             spark, agg.withColumn("batch_id", F.lit(batch_id)),
             sink, keys=["user_id"], order_col="last_ts",
         )
@@ -139,7 +139,7 @@ def test_foreachbatch_upsert_sink(spark, tmp_path, events_stream_dir):
     )
     q.awaitTermination()
 
-    out = spark.read.parquet(sink)
+    out = read_committed(spark, sink)
     # one row per user, and last_ts == global max ts per user
     assert out.groupBy("user_id").count().filter(F.col("count") > 1).count() == 0
     want = {
