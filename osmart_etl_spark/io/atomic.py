@@ -46,17 +46,22 @@ paths), so a mis-aimed plain read fails loudly (no data files) instead
 of returning a mix of versions.
 
 Scale notes: the commit log is O(commits) empty files and version
-resolution is one directory listing — no data scan. Each commit writes
-one full new version, which is the right cost model for the
-keep-latest upsert below at dimension-table scale; for 100 TB fact
-tables the bucket-granular ``merge_upsert_partitioned`` is the
-O(delta) path, and it RUNS this protocol per bucket directory (staged
-``_v-<token>`` rename + ``publish_staged`` CAS), so both upsert tiers
-share one crash-safety story.
+resolution is one directory listing — no data scan. Each commit of
+``upsert_versioned`` writes one full new version, which is the right
+cost model for the keep-latest upsert below at dimension-table scale.
+For 100 TB fact tables the bucket-granular ``merge_upsert_partitioned``
+is the O(delta) path: a version directory holds only the buckets that
+commit rewrote, plus a ``_manifest.json`` naming every live bucket's
+data directory, older versions' included. It is still ONE
+``publish_staged`` CAS per merge, so both upsert tiers share one
+crash-safety story and a reader sees one cross-bucket snapshot.
+``_gc`` keeps every directory a retained manifest names.
 """
 
 from __future__ import annotations
 
+import json
+import logging
 import os
 import re
 import uuid
@@ -65,6 +70,20 @@ from pyspark.sql import DataFrame, SparkSession
 
 _MARKER_RE = re.compile(r"^(\d{8})-([0-9a-f]{12})$")
 _LOCK_RE = re.compile(r"^(\d{8})\.lock$")
+
+#: Manifest file of a version directory (io/sinks.merge_upsert_partitioned):
+#: ``{"layout": {...}, "schema": "<DDL>", "buckets": {token: [[lo, hi], ...]}}``
+#: lists every live bucket under the version whose directory holds it —
+#: this one for the buckets it rewrote, older ones for the rest — as runs
+#: of consecutive bucket ids (``manifest_buckets`` expands them). Bucket
+#: ``b`` of version ``token`` is ``bucket_dir(token, b)``. ``_gc`` keeps
+#: every bucket dir a retained version's manifest names.
+MANIFEST = "_manifest.json"
+#: Partition column of a merge version's data: Spark's ``partitionBy``
+#: writes bucket ``b`` to ``<version dir>/__bucket=<b>/``.
+BUCKET_COL = "__bucket"
+
+log = logging.getLogger(__name__)
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -162,12 +181,49 @@ def _write_small_json(
 ) -> None:
     """One small metadata file ← JSON, driver-side (the write twin of
     ``_read_small_text``; sort_keys for byte-stable artifacts)."""
-    import json as _json
-
     jvm, fs, hpath = _fs(spark, path)
     out = fs.create(hpath, overwrite)
-    out.write(bytearray(_json.dumps(obj, sort_keys=True).encode()))
+    out.write(bytearray(json.dumps(obj, sort_keys=True, separators=(",", ":")).encode()))
     out.close()
+
+
+def bucket_dir(token: str, bucket: int) -> str:
+    """Table-relative data directory of ``bucket`` in version ``token``."""
+    return f"_v-{token}/{BUCKET_COL}={bucket}"
+
+
+def manifest_buckets(manifest: dict) -> dict[int, str]:
+    """bucket -> token of the version whose directory holds it."""
+    return {
+        b: token
+        for token, runs in manifest["buckets"].items()
+        for lo, hi in runs
+        for b in range(lo, hi + 1)
+    }
+
+
+def manifest_runs(held: dict[int, str]) -> dict[str, list[list[int]]]:
+    """The inverse of ``manifest_buckets``: token -> runs of consecutive
+    buckets, which keeps a manifest a few hundred bytes however many
+    buckets a version lists."""
+    runs: dict[str, list[list[int]]] = {}
+    for b in sorted(held):
+        r = runs.setdefault(held[b], [])
+        if r and r[-1][1] == b - 1:
+            r[-1][1] = b
+        else:
+            r.append([b, b])
+    return runs
+
+
+def read_manifest(spark: SparkSession, table: str, token: str) -> dict | None:
+    """The ``MANIFEST`` of version ``_v-<token>``, or None when that
+    version carries none (a table no merge sink wrote)."""
+    path = f"{table.rstrip('/')}/_v-{token}/{MANIFEST}"
+    _, fs, hpath = _fs(spark, path)
+    if not fs.exists(hpath):
+        return None
+    return json.loads(_read_small_text(spark, path))
 
 
 def _listdir(spark: SparkSession, path: str) -> list[str]:
@@ -278,17 +334,17 @@ def publish_staged(
     orphan_ttl_s: float = 3600.0,
 ) -> int:
     """Phase 2 of ``commit_version``, exposed for callers that stage
-    ``_v-<token>`` themselves (the bucket-granular merge sink renames a
-    pre-written directory into place instead of running a per-bucket
-    Spark job): claim the next sequence with one exclusive create, bind
-    it to the token with the marker file, GC. The staged directory must
-    already be complete — a crash before this call leaves the live
-    table untouched and the orphan swept later."""
+    ``_v-<token>`` themselves (the merge sink writes its touched buckets
+    and manifest there; the watermark store writes one JSON file):
+    claim the next sequence with one exclusive create, bind it to the
+    token with the marker file, GC. The staged directory must already
+    be complete — a crash before this call leaves the live table
+    untouched and the orphan swept later."""
     base = table.rstrip("/")
     jvm, fs, _ = _fs(spark, base)
 
-    log = _commit_log(spark, base)
-    last_seq = log[-1][0] if log else 0
+    commits = _commit_log(spark, base)
+    last_seq = commits[-1][0] if commits else 0
     if expected_seq is not None and last_seq != expected_seq:
         fs.delete(jvm.org.apache.hadoop.fs.Path(f"{base}/_v-{token}"), True)
         raise ConcurrentCommitError(
@@ -358,7 +414,7 @@ def publish_staged(
     try:
         _gc(spark, base, keep_versions, orphan_ttl_s)
     except Exception:  # noqa: BLE001 — GC retries on the next commit
-        pass
+        log.warning("%s: GC after commit %d failed", base, next_seq, exc_info=True)
     return next_seq
 
 
@@ -380,7 +436,13 @@ def _gc(
     write (Delta's VACUUM retention rule, same reasoning). Versions in
     RETIRED commit markers carry no such ambiguity (they were
     published; no writer still owns them) and are removed
-    unconditionally."""
+    unconditionally.
+
+    A retired version that a retained version's ``MANIFEST`` still
+    names keeps the named directories and its commit marker; the rest
+    of it is swept. Once no retained manifest names it, it goes like
+    any retired version, so a merge table holds at most
+    ``keep_versions`` manifests' worth of bucket directories."""
     import time
 
     jvm, fs, _ = _fs(spark, base)
@@ -388,6 +450,11 @@ def _gc(
     committed = {token for _, token in log}
     live = {token for _, token in log[-keep_versions:]}
     horizon_ms = (time.time() - orphan_ttl_s) * 1000.0
+    named: dict[str, set[str]] = {}  # token -> bucket dirs a retained manifest names
+    for token in live:
+        manifest = read_manifest(spark, base, token)
+        for b, held in (manifest_buckets(manifest) if manifest else {}).items():
+            named.setdefault(held, set()).add(f"{BUCKET_COL}={b}")
 
     def _old_enough(path: str) -> bool:
         p = jvm.org.apache.hadoop.fs.Path(path)
@@ -406,14 +473,18 @@ def _gc(
         if not name.startswith("_v-") or name[3:] in live:
             continue
         full = f"{base}/{name}"
-        if name[3:] in committed or _old_enough(full):
+        if name[3:] in named:
+            for sub in _listdir(spark, full):
+                if sub not in named[name[3:]]:
+                    fs.delete(jvm.org.apache.hadoop.fs.Path(f"{full}/{sub}"), True)
+        elif name[3:] in committed or _old_enough(full):
             fs.delete(jvm.org.apache.hadoop.fs.Path(full), True)
     marker_seqs = {seq for seq, _ in log}
     for name in _listdir(spark, f"{base}/_commits"):
         full = f"{base}/_commits/{name}"
         m = _MARKER_RE.match(name)
         lk = _LOCK_RE.match(name)
-        if m and m.group(2) not in live:
+        if m and m.group(2) not in live and m.group(2) not in named:
             fs.delete(jvm.org.apache.hadoop.fs.Path(full), False)
         elif lk and (int(lk.group(1)) in marker_seqs or _old_enough(full)):
             # a lock whose marker exists is a resolved claim; a stale
@@ -430,8 +501,6 @@ def read_sidecar(spark: SparkSession, table: str) -> dict | None:
     """Stats sidecar (``_sidecar.json``) of the table's CURRENT committed
     version, or None when the version carries none. One file read at the
     commit log's altitude — never a Spark job."""
-    import json as _json
-
     base = table.rstrip("/")
     cur = current_version(spark, base)
     if cur is None:
@@ -440,7 +509,7 @@ def read_sidecar(spark: SparkSession, table: str) -> dict | None:
     p = f"{base}/_v-{cur[1]}/_sidecar.json"
     if not fs.exists(jvm.org.apache.hadoop.fs.Path(p)):
         return None
-    return _json.loads(_read_small_text(spark, p))
+    return json.loads(_read_small_text(spark, p))
 
 
 def upsert_versioned(

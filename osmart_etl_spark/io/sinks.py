@@ -13,7 +13,8 @@ Spark-first:
   per key via ``row_number()`` — same semantics as ON DUPLICATE KEY
   UPDATE), published through io/atomic's commit log. Every keyed sink
   has exactly one write path: ``io/atomic.upsert_versioned`` (whole-table
-  versions), ``merge_upsert_partitioned`` (per-bucket versions) and
+  versions), ``merge_upsert_partitioned`` (versions that rewrite only
+  the touched buckets, listed by a table-level manifest) and
   ``merge_accumulate_versioned`` (aggregate + ledger in one version).
 
 Partitioned layout replaces MySQL index design (§4): the raw event log
@@ -72,12 +73,6 @@ def upsert_keep_latest(
     )
 
 
-#: Partition column of the merge sink's staging write, pinned in every
-#: ``_layout`` sidecar under the ``bucket_col`` key. Committed bucket
-#: versions live under ``bucket=<b>/``.
-_BUCKET_COL = "__bucket"
-
-
 def merge_upsert_partitioned(
     spark: SparkSession,
     new: DataFrame,
@@ -94,409 +89,163 @@ def merge_upsert_partitioned(
     appear in the batch. ``io/atomic.upsert_versioned`` has the same
     semantics but rewrites the WHOLE table per batch; at 100 TB that is
     the first real wall. This sink restores the O(delta) property on
-    plain parquet:
+    plain parquet, with one commit log at the table root:
 
-    1. the table is laid out partitioned by ``pmod(hash(keys…), n_buckets)``
-       — a deterministic function of the key, so every key lives in
-       exactly one partition directory forever;
-    2. an incoming batch touches only the buckets its keys hash to —
-       read back JUST those buckets' current versions (directory
-       pruning, not a table scan), merge keep-latest, and publish each
-       touched bucket as a NEW immutable ``_v-<token>`` version through
-       ``io/atomic``'s commit log (staged in one Spark job, renamed and
-       CAS-published per bucket) — never an in-place overwrite, so a
-       crash at any point leaves every bucket at a complete version.
+    1. every key lives in bucket ``pmod(hash(keys…), n_buckets)`` — a
+       deterministic function of the key, so a key never changes bucket;
+    2. a batch reads back only the buckets its keys hash to, merges
+       keep-latest, and writes those buckets in ONE Spark job straight
+       into a new version directory ``_v-<token>/__bucket=<b>/`` (one
+       file per bucket);
+    3. the version's ``_manifest.json`` (``io/atomic.MANIFEST``) lists
+       EVERY live bucket under the version whose directory holds it —
+       this one for the touched buckets, older ones for the rest — plus
+       the layout and the table schema;
+    4. one ``io/atomic.publish_staged`` CAS on the sequence the merge
+       read publishes it (the single-log, manifest-listed commit of
+       Delta Lake and Iceberg). A crash before it leaves the whole old
+       table; a concurrent writer surfaces as ``ConcurrentCommitError``
+       and a retry converges (keep-latest is idempotent). Readers
+       resolve one manifest, so they see one cross-bucket snapshot.
 
-    Per-batch cost: O(|delta| + size of touched buckets) ≈
-    O(|delta| × table_size/n_buckets · distinct_buckets). With Delta Lake
-    available the same call is one ``MERGE INTO`` (file-level instead of
-    bucket-level granularity); this is the no-extra-dependency analogue.
+    Per-batch cost: O(|delta| + size of touched buckets) and one commit.
+    With Delta Lake available the same call is one ``MERGE INTO``.
 
-    The key→bucket layout (n_buckets, key list, order column) is pinned
-    in a ``_layout`` sidecar inside the table directory on first write
-    (underscore-prefixed, so table reads never see it) and validated on
-    every later batch: a batch with a different n_buckets or key order
-    would hash keys to DIFFERENT directories, silently leaving stale
-    versions unmerged — that is a hard error here, not a corruption.
-    A table whose ``_layout`` is a directory (the Spark-written sidecar
-    of the pre-commit-log layout, plain ``__bucket=<b>`` data dirs) is
-    refused by ``_read_layout``: its rows live outside any commit log,
-    and merging on top would drop them silently.
+    The layout (n_buckets, key list, order column) lives in every
+    manifest; a batch with a different layout would hash keys to other
+    buckets and is refused with ``ValueError``. The first commit claims
+    seq 1 by CAS, which settles concurrent creators. A directory with
+    entries but no commit log — a table written before the table-level
+    manifest (``bucket=<b>`` dirs with a ``_layout`` sidecar) or any
+    foreign data — raises ``RuntimeError`` and keeps every file.
 
-    Returns the list of touched bucket ids (for tests / observability).
+    Returns the sorted list of touched bucket ids.
     """
     import uuid
 
-    from osmart_etl_spark.io.atomic import _fs, publish_staged
-    from osmart_etl_spark.io.sources import path_exists
+    from osmart_etl_spark.io.atomic import (
+        BUCKET_COL,
+        MANIFEST,
+        _gc,
+        _write_small_json,
+        bucket_dir,
+        manifest_buckets,
+        manifest_runs,
+        publish_staged,
+    )
 
     base = path.rstrip("/")
-    bucketed = new.withColumn(
-        _BUCKET_COL, F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(n_buckets))
-    )
+    layout = {"n_buckets": n_buckets, "keys": list(keys), "order_col": order_col}
+    seq, manifest = _snapshot(spark, base)
+    if manifest is not None and manifest["layout"] != layout:
+        # F.hash is order-sensitive over its arguments, so the key LIST
+        # (not set) must match exactly.
+        raise ValueError(
+            f"merge_upsert_partitioned layout mismatch at {path}: table was "
+            f"created with {manifest['layout']}, this batch supplies {layout}. "
+            "Changing n_buckets/keys re-homes keys to different buckets; "
+            "rebuild the table instead."
+        )
+    bucket = F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(n_buckets))
     # ONE materialization of the incoming batch: the touched-bucket set
     # and the written rows must come from the same evaluation — a
     # nondeterministic source re-evaluated at write time could emit rows
     # into buckets absent from `touched`, silently losing pre-existing
-    # rows of those directories.
-    bucketed = bucketed.localCheckpoint(eager=True)
-
-    layout = {
-        "n_buckets": n_buckets,
-        "keys": list(keys),
-        "order_col": order_col,
-        "bucket_col": _BUCKET_COL,
-    }
-    layout_path = f"{base}/_layout"
-    if path_exists(spark, path):
-        # F.hash is order-sensitive over its arguments, so the key LIST
-        # (not set) must match exactly.
-        try:
-            stored = _read_layout(spark, layout_path)
-        except (EmptyLayoutError, FileNotFoundError) as exc:
-            # EmptyLayoutError(swept): creator died between the
-            # sidecar's exclusive create and its content write, and
-            # _read_layout just TTL-swept the dead file. Recreate it
-            # with THIS batch's layout (the table's bucket dirs were
-            # hashed by whoever keeps calling with this layout; a
-            # mismatch surfaces on the next batch exactly like
-            # first-write contention). FileNotFoundError: the sidecar
-            # is GONE on an existing table — a READER already swept the
-            # dead file (or an operator removed it per the repair
-            # message); same heal. Inside the TTL the creator may be
-            # alive mid-write — propagate, don't steal.
-            if isinstance(exc, EmptyLayoutError) and not getattr(exc, "swept", False):
-                raise
-            from osmart_etl_spark.io.atomic import _listdir
-
-            entries = _listdir(spark, base)
-            bucketish = [e for e in entries if e.startswith("bucket=")]
-            if isinstance(exc, FileNotFoundError):
-                # heal ONLY a table that is recognizably this sink's
-                # layout (bucket dirs, nothing else): a plain parquet
-                # dir — or plain `__bucket=<b>` dirs — missing _layout
-                # is a FOREIGN table; recreating a sidecar there would
-                # silently shadow its rows (read_merge_table reads
-                # committed bucket versions only). Keep the loud failure.
-                foreign = [
-                    e for e in entries
-                    if not e.startswith((".", "_layout", "_stage-", "bucket="))
-                ]
-                if foreign or not bucketish:
-                    raise
-            # The heal pins THIS batch's layout, which the lost sidecar
-            # can no longer confirm. Cross-check it against the on-disk
-            # directories: a bucket id >= n_buckets proves the caller's
-            # n_buckets is NOT what hashed this table — recreating the
-            # sidecar would silently re-home keys and strand their old
-            # versions (round-12 review). (A smaller-but-divisible lie
-            # is undetectable from ids alone; the check catches the
-            # common drift and the message says what to verify.)
-            observed = [
-                int(e.split("=", 1)[1])
-                for e in bucketish
-                if e.split("=", 1)[1].isdigit()
-            ]
-            if observed and max(observed) >= layout["n_buckets"]:
-                raise ValueError(
-                    f"refusing to heal _layout at {path}: on-disk bucket id "
-                    f"{max(observed)} is outside this batch's n_buckets="
-                    f"{layout['n_buckets']} — the table was created with a "
-                    "different layout; recreate the sidecar by hand only "
-                    "with the ORIGINAL n_buckets/keys."
-                ) from exc
-            if not _write_layout_exclusive(spark, layout_path, layout):
-                stored = _read_layout(spark, layout_path)  # racer healed it
-                if stored != layout:
-                    raise ValueError(
-                        f"merge_upsert_partitioned layout race at {path}: a "
-                        f"concurrent healer pinned {stored}, this batch "
-                        f"supplies {layout}."
-                    )
-            stored = layout
-        if stored != layout:
-            raise ValueError(
-                f"merge_upsert_partitioned layout mismatch at {path}: "
-                f"table was created with {stored}, this batch supplies {layout}. "
-                "Changing n_buckets/keys re-homes keys to different directories; "
-                "rebuild the table instead."
-            )
-    elif not _write_layout_exclusive(spark, layout_path, layout):
-        # lost the creation race (round-11 contention probe: concurrent
-        # first-writers used to collide overwriting the same sidecar) —
-        # the winner's layout is authoritative; validate ours against it
-        stored = _read_layout(spark, layout_path)
-        if stored != layout:
-            raise ValueError(
-                f"merge_upsert_partitioned layout race at {path}: a concurrent "
-                f"creator pinned {stored}, this batch supplies {layout}."
-            )
-
+    # rows of those buckets.
+    bucketed = new.withColumn(BUCKET_COL, bucket).localCheckpoint(eager=True)
     # ≤ n_buckets small ints — a bounded driver-side read, not a data scan.
-    touched = sorted(r[0] for r in bucketed.select(_BUCKET_COL).distinct().collect())
-    # snapshot each touched bucket's (version dir, committed seq): the
-    # seq makes every publish a CAS — a writer that committed to the
-    # same bucket after this read surfaces as ConcurrentCommitError
-    # instead of a silently lost update (retry re-merges from the fresh
-    # snapshot; keep-latest makes the retry converge)
-    snapshots = {b: _bucket_snapshot(spark, base, b) for b in touched}
-    old_dirs = [d for d, _seq in snapshots.values() if d is not None]
-    if old_dirs:
-        # the staged version dirs store only user columns (the bucket is
-        # the directory); recompute the bucket from the keys — the same
-        # deterministic hash — to restore the merge/partition column
-        old_touched = spark.read.parquet(*old_dirs).withColumn(
-            _BUCKET_COL, F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(n_buckets))
+    touched = sorted(r[0] for r in bucketed.select(BUCKET_COL).distinct().collect())
+    if not touched:
+        return []
+
+    held = manifest_buckets(manifest) if manifest else {}
+    old = [f"{base}/{bucket_dir(held[b], b)}" for b in touched if b in held]
+    merged = bucketed
+    if old:
+        # bucket dirs hold user columns only (the bucket is the dir);
+        # the manifest's schema spares a schema-inference job
+        old_rows = (
+            spark.read.schema(manifest["schema"])
+            .parquet(*old)
+            .withColumn(BUCKET_COL, bucket)
         )
-        merged = upsert_keep_latest(old_touched, bucketed, keys, order_col)
-    else:
-        merged = bucketed
-    merged = merged.localCheckpoint(eager=True)
+        merged = upsert_keep_latest(old_rows, bucketed, keys, order_col)
+    if seq == 0:
+        # a crashed creator's dead lock on seq 1 would otherwise wedge
+        # creation: _gc (TTL-gated) normally runs only after a commit
+        _gc(spark, base, 2, 3600.0)
 
-    # Crash-safe per-bucket publish (round 10 — replaces the in-place
-    # dynamic partition overwrite, whose delete-then-write window could
-    # fail the job AFTER dropping partitions): stage every touched
-    # bucket in ONE Spark job, then for each bucket rename the staged
-    # directory to an immutable `bucket=<b>/_v-<token>` version and
-    # CAS-publish it through io/atomic's commit log. A crash during
-    # staging leaves every live bucket untouched; a crash between
-    # bucket publishes leaves each bucket at a COMPLETE version (old or
-    # new) and the keep-latest merge makes a replay of the same batch
-    # converge — per-bucket atomicity + idempotent retry. Readers that
-    # need a cross-bucket snapshot use `upsert_versioned` instead
-    # (whole-table versions); this sink trades snapshot isolation for
-    # O(delta) writes, and now loses nothing in a crash.
     token = uuid.uuid4().hex[:12]
-    stage = f"{base}/_stage-{token}"
-    # one shuffle task per touched bucket -> each version directory is
-    # ~one file (a bucket is table_size/n_buckets by design, sized to
-    # write in one task); without this, every one of the write's input
-    # tasks leaves a file in every bucket it touches (n_par x buckets
-    # small files per batch)
+    # a bucket hashes to one write task, so each bucket dir is one file
+    # whatever the task count; a few tasks beat one per touched bucket
+    n_tasks = min(len(touched), spark.sparkContext.defaultParallelism)
     (
-        merged.repartition(max(len(touched), 1), F.col(_BUCKET_COL))
+        merged.repartition(n_tasks, F.col(BUCKET_COL))
         .write.mode("overwrite")
-        .partitionBy(_BUCKET_COL)
-        .parquet(stage)
+        .partitionBy(BUCKET_COL)
+        .parquet(f"{base}/_v-{token}")
     )
-    jvm, fs, _ = _fs(spark, base)
-    Path = jvm.org.apache.hadoop.fs.Path
-    # sweep crashed-writer staging debris (>1h old) — same TTL doctrine
-    # as io/atomic._gc; never touches the current token's stage
-    import time as _time
-
-    for st in fs.listStatus(Path(base)):
-        nm = st.getPath().getName()
-        if (
-            nm.startswith("_stage-")
-            and nm != f"_stage-{token}"
-            and st.getModificationTime() < (_time.time() - 3600.0) * 1000
-        ):
-            fs.delete(st.getPath(), True)
-    for b in touched:
-        bdir = f"{base}/bucket={b}"
-        fs.mkdirs(Path(bdir))
-        if not fs.rename(
-            Path(f"{stage}/{_BUCKET_COL}={b}"), Path(f"{bdir}/_v-{token}")
-        ):
-            raise IOError(f"staging rename failed for bucket {b} under {base}")
-        publish_staged(spark, bdir, token, expected_seq=snapshots[b][1])
-    fs.delete(Path(stage), True)
+    held.update(dict.fromkeys(touched, token))
+    _write_small_json(
+        spark,
+        f"{base}/_v-{token}/{MANIFEST}",
+        {
+            "layout": layout,
+            "schema": merged.drop(BUCKET_COL).schema.toDDL(),
+            "buckets": manifest_runs(held),
+        },
+    )
+    publish_staged(spark, base, token, expected_seq=seq)
     return touched
 
 
-def writer_bucket_shard(
-    df: DataFrame,
-    keys: list[str],
-    writer_id: int,
-    n_writers: int,
-    *,
-    n_buckets: int = 64,
-) -> DataFrame:
-    """Shard a batch across W concurrent writers by merge bucket — the
-    "shard writers by key range" operating rule (SCALE.md, merge sink
-    under contention) as code (VERDICT r12 #5).
+def _snapshot(spark: SparkSession, base: str) -> tuple[int, dict | None]:
+    """(committed seq, manifest) of a merge table — one commit-log
+    listing and one file read; (0, None) for an absent or empty one.
+    A directory that holds entries outside a commit log, or whose
+    current version has no manifest, raises ``RuntimeError``."""
+    from osmart_etl_spark.io.atomic import _listdir, current_version, read_manifest
 
-    Restricts ``df`` to the rows whose ``merge_upsert_partitioned``
-    bucket this writer OWNS (``bucket % n_writers == writer_id``, with
-    bucket computed by the sink's own hash — same pmod/hash, same key
-    order, same ``n_buckets``). W writers that each apply their shard
-    of a shared/replicated feed before merging touch pairwise-disjoint
-    bucket directories, so the per-bucket CAS never conflicts: the
-    fully-contended overlap storm becomes the zero-retry disjoint
-    regime (SCALE.md's ``overlap_sharded`` row: the backoff-dominated
-    wall collapses to protocol throughput).
-
-    Use when every writer can see the same batch stream (replicated
-    queue, fan-out consumer group) or as the ownership predicate when
-    assigning key ranges to writers upstream. Writers with distinct,
-    un-replicated inputs cannot use a filter to redistribute rows —
-    route those through one writer per key range at the source instead.
-    ``n_writers`` > ``n_buckets`` leaves some writers with no owned
-    bucket (their shard is empty — harmless but wasteful).
-    """
-    if not 0 <= writer_id < n_writers:
-        raise ValueError(f"writer_id {writer_id} not in [0, {n_writers})")
-    bucket = F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(n_buckets))
-    return df.filter(bucket % F.lit(n_writers) == F.lit(writer_id))
-
-
-def _bucket_snapshot(
-    spark: SparkSession, base: str, bucket: int
-) -> tuple[str | None, int]:
-    """(current committed version dir or None, committed seq — 0 for a
-    never-written bucket) of one bucket."""
-    from osmart_etl_spark.io.atomic import current_version
-    from osmart_etl_spark.io.sources import path_exists
-
-    bdir = f"{base}/bucket={bucket}"
-    if not path_exists(spark, bdir):
-        return None, 0
-    cur = current_version(spark, bdir)
-    return (None, 0) if cur is None else (f"{bdir}/_v-{cur[1]}", cur[0])
-
-
-def _write_layout_exclusive(spark: SparkSession, layout_path: str, layout: dict) -> bool:
-    """Create the ``_layout`` sidecar as ONE file with an exclusive
-    create — the same CAS primitive as io/atomic's sequence locks — so
-    concurrent table CREATORS race safely: exactly one wins, the loser
-    returns False and validates against the winner's layout. Returns
-    True if this writer created the sidecar."""
-    import json as _json
-    import os as _os
-
-    from osmart_etl_spark.io.atomic import _assert_atomic_create_scheme, _fs
-
-    data = _json.dumps(layout, sort_keys=True)
-    jvm, fs, hpath = _fs(spark, layout_path)
-    fs.mkdirs(hpath.getParent())
-    scheme = fs.getUri().getScheme()
-    if scheme == "file":
-        local = hpath.toUri().getPath()
-        try:
-            fd = _os.open(local, _os.O_CREAT | _os.O_EXCL | _os.O_WRONLY)
-        except FileExistsError:
-            return False
-        with _os.fdopen(fd, "w") as fh:
-            fh.write(data)
-        return True
-    # same CAS-atomicity rule as io/atomic's commit locks: refuse
-    # schemes whose create-no-overwrite is a check/act race
-    _assert_atomic_create_scheme(spark, scheme)
-    try:
-        out = fs.create(hpath, False)
-    except Exception as exc:  # py4j surfaces FileAlreadyExistsException
-        if "AlreadyExists" in str(exc.__class__) + str(exc):
-            return False
-        raise
-    out.write(bytearray(data.encode()))
-    out.close()
-    return True
-
-
-class EmptyLayoutError(RuntimeError):
-    """The ``_layout`` sidecar exists but has no content: a creator died
-    between the exclusive create and the content write. Distinct from
-    FileNotFoundError so a WRITER (which knows the layout it would have
-    pinned) can self-heal by recreating the sidecar, while a reader gets
-    an actionable message instead of a generic 'no readable layout'."""
-
-
-def _read_layout(
-    spark: SparkSession, layout_path: str, *, dead_ttl_s: float = 3600.0
-) -> dict:
-    """Read the ``_layout`` sidecar of a merge table (internal): one JSON
-    file, written by ``_write_layout_exclusive``. A just-created file may
-    be momentarily empty to a racing reader (create/write are two
-    steps); retry briefly before giving up.
-
-    A DIRECTORY at ``_layout`` is the Spark-written sidecar of the
-    pre-commit-log layout, whose rows sit in plain ``__bucket=<b>`` dirs
-    that no commit log covers. It raises ``RuntimeError`` and touches
-    nothing, so neither ``merge_upsert_partitioned`` nor
-    ``read_merge_table`` can treat such a table as empty.
-
-    A PERMANENTLY empty sidecar (creator crashed between the exclusive
-    create and the content write) would otherwise wedge the table
-    forever: every reader/writer spins the full retry then fails. Same
-    self-heal rule as io/atomic's dead-claim sweep — past ``dead_ttl_s``
-    (mtime) the empty file is deleted so the next writer can recreate
-    it; inside the TTL it might be a live creator mid-write, so only the
-    distinct ``EmptyLayoutError`` is raised (round-12 ADVICE, low)."""
-    import json as _json
-    import time as _time
-
-    from osmart_etl_spark.io.atomic import _fs, _read_small_text
-
-    jvm, fs, hpath = _fs(spark, layout_path)
-    saw_empty_file = False
-    for _ in range(100):
-        if not fs.exists(hpath):
-            _time.sleep(0.05)
-            continue
-        if fs.getFileStatus(hpath).isDirectory():
-            raise RuntimeError(
-                f"{layout_path} is a directory: this merge table predates "
-                "per-bucket commit logs and its rows sit in plain bucket dirs "
-                "a merge would drop. Rebuild it: read those dirs and load them "
-                "into a new merge_upsert_partitioned table."
-            )
-        content = _read_small_text(spark, layout_path)
-        if content.strip():
-            return _json.loads(content)
-        saw_empty_file = True
-        _time.sleep(0.05)  # winner mid-write
-    if not (saw_empty_file and fs.exists(hpath)):
-        raise FileNotFoundError(f"no readable layout at {layout_path}")
-    age_s = _time.time() - fs.getFileStatus(hpath).getModificationTime() / 1000.0
-    if age_s <= dead_ttl_s:
-        exc = EmptyLayoutError(
-            f"empty _layout sidecar at {layout_path}: a creator may be "
-            f"mid-write (age {age_s:.0f}s <= TTL {dead_ttl_s:.0f}s); "
-            "retry, or remove the file to repair if it persists"
+    cur = current_version(spark, base)
+    if cur is None:
+        foreign = sorted(
+            n for n in _listdir(spark, base)
+            if n == "_layout" or not n.startswith(("_", "."))
         )
-        exc.swept = False
-        raise exc
-    # TOCTOU guard (round-12 review): a healer may have swept and
-    # RECREATED the sidecar with valid content between our last empty
-    # read and this delete — re-read once and, if content appeared,
-    # return it instead of deleting a freshly pinned layout.
-    content = _read_small_text(spark, layout_path)
-    if content.strip():
-        return _json.loads(content)
-    fs.delete(hpath, False)  # dead creation — sweep it
-    exc = EmptyLayoutError(
-        f"empty _layout sidecar at {layout_path} (creator died "
-        f"mid-write, age {age_s:.0f}s > TTL {dead_ttl_s:.0f}s) — "
-        "removed; the next merge_upsert_partitioned recreates it"
-    )
-    exc.swept = True
-    raise exc
+        if foreign:
+            raise RuntimeError(
+                f"{base}: holds {foreign} but no table manifest — a merge table "
+                "written before the table-level manifest, or foreign data. "
+                "Refusing to merge over rows it cannot read; rebuild it by "
+                "loading its rows into a new merge_upsert_partitioned table."
+            )
+        return 0, None
+    manifest = read_manifest(spark, base, cur[1])
+    if manifest is None:
+        raise RuntimeError(
+            f"{base}: committed version {cur[0]} has no table manifest — "
+            "not a merge_upsert_partitioned table"
+        )
+    return cur[0], manifest
 
 
 def read_merge_table(spark: SparkSession, path: str) -> DataFrame:
-    """Read a ``merge_upsert_partitioned`` table: resolve every bucket's
-    current committed version through its commit log (one directory
-    listing per bucket — O(n_buckets) metadata, no data scan) and union
-    the immutable version directories. An in-flight merge is invisible:
-    unpublished ``_v-*`` staging never appears in a commit log. The
-    ``_layout`` sidecar is read first, so a pre-commit-log table raises
-    (see ``_read_layout``) instead of reading as empty."""
-    from osmart_etl_spark.io.atomic import _listdir
-    from osmart_etl_spark.io.sources import path_exists
+    """Read a ``merge_upsert_partitioned`` table at its current version:
+    one commit-log listing, one manifest read, then a parquet read of
+    the bucket directories the manifest names with the manifest's
+    schema. The files are listed when this returns, so the DataFrame
+    keeps that snapshot while later merges publish (``keep_versions``
+    retains it). Raises ``FileNotFoundError`` for a table with no
+    commit, and refuses an old-layout or foreign directory like the
+    writer does."""
+    from osmart_etl_spark.io.atomic import bucket_dir, manifest_buckets
 
     base = path.rstrip("/")
-    if path_exists(spark, f"{base}/_layout"):
-        _read_layout(spark, f"{base}/_layout")
-    snapshots = (
-        _bucket_snapshot(spark, base, int(name.split("=", 1)[1]))
-        for name in _listdir(spark, base)
-        if name.startswith("bucket=")
-    )
-    dirs = [d for d, _seq in snapshots if d is not None]
-    if not dirs:
-        raise FileNotFoundError(f"no committed buckets under {base}")
-    return spark.read.parquet(*dirs)
+    _seq, manifest = _snapshot(spark, base)
+    if manifest is None:
+        raise FileNotFoundError(f"no committed version under {base}")
+    dirs = [f"{base}/{bucket_dir(t, b)}" for b, t in sorted(manifest_buckets(manifest).items())]
+    return spark.read.schema(manifest["schema"]).parquet(*dirs)
 
 
 def write_quarantine(df: DataFrame, path: str) -> None:

@@ -178,10 +178,10 @@ def run_sales_incremental(
         # (O(|delta| + table/n_buckets)), not the whole O(keys) table.
         # Values are identical either way (the accumulator never drops
         # keys and normalization is per-row); untouched keys keep their
-        # committed bucket version byte-for-byte — ``extracted_at`` now
-        # reads as "last time this key's totals changed", which is the
-        # honest provenance. Read the table with
-        # ``io/sinks.read_merge_table``.
+        # bucket files byte-for-byte (the new version's manifest points
+        # at them) — ``extracted_at`` reads as "last time this key's
+        # totals changed", which is the honest provenance. Read the
+        # table with ``io/sinks.read_merge_table``.
         from osmart_etl_spark.io.atomic import read_committed
 
         acc = read_committed(spark, accum_path)
@@ -198,12 +198,12 @@ def run_sales_incremental(
             # reach the DB but not the lake (silent divergence).
             normalized = normalized.localCheckpoint(eager=True)
         # The lake upsert goes through the bucket-granular versioned
-        # merge sink (io/sinks.merge_upsert_partitioned): every touched
-        # bucket publishes a NEW immutable version via the commit log —
-        # a crash anywhere leaves each bucket at a complete version and
-        # a concurrent duplicate run surfaces as ConcurrentCommitError,
-        # the same guarantees the whole-table versioned sink gave, plus
-        # O(delta)-bucket writes per tick.
+        # merge sink (io/sinks.merge_upsert_partitioned): the touched
+        # buckets land in a NEW immutable version whose manifest is
+        # published by ONE commit-log CAS — a crash anywhere leaves the
+        # whole previous table and a concurrent duplicate run surfaces
+        # as ConcurrentCommitError, the same guarantees the whole-table
+        # versioned sink gave, plus O(delta)-bucket writes per tick.
         from osmart_etl_spark.io.sinks import merge_upsert_partitioned
 
         merge_upsert_partitioned(

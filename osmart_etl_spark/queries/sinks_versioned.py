@@ -80,8 +80,8 @@ def upsert_versioned_batch_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: batch merges shuffle on the upsert key only; the diff joins
     two committed versions partition-pruned to nothing extra — and at
-    100 TB the same protocol applies per bucket directory of
-    merge_upsert_partitioned (io/sinks.py) rather than whole-table.
+    100 TB merge_upsert_partitioned (io/sinks.py) runs the same protocol
+    with versions that rewrite only the touched buckets.
     """
     from osmart_etl_spark.io.atomic import read_committed, upsert_versioned
 

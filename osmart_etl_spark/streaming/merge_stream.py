@@ -7,14 +7,15 @@ Why this composition is the right streaming MERGE:
 - each micro-batch is one keep-latest merge of O(|batch|) rows into the
   buckets its keys hash to — the O(delta) property carries over
   unchanged from the batch sink;
-- the sink's per-bucket CAS publish makes a foreachBatch RETRY safe:
-  a batch replayed after a mid-publish crash re-merges against
-  whatever subset of buckets the first attempt already committed, and
-  keep-latest (order_col wins, key-unique) makes the replay converge
-  to the same state — the same exactly-once-by-idempotence argument as
-  ``streaming/hll_stream.py``'s MAX-merge, with the versioned bucket
-  protocol supplying the crash-safety the old in-place overwrite
-  lacked;
+- the sink publishes each batch as ONE CAS commit of a table-level
+  manifest, which makes a foreachBatch RETRY safe: a batch replayed
+  after a crash re-merges against the whole old table (the crashed
+  attempt published nothing) or, if the commit landed, against its own
+  result, and keep-latest (order_col wins, key-unique) makes the replay
+  converge to the same state — the same exactly-once-by-idempotence
+  argument as ``streaming/hll_stream.py``'s MAX-merge, with the
+  versioned protocol supplying the crash-safety an in-place overwrite
+  lacks;
 - ordering ACROSS micro-batches needs no coordination because
   keep-latest is by ``order_col`` (event time), not arrival time: a
   late row with an older timestamp loses the merge no matter which

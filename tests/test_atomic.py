@@ -278,3 +278,40 @@ def test_sidecar_rides_the_commit(spark, tmp_path):
     assert read_sidecar(spark, t) == {"max_key_rows": 9, "n_keys": 3}
     # full-replace commit left {2}; the upsert merged {3} on top
     assert {r["k"] for r in read_committed(spark, t).collect()} == {2, 3}
+
+
+def test_failed_gc_is_logged_and_commit_stands(spark, tmp_path, monkeypatch, caplog):
+    """GC after a publish is best-effort: a failing sweep is logged with
+    its traceback instead of swallowed, and the commit still returns its
+    sequence and reads back."""
+    import logging
+
+    def broken_gc(*a, **kw):
+        raise RuntimeError("gc boom")
+
+    t = str(tmp_path / "tbl")
+    monkeypatch.setattr(atomic, "_gc", broken_gc)
+    with caplog.at_level(logging.WARNING, logger="osmart_etl_spark.io.atomic"):
+        assert commit_version(spark, _mk(spark, [(1, "a", 10)]), t) == 1
+    assert any(
+        r.levelno == logging.WARNING and r.exc_info and "gc boom" in str(r.exc_info[1])
+        for r in caplog.records
+    )
+    assert _rows(read_committed(spark, t)) == [(1, "a", 10)]
+
+
+def test_manifest_bucket_runs_roundtrip():
+    """The manifest stores each version's buckets as runs of consecutive
+    ids; expanding the runs gives back exactly the bucket -> version map."""
+    import random
+
+    from osmart_etl_spark.io.atomic import manifest_buckets, manifest_runs
+
+    assert manifest_runs({0: "a", 1: "a", 2: "b", 3: "a", 5: "a"}) == {
+        "a": [[0, 1], [3, 3], [5, 5]],
+        "b": [[2, 2]],
+    }
+    rng = random.Random(7)
+    for _ in range(200):
+        held = {b: rng.choice("abc") for b in rng.sample(range(64), rng.randint(0, 64))}
+        assert manifest_buckets({"buckets": manifest_runs(held)}) == held

@@ -84,7 +84,7 @@ def _file_snapshot(path):
     snap = {}
     for root, _dirs, files in os.walk(path):
         for f in files:
-            if f.startswith(("_", ".")) or "_layout" in root:
+            if f.startswith(("_", ".")):
                 continue
             p = os.path.join(root, f)
             rel = os.path.relpath(p, path)
@@ -145,7 +145,7 @@ def test_merge_upsert_touches_bounded_buckets(spark, tmp_path):
     after = _file_snapshot(path)
     touched_dirs = {f"__bucket={b}" for b in touched}
     for rel, sig in before.items():
-        bucket_dir = rel.split("/")[0]
+        bucket_dir = rel.split("/")[1]  # _v-<token>/__bucket=<b>/part-*
         if bucket_dir not in touched_dirs:
             assert after.get(rel) == sig, f"untouched file changed: {rel}"
 
@@ -222,6 +222,33 @@ def _write_legacy_merge_table(spark, path, df, keys, order_col, n_buckets):
     )
 
 
+def _write_per_bucket_table(spark, path, df, keys, order_col, n_buckets):
+    """Simulate the layout before the table-level manifest: one commit
+    log per `bucket=<b>` dir and a `_layout` JSON file at the root."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from osmart_etl_spark.io.atomic import commit_version
+
+    bucket = F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(n_buckets))
+    for b in range(n_buckets):
+        commit_version(spark, df.filter(bucket == b), f"{path}/bucket={b}")
+    layout = {"n_buckets": n_buckets, "keys": list(keys), "order_col": order_col}
+    with open(f"{path}/_layout", "w") as fh:
+        json.dump(layout, fh)
+
+
+def _files(root):
+    import os
+
+    return sorted(
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _dirs, names in os.walk(root)
+        for f in names
+    )
+
+
 def test_old_layouts_fail_loudly_and_keep_their_files(spark, tmp_path):
     """Tables older than the commit log — a plain parquet dir, and a
     merge table of plain `__bucket=<b>` dirs with a Spark-written
@@ -233,37 +260,55 @@ def test_old_layouts_fail_loudly_and_keep_their_files(spark, tmp_path):
     from osmart_etl_spark.io.atomic import upsert_versioned
     from osmart_etl_spark.io.sinks import merge_upsert_partitioned, read_merge_table
 
-    def files(root):
-        return sorted(
-            os.path.relpath(os.path.join(d, f), root)
-            for d, _dirs, names in os.walk(root)
-            for f in names
-        )
-
     schema = "k1 int, k2 int, v double, ver int"
     rows = spark.createDataFrame([(i, i % 3, float(i), 1) for i in range(20)], schema)
     batch = spark.createDataFrame([(0, 0, 9.0, 2)], schema)
     plain, merge = str(tmp_path / "plain_tbl"), str(tmp_path / "merge_tbl")
     rows.write.parquet(plain)
     _write_legacy_merge_table(spark, merge, rows, ["k1", "k2"], "ver", 4)
-    before = {p: files(p) for p in (plain, merge)}
+    before = {p: _files(p) for p in (plain, merge)}
 
     with pytest.raises(RuntimeError, match="outside the commit log"):
         upsert_versioned(spark, batch, plain, ["k1", "k2"], "ver")
-    with pytest.raises(RuntimeError, match="predates per-bucket commit logs"):
+    with pytest.raises(RuntimeError, match="no table manifest"):
         merge_upsert_partitioned(spark, batch, merge, ["k1", "k2"], "ver", n_buckets=4)
-    with pytest.raises(RuntimeError, match="predates per-bucket commit logs"):
+    with pytest.raises(RuntimeError, match="no table manifest"):
         read_merge_table(spark, merge)
     for p, names in before.items():
         assert "_commits" not in os.listdir(p)
-        assert files(p) == names
+        assert _files(p) == names
     assert spark.read.parquet(plain).count() == 20
+
+
+def test_per_bucket_table_is_refused_and_keeps_its_files(spark, tmp_path):
+    """A merge table from before the table-level manifest (one commit
+    log per `bucket=<b>` dir, a `_layout` file) is refused by the writer
+    and the reader, and keeps every file: merging over it would shadow
+    all of its rows."""
+    import os
+
+    from osmart_etl_spark.io.sinks import merge_upsert_partitioned, read_merge_table
+
+    schema = "k1 int, k2 int, v double, ver int"
+    rows = spark.createDataFrame([(i, i % 3, float(i), 1) for i in range(20)], schema)
+    path = str(tmp_path / "per_bucket_tbl")
+    _write_per_bucket_table(spark, path, rows, ["k1", "k2"], "ver", 4)
+    before = _files(path)
+
+    batch = spark.createDataFrame([(0, 0, 9.0, 2)], schema)
+    with pytest.raises(RuntimeError, match="no table manifest"):
+        merge_upsert_partitioned(spark, batch, path, ["k1", "k2"], "ver", n_buckets=4)
+    with pytest.raises(RuntimeError, match="no table manifest"):
+        read_merge_table(spark, path)
+    assert "_commits" not in os.listdir(path)
+    assert _files(path) == before
 
 
 @pytest.mark.slow
 def test_missing_layout_on_foreign_table_still_fails_loudly(spark, tmp_path):
-    """The FileNotFoundError heal must NOT claim a plain parquet dir:
-    only a table made of bucket dirs (this sink's layout) is healable."""
+    """A plain parquet dir (no commit log, no manifest) is foreign: the
+    merge sink refuses it and keeps its files instead of publishing a
+    table that would shadow its rows."""
     import pytest
 
     from osmart_etl_spark.io.sinks import merge_upsert_partitioned
@@ -271,69 +316,13 @@ def test_missing_layout_on_foreign_table_still_fails_loudly(spark, tmp_path):
     path = str(tmp_path / "foreign_tbl")
     spark.createDataFrame(
         [(1, 2.0, 1)], "k1 int, v double, ver int"
-    ).write.parquet(path)  # plain parquet, no _layout, no bucket dirs
+    ).write.parquet(path)  # plain parquet, no _commits, no manifest
+    before = _files(path)
 
     batch = spark.createDataFrame([(1, 3.0, 2)], "k1 int, v double, ver int")
-    with pytest.raises(FileNotFoundError, match="no readable layout"):
+    with pytest.raises(RuntimeError, match="no table manifest"):
         merge_upsert_partitioned(spark, batch, path, ["k1"], "ver", n_buckets=4)
-
-
-@pytest.mark.slow
-def test_empty_layout_sidecar_self_heals(spark, tmp_path):
-    """Round-12 (ADVICE low): a creator crash between the _layout
-    sidecar's exclusive create and its content write used to wedge the
-    table forever (every reader/writer spun the retry then raised a
-    generic FileNotFoundError). Past the mtime TTL the empty file is
-    swept and a writer recreates it from its own layout; inside the TTL
-    the distinct EmptyLayoutError names the repair."""
-    import os
-    import time
-
-    import pytest
-
-    from osmart_etl_spark.io.sinks import (
-        EmptyLayoutError,
-        _read_layout,
-        merge_upsert_partitioned,
-        read_merge_table,
-    )
-
-    path = str(tmp_path / "wedged_tbl")
-    base = spark.createDataFrame(
-        [(i, float(i), 1) for i in range(20)], "k1 int, v double, ver int"
-    )
-    merge_upsert_partitioned(spark, base, path, ["k1"], "ver", n_buckets=4)
-    sidecar = os.path.join(path, "_layout")
-
-    # (a) within the TTL: distinct error, file NOT deleted (live creator?)
-    good = open(sidecar).read()
-    open(sidecar, "w").close()  # truncate to empty
-    with pytest.raises(EmptyLayoutError, match="mid-write"):
-        _read_layout(spark, sidecar, dead_ttl_s=3600.0)
-    assert os.path.exists(sidecar)
-
-    # (b) past the TTL: reader sweeps the dead file and says so
-    old = time.time() - 7200
-    os.utime(sidecar, (old, old))
-    with pytest.raises(EmptyLayoutError, match="removed"):
-        read_merge_table(spark, path)
-    assert not os.path.exists(sidecar)
-
-    # (b2) the sidecar is GONE (reader swept it): a writer must heal
-    # via the FileNotFoundError path — the table is all bucket dirs
-    batch0 = spark.createDataFrame([(1, 111.0, 2)], "k1 int, v double, ver int")
-    merge_upsert_partitioned(spark, batch0, path, ["k1"], "ver", n_buckets=4)
-    assert open(sidecar).read() == good
-
-    # (c) writer self-heal end-to-end: empty+stale sidecar, ONE merge
-    # call sweeps, recreates the layout, and applies the batch
-    open(sidecar, "w").close()
-    os.utime(sidecar, (old, old))
-    batch = spark.createDataFrame([(0, 999.0, 2)], "k1 int, v double, ver int")
-    merge_upsert_partitioned(spark, batch, path, ["k1"], "ver", n_buckets=4)
-    assert open(sidecar).read() == good  # layout re-pinned identically
-    out = {r["k1"]: r["v"] for r in read_merge_table(spark, path).collect()}
-    assert out[0] == 999.0 and len(out) == 20
+    assert _files(path) == before
 
 
 @pytest.mark.slow
@@ -422,14 +411,12 @@ def test_observe_dq_single_pass(spark, tmp_path):
     assert got["oob_value"] == want_oob
 
 
-@pytest.mark.slow
 def test_merge_upsert_crash_before_publish_keeps_previous_state(
     spark, tmp_path, monkeypatch
 ):
-    """Crash-injection (round 10): a failure after staging but BEFORE
-    any bucket publish must leave the table exactly as it was — the
-    in-place dynamic overwrite this sink replaced could fail the job
-    AFTER dropping partitions."""
+    """Crash-injection: a failure after the new version is written but
+    BEFORE its publish must leave the table exactly as it was — the
+    unpublished version is never read."""
     import osmart_etl_spark.io.atomic as atomic
     from osmart_etl_spark.io.sinks import merge_upsert_partitioned
 
@@ -444,24 +431,22 @@ def test_merge_upsert_crash_before_publish_keeps_previous_state(
     before = _merge_rows(spark, path)
 
     def boom(*a, **kw):
-        raise RuntimeError("injected crash before first bucket publish")
+        raise RuntimeError("injected crash before publish")
 
     monkeypatch.setattr(atomic, "publish_staged", boom)
-    try:
+    with pytest.raises(RuntimeError, match="injected crash"):
         merge_upsert_partitioned(spark, batch, path, ["k1", "k2"], "ver", n_buckets=8)
-        raise AssertionError("injected crash did not propagate")
-    except RuntimeError:
-        pass
     monkeypatch.undo()
     assert _merge_rows(spark, path) == before  # nothing lost, nothing half-applied
 
 
 @pytest.mark.slow
 def test_merge_upsert_crash_mid_publish_is_replayable(spark, tmp_path, monkeypatch):
-    """Crash-injection: a failure BETWEEN bucket publishes leaves every
-    bucket at a COMPLETE version (some old, some new — never partial or
-    missing), and replaying the same batch converges to the intended
-    final state (keep-latest idempotence)."""
+    """Crash-injection inside the single publish (after the version and
+    its manifest are written, at the commit-log read that precedes the
+    CAS): the whole old table stays readable — no bucket moves to the
+    new version alone — and replaying the same batch converges to the
+    intended final state (keep-latest idempotence)."""
     import osmart_etl_spark.io.atomic as atomic
     from osmart_etl_spark.io.sinks import merge_upsert_partitioned, upsert_keep_latest
 
@@ -473,29 +458,28 @@ def test_merge_upsert_crash_mid_publish_is_replayable(spark, tmp_path, monkeypat
         [(i, 0, -7.0, 2) for i in range(200)], "k1 int, k2 int, v double, ver int"
     )
     merge_upsert_partitioned(spark, base, path, ["k1", "k2"], "ver", n_buckets=8)
+    before = _merge_rows(spark, path)
 
-    real = atomic.publish_staged
-    calls = {"n": 0}
+    real_publish, real_log = atomic.publish_staged, atomic._commit_log
+    state = {"publishing": False}
 
-    def crash_on_second(*a, **kw):
-        calls["n"] += 1
-        if calls["n"] >= 2:
-            raise RuntimeError("injected crash after first bucket publish")
-        return real(*a, **kw)
+    def publish(*a, **kw):
+        state["publishing"] = True
+        return real_publish(*a, **kw)
 
-    monkeypatch.setattr(atomic, "publish_staged", crash_on_second)
-    try:
+    def die_in_publish(spark_, table):
+        if state["publishing"]:
+            raise RuntimeError("injected crash inside publish")
+        return real_log(spark_, table)
+
+    monkeypatch.setattr(atomic, "publish_staged", publish)
+    monkeypatch.setattr(atomic, "_commit_log", die_in_publish)
+    with pytest.raises(RuntimeError, match="injected crash"):
         merge_upsert_partitioned(spark, batch, path, ["k1", "k2"], "ver", n_buckets=8)
-        raise AssertionError("injected crash did not propagate")
-    except RuntimeError:
-        pass
     monkeypatch.undo()
 
-    # table still fully readable: every key present exactly once, each
-    # bucket at a complete (old or new) version
-    mid = _merge_rows(spark, path)
-    assert set(mid) == {(i, 0) for i in range(200)}
-    assert all(val in ((float(k1), 1), (-7.0, 2)) for (k1, _), val in mid.items())
+    # the whole old table, every key exactly once
+    assert _merge_rows(spark, path) == before
 
     # replaying the SAME batch converges to the intended final state
     merge_upsert_partitioned(spark, batch, path, ["k1", "k2"], "ver", n_buckets=8)
@@ -507,9 +491,9 @@ def test_merge_upsert_crash_mid_publish_is_replayable(spark, tmp_path, monkeypat
 
 
 def test_merge_upsert_one_file_per_bucket_version(spark, tmp_path):
-    """Small-file control: each bucket's version directory holds ~one
-    data file (the staged write shuffles one task per touched bucket),
-    not one file per upstream write task."""
+    """Small-file control: each bucket directory of a version holds one
+    data file (a bucket hashes to one write task), not one file per
+    upstream write task."""
     import glob
 
     from osmart_etl_spark.io.sinks import merge_upsert_partitioned
@@ -519,17 +503,85 @@ def test_merge_upsert_one_file_per_bucket_version(spark, tmp_path):
         [(i, 0, float(i), 1) for i in range(300)], "k1 int, k2 int, v double, ver int"
     ).repartition(16)  # many upstream tasks
     merge_upsert_partitioned(spark, base, path, ["k1", "k2"], "ver", n_buckets=8)
-    for vdir in glob.glob(f"{path}/bucket=*/_v-*"):
-        data = [f for f in glob.glob(f"{vdir}/part-*") if not f.endswith(".crc")]
-        assert len(data) == 1, (vdir, data)
+    bdirs = glob.glob(f"{path}/_v-*/__bucket=*")
+    assert len(bdirs) == 8
+    for bdir in bdirs:
+        data = [f for f in glob.glob(f"{bdir}/part-*") if not f.endswith(".crc")]
+        assert len(data) == 1, (bdir, data)
+
+
+def test_merge_read_keeps_its_snapshot_across_a_publish(spark, tmp_path):
+    """Snapshot isolation: a `read_merge_table` DataFrame taken before a
+    publish still returns all the old rows after it, and a fresh read
+    returns all the new ones — never a mix of versions across buckets."""
+    from osmart_etl_spark.io.sinks import merge_upsert_partitioned, read_merge_table
+
+    schema = "k1 int, k2 int, v double, ver int"
+    path = str(tmp_path / "merge_tbl")
+    base = spark.createDataFrame([(i, 0, float(i), 1) for i in range(100)], schema)
+    batch = spark.createDataFrame([(i, 0, -1.0, 2) for i in range(100)], schema)
+    merge_upsert_partitioned(spark, base, path, ["k1", "k2"], "ver", n_buckets=8)
+
+    snap = read_merge_table(spark, path)
+    touched = merge_upsert_partitioned(spark, batch, path, ["k1", "k2"], "ver", n_buckets=8)
+    assert len(touched) == 8
+    assert sorted((r["k1"], r["v"]) for r in snap.collect()) == [
+        (i, float(i)) for i in range(100)
+    ]
+    assert {r["ver"] for r in read_merge_table(spark, path).collect()} == {2}
+
+
+def test_merge_gc_keeps_untouched_buckets_and_bounds_files(spark, tmp_path):
+    """Bounded GC: after 10 merges that each touch 1-2 of 8 buckets,
+    the rows of buckets no recent merge touched survive (their data
+    dirs sit in retired versions the manifest still names), and the
+    data files on disk number at most (keep_versions + 1) x n_buckets."""
+    import glob
+
+    from pyspark.sql import functions as F
+
+    from osmart_etl_spark.io.sinks import merge_upsert_partitioned, read_merge_table
+
+    schema = "k1 int, k2 int, v double, ver int"
+    path = str(tmp_path / "merge_tbl")
+    n_buckets, keep_versions = 8, 2
+    base = spark.createDataFrame([(i, 0, float(i), 1) for i in range(200)], schema)
+    merge_upsert_partitioned(spark, base, path, ["k1", "k2"], "ver", n_buckets=n_buckets)
+    bucket_of = {
+        r["k1"]: r["b"]
+        for r in base.select(
+            "k1", F.pmod(F.hash("k1", "k2"), F.lit(n_buckets)).alias("b")
+        ).collect()
+    }
+    by_bucket: dict = {}
+    for k, b in sorted(bucket_of.items()):
+        by_bucket.setdefault(b, []).append(k)
+
+    expect = {k: (float(k), 1) for k in range(200)}
+    for i in range(10):
+        # merge i touches bucket i % 3, plus bucket 3 on even merges
+        keys = by_bucket[i % 3][:2] + (by_bucket[3][:1] if i % 2 == 0 else [])
+        batch = spark.createDataFrame([(k, 0, -float(i), 2 + i) for k in keys], schema)
+        touched = merge_upsert_partitioned(
+            spark, batch, path, ["k1", "k2"], "ver", n_buckets=n_buckets
+        )
+        assert 1 <= len(touched) <= 2
+        expect.update({k: (-float(i), 2 + i) for k in keys})
+
+    got = {r["k1"]: (r["v"], r["ver"]) for r in read_merge_table(spark, path).collect()}
+    assert got == expect  # buckets 4..7 were written once, by the first merge
+    data = [
+        f for f in glob.glob(f"{path}/_v-*/__bucket=*/part-*") if not f.endswith(".crc")
+    ]
+    assert len(data) <= (keep_versions + 1) * n_buckets, sorted(data)
 
 
 @pytest.mark.slow
 def test_merge_upsert_concurrent_commit_detected(spark, tmp_path, monkeypatch):
-    """Lost-update guard: each bucket publish is a CAS against the seq
-    snapshotted when the merge READ that bucket — a writer committing
-    in between surfaces as ConcurrentCommitError (retry converges),
-    never a silent overwrite of the racer's rows."""
+    """Lost-update guard: the publish is a CAS against the seq the
+    merge read — a writer committing in between surfaces as
+    ConcurrentCommitError (retry converges), never a silent overwrite
+    of the racer's rows."""
     import osmart_etl_spark.io.atomic as atomic
     from osmart_etl_spark.io.atomic import ConcurrentCommitError
     from osmart_etl_spark.io.sinks import merge_upsert_partitioned

@@ -211,13 +211,12 @@ def test_sales_pipeline_crash_mid_publish_keeps_previous_version(
     calls = {"n": 0}
 
     def die_at_publish(spark_, base):
-        # Crash between the SINK's staging and publish. The sink is now
-        # the bucket-granular merge table (round 13), whose commit-log
-        # reads happen at per-bucket dirs `<sink>/bucket=<b>`; gate on
-        # those and die on the SECOND call for the run's touched bucket:
-        # the first is _bucket_snapshot's current_version read, the
-        # second is inside publish_staged — i.e. AFTER staging.
-        if str(base).rstrip("/").startswith(f"{sink}/bucket="):
+        # Crash between the SINK's staging and publish. The sink is the
+        # bucket-granular merge table, whose one commit log sits at the
+        # sink root; die on the SECOND read of it: the first is the
+        # merge's snapshot (current_version), the second is inside
+        # publish_staged — i.e. AFTER the new version is written.
+        if str(base).rstrip("/") == sink:
             calls["n"] += 1
             if calls["n"] >= 2:
                 raise Boom()
@@ -514,8 +513,6 @@ def test_noop_tick_commits_nothing_and_launches_few_jobs(spark, tmp_path):
     committed version, and its fixed cost must stay small — watermark
     reads launch no Spark job, and an empty stock-points slice stops
     after its histogram aggregate."""
-    import glob
-
     from osmart_etl_spark.io.atomic import current_version
     from osmart_etl_spark.pipelines.orchestrator import run_etl
 
@@ -542,7 +539,7 @@ def test_noop_tick_commits_nothing_and_launches_few_jobs(spark, tmp_path):
         tables = [
             paths["watermark_path"], paths["points_path"],
             f"{paths['ventas_path']}_accum",
-            *sorted(glob.glob(f"{paths['ventas_path']}/bucket=*")),
+            paths["ventas_path"],
         ]
         return {t: current_version(spark, t) for t in tables}
 
@@ -562,6 +559,56 @@ def test_noop_tick_commits_nothing_and_launches_few_jobs(spark, tmp_path):
     assert second.watermarks and all(v is None for v in second.watermarks.values())
     assert versions() == before
     assert jobs <= 12, f"no-op tick launched {jobs} Spark jobs"
+
+
+@pytest.mark.xfail(
+    strict=True,
+    raises=AssertionError,
+    reason="raw-log crash window: the raw log is appended before the "
+    "watermark advances, so a crash between the two re-appends the slice",
+)
+def test_raw_log_crash_before_watermark_does_not_duplicate(spark, tmp_path, monkeypatch):
+    """A crash after the raw-movements append but before its watermark
+    advances must not leave the slice twice in the raw log once the
+    next run has gone through. Today it does: nothing dedups the
+    append on `id`. This test pins that defect until it is fixed."""
+    from osmart_etl_spark.pipelines.inventory import run_raw_movements_incremental
+    from osmart_etl_spark.streaming.incremental import WatermarkStore
+
+    kinds = ["purchase", "click", "signup", "error"]
+    events = str(tmp_path / "events")
+    spark.createDataFrame(
+        [
+            (i, dt.datetime(2025, 1, 1 + i // 12, i % 12), i % 5, kinds[i % 4],
+             float(i), "{}")
+            for i in range(36)
+        ],
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string",
+    ).write.parquet(events)
+    paths = {
+        "events_path": events,
+        "raw_log_path": str(tmp_path / "raw"),
+        "watermark_path": str(tmp_path / "wm"),
+    }
+
+    real_set = WatermarkStore.set
+    armed = [True]
+
+    def set_once(self, pipeline, store, value):
+        if pipeline == "raw_movements" and armed[0]:
+            armed[0] = False
+            raise RuntimeError("injected crash after the raw-log append")
+        return real_set(self, pipeline, store, value)
+
+    monkeypatch.setattr(WatermarkStore, "set", set_once)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_raw_movements_incremental(spark, **paths)
+    assert run_raw_movements_incremental(spark, **paths) is not None
+
+    landed = sorted(r[0] for r in spark.read.parquet(events).select("event_id").collect())
+    raw = sorted(r[0] for r in spark.read.parquet(paths["raw_log_path"]).select("id").collect())
+    assert raw == landed
 
 
 @pytest.mark.slow
@@ -898,20 +945,22 @@ def test_sales_publish_is_bucket_incremental(spark, tmp_path, events_parquet):
             F.lit(8),
         ).alias("b")
     ).first()["b"]
-    pfx = f"bucket={touched}/"
 
-    untouched_before = {
-        p: h for p, h in before.items()
-        if p.startswith("bucket=") and not p.startswith(pfx)
-    }
-    untouched_after = {
-        p: h for p, h in after.items()
-        if p.startswith("bucket=") and not p.startswith(pfx)
-    }
+    def bucket_files(snap, keep):
+        # data files sit at _v-<token>/__bucket=<b>/part-*
+        return {
+            p: h for p, h in snap.items()
+            if p.count("/") == 2 and keep(p.split("/")[1])
+        }
+
+    untouched = lambda d: d.startswith("__bucket=") and d != f"__bucket={touched}"
+    untouched_before = bucket_files(before, untouched)
     assert untouched_before, "expected >1 bucket before the tick"
-    assert untouched_after == untouched_before  # byte-identical, no new files
+    # byte-identical, no new files
+    assert bucket_files(after, untouched) == untouched_before
     # and the touched bucket DID gain a new committed version
-    assert any(p.startswith(pfx) and p not in before for p in after)
+    new_files = bucket_files(after, lambda d: d == f"__bucket={touched}").keys() - before.keys()
+    assert new_files
 
 
 def test_inventory_imports_without_session():
@@ -936,62 +985,3 @@ def test_inventory_imports_without_session():
     )
     assert out.returncode == 0, out.stderr
     assert "imported" in out.stdout
-
-
-@pytest.mark.slow
-def test_writer_bucket_shard_partitions_exactly(spark):
-    """VERDICT r12 #5: the writer shards are pairwise-disjoint, cover
-    the batch exactly, and use the SINK'S OWN bucket hash — so W
-    sharded writers touch disjoint bucket directories and the
-    fully-contended overlap storm runs conflict-free."""
-    from osmart_etl_spark.io.sinks import (
-        merge_upsert_partitioned,
-        writer_bucket_shard,
-    )
-
-    keys = ["k1", "k2"]
-    df = spark.range(500).select(
-        F.col("id").cast("int").alias("k1"),
-        (F.col("id") % 7).cast("int").alias("k2"),
-        F.col("id").cast("double").alias("v"),
-        F.lit(1).cast("int").alias("ver"),
-    )
-    n_writers, n_buckets = 4, 16
-    shards = [
-        writer_bucket_shard(df, keys, w, n_writers, n_buckets=n_buckets)
-        for w in range(n_writers)
-    ]
-    counts = [s.count() for s in shards]
-    assert sum(counts) == 500  # exact cover
-    assert all(c > 0 for c in counts)  # 16 buckets over 4 writers: all own some
-    # pairwise disjoint: distinct keys across the union == total
-    from functools import reduce
-
-    union = reduce(lambda a, b: a.unionByName(b), shards)
-    assert union.select(*keys).distinct().count() == df.select(*keys).distinct().count()
-    assert union.count() == 500
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="writer_id"):
-        writer_bucket_shard(df, keys, 4, 4)
-
-    # the shards really land in disjoint bucket dirs of ONE table: the
-    # touched-bucket sets returned by the sink are pairwise disjoint
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as tmp:
-        touched = [
-            set(
-                merge_upsert_partitioned(
-                    spark, s, f"{tmp}/tbl", keys, "ver", n_buckets=n_buckets
-                )
-            )
-            for s in shards
-        ]
-        for i in range(n_writers):
-            for j in range(i + 1, n_writers):
-                assert not (touched[i] & touched[j]), (i, j)
-        from osmart_etl_spark.io.sinks import read_merge_table
-
-        assert read_merge_table(spark, f"{tmp}/tbl").count() == 500
