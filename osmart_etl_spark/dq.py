@@ -4,9 +4,10 @@ The reference enforces correctness operationally: threshold quarantine
 with an audit reason + dedup key (dq_exclusions_csv.py), INT32 bounds
 assertions (seed_stock_points.py:134-149), and reconciliation of the
 replayed state against the live source of truth
-(stock_points_helpers.py:4-79). This module packages those checks as
-composable engine operators; the queries/dq.py entries exercise them
-against the DuckDB oracle.
+(stock_points_helpers.py:4-79). This module packages the quarantine
+and the reconciliation as composable engine operators (the bounds check
+is a filter plus an aggregate, inline in queries/dq.dq_bounds_offenders);
+the queries/dq.py entries exercise them against the DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -64,29 +65,6 @@ def quarantine(
         .withColumn("logged_at", F.current_timestamp())
     )
     return QuarantineResult(clean=clean, quarantined=quarantined)
-
-
-def assert_bounds(
-    df: DataFrame,
-    value_col: str,
-    group_col: str,
-    lo: int = -(2**31),
-    hi: int = 2**31 - 1,
-) -> DataFrame:
-    """P15 — range/overflow assertion: offenders grouped with
-    min/max/count (seed_stock_points.py:134-149). Returns the offender
-    report (empty == assertion holds); caller decides whether to raise.
-    """
-    v = F.col(value_col)
-    return (
-        df.filter((v < lo) | (v > hi))
-        .groupBy(group_col)
-        .agg(
-            F.min(v).alias("min_value"),
-            F.max(v).alias("max_value"),
-            F.count(F.lit(1)).alias("n_offending"),
-        )
-    )
 
 
 def reconcile(

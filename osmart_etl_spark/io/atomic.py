@@ -72,12 +72,14 @@ _MARKER_RE = re.compile(r"^(\d{8})-([0-9a-f]{12})$")
 _LOCK_RE = re.compile(r"^(\d{8})\.lock$")
 
 #: Manifest file of a version directory (io/sinks.merge_upsert_partitioned):
-#: ``{"layout": {...}, "schema": "<DDL>", "buckets": {token: [[lo, hi], ...]}}``
-#: lists every live bucket under the version whose directory holds it —
-#: this one for the buckets it rewrote, older ones for the rest — as runs
-#: of consecutive bucket ids (``manifest_buckets`` expands them). Bucket
-#: ``b`` of version ``token`` is ``bucket_dir(token, b)``. ``_gc`` keeps
-#: every bucket dir a retained version's manifest names.
+#: ``{"layout": {...}, "schema": "<DDL>", "buckets": {token: [[lo, hi], ...]},
+#: "watermarks": {writer: value}}`` lists every live bucket under the
+#: version whose directory holds it — this one for the buckets it rewrote,
+#: older ones for the rest — as runs of consecutive bucket ids
+#: (``manifest_buckets`` expands them), and each writer's watermark,
+#: carried forward by every commit. Bucket ``b`` of version ``token`` is
+#: ``bucket_dir(token, b)``. ``_gc`` keeps every bucket dir a retained
+#: version's manifest names.
 MANIFEST = "_manifest.json"
 #: Partition column of a merge version's data: Spark's ``partitionBy``
 #: writes bucket ``b`` to ``<version dir>/__bucket=<b>/``.

@@ -106,18 +106,3 @@ def write_zordered(
     )
 
 
-def file_stats(spark, path: str, cols: list[str]) -> DataFrame:
-    """Per-file row counts and min/max per column — the observable form
-    of the parquet footer stats that data skipping prunes on. Grouped
-    on ``input_file_name()`` so it works on any filesystem without
-    touching footers directly; one scan, one small aggregate (rows =
-    |files|). Use it to VERIFY a layout does what it claims: after
-    ``write_zordered`` the per-file min/max spans should be narrow in
-    every clustered dimension."""
-    df = spark.read.parquet(path)
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    for c in cols:
-        aggs.append(F.min(c).alias(f"min_{c}"))
-        aggs.append(F.max(c).alias(f"max_{c}"))
-    return df.groupBy(F.input_file_name().alias("file")).agg(*aggs)
-

@@ -26,6 +26,8 @@ the reference's (art_id,tienda_id,fecha) secondary index
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -81,6 +83,8 @@ def merge_upsert_partitioned(
     order_col: str,
     *,
     n_buckets: int = 64,
+    combine: Callable[[DataFrame | None, DataFrame], DataFrame] | None = None,
+    watermark: tuple[str, object, object] | None = None,
 ) -> list[int]:
     """MERGE-style upsert with O(delta) write cost (S7/S8 scale path).
 
@@ -94,13 +98,13 @@ def merge_upsert_partitioned(
     1. every key lives in bucket ``pmod(hash(keys…), n_buckets)`` — a
        deterministic function of the key, so a key never changes bucket;
     2. a batch reads back only the buckets its keys hash to, merges
-       keep-latest, and writes those buckets in ONE Spark job straight
-       into a new version directory ``_v-<token>/__bucket=<b>/`` (one
-       file per bucket);
+       them with the batch, and writes those buckets in ONE Spark job
+       straight into a new version directory ``_v-<token>/__bucket=<b>/``
+       (one file per bucket);
     3. the version's ``_manifest.json`` (``io/atomic.MANIFEST``) lists
        EVERY live bucket under the version whose directory holds it —
        this one for the touched buckets, older ones for the rest — plus
-       the layout and the table schema;
+       the layout, the table schema and the writers' watermarks;
     4. one ``io/atomic.publish_staged`` CAS on the sequence the merge
        read publishes it (the single-log, manifest-listed commit of
        Delta Lake and Iceberg). A crash before it leaves the whole old
@@ -108,7 +112,19 @@ def merge_upsert_partitioned(
        and a retry converges (keep-latest is idempotent). Readers
        resolve one manifest, so they see one cross-bucket snapshot.
 
-    Per-batch cost: O(|delta| + size of touched buckets) and one commit.
+    ``combine(old, new)`` replaces keep-latest: given the touched
+    buckets' rows (read once; None on the first write) and the batch, it
+    returns the rows those buckets hold next; buckets are re-derived
+    from the keys. A fold that is not idempotent (sums) pairs it with
+    ``watermark=(writer, expected, new)``: unless the manifest's
+    ``watermarks[writer]`` is ``expected`` (None when absent),
+    ``ConcurrentCommitError`` is raised before any Spark work; the
+    published manifest holds ``new``. Data and watermark are one commit
+    (Delta Lake's transaction ids), so each batch folds exactly once.
+    ``read_merge_watermark`` reads a writer's watermark.
+
+    Per-batch cost: O(|delta| + size of touched buckets) and one commit;
+    ``new`` is localCheckpointed unless it already is a checkpoint.
     With Delta Lake available the same call is one ``MERGE INTO``.
 
     The layout (n_buckets, key list, order column) lives in every
@@ -117,7 +133,9 @@ def merge_upsert_partitioned(
     seq 1 by CAS, which settles concurrent creators. A directory with
     entries but no commit log — a table written before the table-level
     manifest (``bucket=<b>`` dirs with a ``_layout`` sidecar) or any
-    foreign data — raises ``RuntimeError`` and keeps every file.
+    foreign data — raises ``RuntimeError`` and keeps every file, and so
+    does a ``watermark=`` call on a table whose manifest has no
+    ``watermarks`` map.
 
     Returns the sorted list of touched bucket ids.
     """
@@ -126,6 +144,7 @@ def merge_upsert_partitioned(
     from osmart_etl_spark.io.atomic import (
         BUCKET_COL,
         MANIFEST,
+        ConcurrentCommitError,
         _gc,
         _write_small_json,
         bucket_dir,
@@ -146,30 +165,39 @@ def merge_upsert_partitioned(
             "Changing n_buckets/keys re-homes keys to different buckets; "
             "rebuild the table instead."
         )
+    marks = manifest.get("watermarks") if manifest else {}
+    if watermark is not None:
+        writer, expected, new_mark = watermark
+        committed = _watermarks(base, manifest).get(writer)
+        if committed != expected:
+            raise ConcurrentCommitError(
+                f"{base}: watermark of {writer!r} is {committed!r}, "
+                f"this batch was extracted past {expected!r}"
+            )
+        marks = {**marks, writer: new_mark}
     bucket = F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(n_buckets))
     # ONE materialization of the incoming batch: the touched-bucket set
     # and the written rows must come from the same evaluation — a
     # nondeterministic source re-evaluated at write time could emit rows
     # into buckets absent from `touched`, silently losing pre-existing
-    # rows of those buckets.
-    bucketed = new.withColumn(BUCKET_COL, bucket).localCheckpoint(eager=True)
+    # rows of those buckets. A checkpoint already is one.
+    if not _is_checkpoint(new):
+        new = new.localCheckpoint(eager=True)
     # ≤ n_buckets small ints — a bounded driver-side read, not a data scan.
-    touched = sorted(r[0] for r in bucketed.select(BUCKET_COL).distinct().collect())
+    touched = sorted(r[0] for r in new.select(bucket).distinct().collect())
     if not touched:
         return []
 
     held = manifest_buckets(manifest) if manifest else {}
     old = [f"{base}/{bucket_dir(held[b], b)}" for b in touched if b in held]
-    merged = bucketed
-    if old:
-        # bucket dirs hold user columns only (the bucket is the dir);
-        # the manifest's schema spares a schema-inference job
-        old_rows = (
-            spark.read.schema(manifest["schema"])
-            .parquet(*old)
-            .withColumn(BUCKET_COL, bucket)
-        )
-        merged = upsert_keep_latest(old_rows, bucketed, keys, order_col)
+    # bucket dirs hold user columns only (the bucket is the dir); the
+    # manifest's schema spares a schema-inference job
+    old_rows = spark.read.schema(manifest["schema"]).parquet(*old) if old else None
+    if combine is None:
+        merged = new if old_rows is None else upsert_keep_latest(old_rows, new, keys, order_col)
+    else:
+        merged = combine(old_rows, new)
+    merged = merged.withColumn(BUCKET_COL, bucket)
     if seq == 0:
         # a crashed creator's dead lock on seq 1 would otherwise wedge
         # creation: _gc (TTL-gated) normally runs only after a commit
@@ -186,15 +214,14 @@ def merge_upsert_partitioned(
         .parquet(f"{base}/_v-{token}")
     )
     held.update(dict.fromkeys(touched, token))
-    _write_small_json(
-        spark,
-        f"{base}/_v-{token}/{MANIFEST}",
-        {
-            "layout": layout,
-            "schema": merged.drop(BUCKET_COL).schema.toDDL(),
-            "buckets": manifest_runs(held),
-        },
-    )
+    doc = {
+        "layout": layout,
+        "schema": merged.drop(BUCKET_COL).schema.toDDL(),
+        "buckets": manifest_runs(held),
+    }
+    if marks is not None:
+        doc["watermarks"] = marks
+    _write_small_json(spark, f"{base}/_v-{token}/{MANIFEST}", doc)
     publish_staged(spark, base, token, expected_seq=seq)
     return touched
 
@@ -227,6 +254,39 @@ def _snapshot(spark: SparkSession, base: str) -> tuple[int, dict | None]:
             "not a merge_upsert_partitioned table"
         )
     return cur[0], manifest
+
+
+def _is_checkpoint(df: DataFrame) -> bool:
+    """True when ``df`` is the rows of a materialized (local) checkpoint
+    as they are, so evaluating it twice reads the same rows."""
+    plan = df._jdf.queryExecution().logical()
+    return plan.getClass().getSimpleName() == "LogicalRDD" and plan.rdd().isCheckpointed()
+
+
+def _watermarks(base: str, manifest: dict | None) -> dict:
+    """The ``watermarks`` map of a merge table's manifest ({} before the
+    first commit)."""
+    if manifest is None:
+        return {}
+    if "watermarks" not in manifest:
+        raise RuntimeError(
+            f"{base}: the table manifest has no watermarks map, so it was "
+            "written before watermarks were committed with the data (a sales "
+            "table of that layout keeps its sums in a '<table>_accum' sibling) "
+            "and folding into it would count every applied batch again. "
+            "Rebuild it: delete both directories and run a backfill."
+        )
+    return manifest["watermarks"]
+
+
+def read_merge_watermark(spark: SparkSession, path: str, writer: str):
+    """``writer``'s committed watermark in a ``merge_upsert_partitioned``
+    table, or None when it has none: one commit-log listing and one
+    manifest read, no Spark job. Raises ``RuntimeError`` for a manifest
+    without a ``watermarks`` map, like ``watermark=`` does."""
+    base = path.rstrip("/")
+    _seq, manifest = _snapshot(spark, base)
+    return _watermarks(base, manifest).get(writer)
 
 
 def read_merge_table(spark: SparkSession, path: str) -> DataFrame:
@@ -347,12 +407,7 @@ def scd2_apply(
     return out
 
 
-def _additive_partial(
-    updates: DataFrame,
-    keys: list[str],
-    sum_cols: list[str],
-    max_cols: list[str] | None = None,
-):
+def _additive_partial(updates: DataFrame, keys: list[str], sum_cols: list[str]):
     """Per-key partial sums of a batch (map-side combined) with the
     accumulator types pinned ONCE. Convention: accumulated sums are
     0-based, not NULL-based (an all-NULL key stores 0) — applied
@@ -362,24 +417,13 @@ def _additive_partial(
     matching that incrementally would need a has-nonnull flag per
     column for no operational benefit. Without the cast-back, decimal
     sums widen by one digit per merge (28,2 → 29,2 → … → 38,2),
-    changing the stored schema every batch until the cap.
-
-    ``max_cols`` (round 12): keep-MAX accumulators alongside the sums —
-    MAX is the other commutative/associative/idempotent monoid an
-    incremental rollup needs (latest event time, high-water ids). NULLs
-    stay NULL until a value arrives (MAX ignores NULLs on both the
-    partial and the merge side), so an all-NULL key is distinguishable
-    from one that saw an epoch-zero value."""
-    max_cols = max_cols or []
+    changing the stored schema every batch until the cap."""
     partial = updates.groupBy(*keys).agg(
         *[F.coalesce(F.sum(F.col(c)), F.lit(0)).alias(c) for c in sum_cols],
-        *[F.max(F.col(c)).alias(c) for c in max_cols],
     )
     acc_types = {c: partial.schema[c].dataType.simpleString() for c in sum_cols}
     partial = partial.select(
-        *keys,
-        *[F.col(c).cast(acc_types[c]).alias(c) for c in sum_cols],
-        *max_cols,
+        *keys, *[F.col(c).cast(acc_types[c]).alias(c) for c in sum_cols]
     )
     return partial, acc_types
 
@@ -390,19 +434,15 @@ def _additive_merge(
     keys: list[str],
     sum_cols: list[str],
     acc_types: dict,
-    max_cols: list[str] | None = None,
 ) -> DataFrame:
     """Full-outer fold of a batch's partials into the aggregate table
     (one row per key ever — the compact thing a 100 TB event history
-    folds down to). Sum columns add; ``max_cols`` keep the greatest
-    value seen (F.greatest skips NULLs, so a one-sided key keeps its
-    side's value)."""
+    folds down to): sum columns add."""
     from functools import reduce
 
-    max_cols = max_cols or []
     p = partial.select(
         *[F.col(k).alias(f"__k_{k}") for k in keys],
-        *[F.col(c).alias(f"__u_{c}") for c in sum_cols + max_cols],
+        *[F.col(c).alias(f"__u_{c}") for c in sum_cols],
     )
     cond = reduce(
         lambda a, b: a & b,
@@ -416,10 +456,6 @@ def _additive_merge(
                 + F.coalesce(F.col(f"__u_{c}"), F.lit(0))
             ).cast(acc_types[c]).alias(c)
             for c in sum_cols
-        ],
-        *[
-            F.greatest(cur[c], F.col(f"__u_{c}")).alias(c)
-            for c in max_cols
         ],
     )
 
@@ -464,13 +500,14 @@ def merge_accumulate_versioned(
     batch_id: str | tuple[str, int],
     keep_versions: int = 8,
     max_retries: int = 10,
-    max_cols: list[str] | None = None,
 ) -> bool:
     """Exactly-once additive incremental-view maintenance: fold a batch's
-    per-key partial sums (and ``max_cols`` maxima) into a materialized
-    per-key aggregate table. The batch is reduced to per-key partials
-    first (map-side combine), then full-outer merged into the table,
-    which holds one row per key ever.
+    per-key partial sums into a materialized per-key aggregate table.
+    The batch is reduced to per-key partials first (map-side combine),
+    then full-outer merged into the table, which holds one row per key
+    ever. (The sales pipeline folds through ``merge_upsert_partitioned``'s
+    ``combine``/``watermark`` instead: its table is bucketed and carries
+    derived columns besides the sums.)
 
     Keep-latest upserts are naturally idempotent — re-applying a batch
     rewrites the same rows. Accumulation is NOT: re-adding a redelivered
@@ -497,7 +534,7 @@ def merge_accumulate_versioned(
       ledger) fully readable; replaying the batch is rejected by the
       committed ledger.
 
-    Ledger size (round 12): ``batch_id`` accepts two forms, with two
+    Ledger size: ``batch_id`` accepts two forms, with two
     growth laws —
 
     - ``(writer_id, seq)`` tuple: the ledger keeps ONE high-water-mark
@@ -537,20 +574,13 @@ def merge_accumulate_versioned(
     )
 
     base = table.rstrip("/")
-    partial, acc_types = _additive_partial(updates, keys, sum_cols, max_cols)
+    partial, acc_types = _additive_partial(updates, keys, sum_cols)
     jvm, fs, _ = _fs(spark, base)
 
     if isinstance(batch_id, tuple):
         writer_id, seq = str(batch_id[0]), int(batch_id[1])
     else:
         writer_id, seq = None, None
-
-    def _read_ledger(ver_dir: str) -> dict:
-        return _parse_ledger_json(spark, f"{ver_dir}/_ledger.json")
-
-    def _write_ledger(ver_dir: str, led: dict) -> None:
-        # private staging dir — plain create, no exclusivity needed
-        _write_small_json(spark, f"{ver_dir}/_ledger.json", {"v": 2, **led})
 
     def _is_dup(led: dict) -> bool:
         if writer_id is not None:
@@ -577,19 +607,19 @@ def merge_accumulate_versioned(
                 expected = 0
             else:
                 ver_dir = f"{base}/_v-{cur[1]}"
-                ledger = _read_ledger(ver_dir)
+                ledger = _parse_ledger_json(spark, f"{ver_dir}/_ledger.json")
                 if _is_dup(ledger):
                     return False
                 merged = _additive_merge(
-                    spark.read.parquet(ver_dir), partial, keys, sum_cols,
-                    acc_types, max_cols,
+                    spark.read.parquet(ver_dir), partial, keys, sum_cols, acc_types
                 )
                 new_ledger = _applied(ledger)
                 expected = cur[0]
             # staging reads the OLD version dir while writing the NEW one
             # — nothing pinned, a crash leaves the live table untouched.
             merged.write.mode("overwrite").parquet(stage)
-            _write_ledger(stage, new_ledger)
+            # private staging dir — plain create, no exclusivity needed
+            _write_small_json(spark, f"{stage}/_ledger.json", {"v": 2, **new_ledger})
         except Exception:  # noqa: BLE001 — snapshot/staging races are retryable
             # Under heavy contention the version dir this attempt reads
             # (dup check, merge input) can be GC'd by RACING winners

@@ -30,29 +30,6 @@ from pyspark.sql import functions as F
 from osmart_etl_spark.ops.text import normalized_text
 
 
-def char_shingles(df: DataFrame, id_col: str, text_col: str, k: int = 5) -> DataFrame:
-    """Distinct character k-gram shingles per document, over normalized
-    text. Output: (id, shingle). Short docs (<k chars) yield their whole
-    text as the single shingle.
-
-    Shape notes (measured 18s → ~2s at sf0.1): documents often arrive as
-    one file = one partition, so the explode is repartitioned first to
-    use every core; shingling happens inside ``transform`` over the index
-    array with per-doc ``array_distinct`` BEFORE the explode, so the
-    exploded rows carry only (id, 5-char shingle) — never the full
-    document text — and the global distinct shuffles the minimum.
-    """
-    from osmart_etl_spark.io.sources import default_parallelism
-
-    n_parts = default_parallelism(df.sparkSession)
-    base = df.repartition(n_parts).select(
-        F.col(id_col), shingle_array(F.col(text_col), k=k).alias("__sh")
-    )
-    # No global .distinct(): per-doc array_distinct already makes
-    # (id, shingle) unique, so the output is shuffle-free — a pure map.
-    return base.select(F.col(id_col), F.explode("__sh").alias("shingle"))
-
-
 def shingle_array(text_col, k: int = 5):
     """Column expression: distinct character k-gram shingles of the
     normalized text, as array<string>. Always ≥1 element (short docs
@@ -91,49 +68,6 @@ def _minhash_seed(k: int) -> tuple[int, int]:
 def base_shingle_hash(col):
     """Engine-portable 28-bit base hash: first 7 hex chars of md5."""
     return F.conv(F.substring(F.md5(col), 1, 7), 16, 10).cast("bigint")
-
-
-def minhash_signatures(shingles: DataFrame, id_col: str, num_hashes: int = 16) -> DataFrame:
-    """K independent minhashes per doc via a universal hash family over
-    ONE md5-derived base hash per shingle: signature_k = MIN over the
-    doc's shingles of (a_k·h + b_k) mod P. Output: (id, k, minhash).
-
-    Computed WIDE: one groupBy(id) evaluating all K min-aggregates
-    map-side, then unpivoted with ``stack`` (no shuffle). Two measured
-    pitfalls shaped this: exploding K seed rows per shingle shuffles K×
-    the shingle table (~10× slower at sf0.1), and hashing md5(k||s) per
-    seed costs K full digests where the universal family needs one.
-    """
-    h = base_shingle_hash(F.col("shingle"))
-    base = shingles.select(F.col(id_col), h.alias("__h"))
-    aggs = []
-    for k in range(num_hashes):
-        a, b = _minhash_seed(k)
-        aggs.append(
-            F.min((F.col("__h") * a + b) % MINHASH_P).alias(f"mh{k}")
-        )
-    wide = base.groupBy(id_col).agg(*aggs)
-    stack_args = ", ".join(f"{k}, mh{k}" for k in range(num_hashes))
-    return wide.selectExpr(
-        id_col, f"stack({num_hashes}, {stack_args}) AS (k, minhash)"
-    )
-
-
-def lsh_band_keys(signatures: DataFrame, id_col: str, rows_per_band: int = 4) -> DataFrame:
-    """Group the K signature rows into bands of R; band key = ordered
-    concat of the band's minhashes. Output: (id, band, band_key)."""
-    # floor division — a plain double-division cast would TRUNCATE in
-    # Spark but ROUND in DuckDB's double→int cast; floor is unambiguous.
-    banded = signatures.withColumn("band", F.floor(F.col("k") / rows_per_band).cast("int"))
-    return banded.groupBy(id_col, "band").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("k", "minhash"))),
-                lambda s: s["minhash"].cast("string"),
-            ),
-            ",",
-        ).alias("band_key")
-    )
 
 
 def minhash_band_keys(

@@ -20,22 +20,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def star_join(
-    fact: DataFrame, dims: list[tuple[DataFrame, list[str] | Column]], how: str = "inner"
-) -> DataFrame:
-    """J1 — multi-way fact↔dim equi-join with broadcast dims.
-
-    Ref: extract_stock_movements.sql:27-32 (historial ⋈ traspaso ⋈
-    detallet ⋈ nubecfg ⋈ usuario). Each dim is broadcast: the fact table
-    never shuffles, which is the difference between O(fact) and
-    O(fact shuffle) at 100 TB.
-    """
-    out = fact
-    for dim, on in dims:
-        out = out.join(F.broadcast(dim), on, how)
-    return out
-
-
 def theta_join(left: DataFrame, right: DataFrame, cond: Column, how: str = "inner") -> DataFrame:
     """J2 — non-equi join (e.g. ``t.sucOri != n.sucId``).
 

@@ -79,15 +79,3 @@ def conditional_override(df: DataFrame, mask: Column, assignments: dict[str, Col
     return df
 
 
-def sum_where(cond: Column, value: Column) -> Column:
-    """A1 — conditional-aggregation building block: SUM(CASE WHEN...).
-
-    Ref: extract_sicar_sales.sql:6-9 — per-sale payment split by method.
-    Partial (map-side) aggregation applies as with any hash agg.
-    """
-    return F.sum(F.when(cond, value).otherwise(F.lit(0)))
-
-
-def bounded_int32(col: Column) -> Column:
-    """P15 — INT32 range predicate (seed_stock_points.py:134-140)."""
-    return (col >= F.lit(-(2**31))) & (col <= F.lit(2**31 - 1))

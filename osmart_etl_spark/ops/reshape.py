@@ -22,11 +22,6 @@ def union_distinct(*frames: DataFrame) -> DataFrame:
     return reduce(lambda a, b: a.unionByName(b), frames).distinct()
 
 
-def union_all(*frames: DataFrame) -> DataFrame:
-    """U2/U3 — UNION ALL of disjoint-by-construction branches."""
-    return reduce(lambda a, b: a.unionByName(b), frames)
-
-
 def dedup_by_key(df: DataFrame, keys: list[str]) -> DataFrame:
     """U5 — drop_duplicates on a composite key (dq_exclusions_csv.py:46-49)."""
     return df.dropDuplicates(keys)

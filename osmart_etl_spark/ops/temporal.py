@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from osmart_etl_spark.ops.windows import change_points, running_total, shifted
+from osmart_etl_spark.ops.windows import change_points
 
 
 def date_spine(spark, start: Column | str, end: Column | str) -> DataFrame:
@@ -37,43 +37,6 @@ def scaffold_keys_by_calendar(
     """
     spine = date_spine(spark, start, end)
     return keys.crossJoin(F.broadcast(spine))
-
-
-def densify_daily(
-    daily_net: DataFrame,
-    keys: DataFrame,
-    spark,
-    start: str,
-    end: str,
-    key_cols: list[str],
-    date_col: str,
-    value_col: str,
-) -> DataFrame:
-    """U8/U9 — scaffold + left join + zero-fill.
-
-    Ref: seed_stock_points.py:92-102 (``reindex(columns=cal).fillna(0)``).
-    """
-    cells = scaffold_keys_by_calendar(keys, spark, start, end)
-    return (
-        cells.join(
-            daily_net.withColumnRenamed(date_col, "cal_date"),
-            key_cols + ["cal_date"],
-            "left",
-        )
-        .withColumn(value_col, F.coalesce(F.col(value_col), F.lit(0)))
-    )
-
-
-def sod_from_daily_net(
-    dense: DataFrame, key_cols: list[str], value_col: str = "net"
-) -> DataFrame:
-    """W3+W4 — start-of-day stock per key across the calendar.
-
-    EOD = cumulative net delta; SOD = prior day's EOD (0 on day one).
-    Ref: seed_stock_points.py:105-106.
-    """
-    dense = running_total(dense, key_cols, ["cal_date"], value_col, out="eod_stock")
-    return shifted(dense, key_cols, ["cal_date"], "eod_stock", out="sod_stock", default=0)
 
 
 def sparse_encode(sod: DataFrame, key_cols: list[str]) -> DataFrame:

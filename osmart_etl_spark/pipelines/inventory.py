@@ -243,7 +243,10 @@ def run_stock_points_incremental(
     def extract(spark_, last):
         mv = spark_.read.parquet(raw_log_path)
         if last is not None:
-            mv = mv.filter(F.to_date("fecha") > F.lit(last).cast("date"))
+            after = F.lit(last).cast("date")
+            # fecha_dia, the raw log's partition column, is to_date(fecha):
+            # its predicate prunes the scan to the days past the watermark
+            mv = mv.filter(F.col("fecha_dia") > after).filter(F.to_date("fecha") > after)
         if complete_days_before is not None:
             mv = mv.filter(F.to_date("fecha") < F.lit(complete_days_before))
         # ONE pass computes both the watermark and the slice's key
@@ -287,14 +290,14 @@ def run_stock_points_incremental(
 
     def load(batch: DataFrame) -> None:
         if jdbc:
-            # one evaluation feeding both sinks (see pipelines/sales.py)
+            # one evaluation feeds both sinks: the JDBC mirror gets the
+            # rows (and updated_at stamps) the lake commits
             batch = batch.localCheckpoint(eager=True)
-        # Round 7: atomic versioned sink (see pipelines/sales.py) —
-        # crash-safe publish, CAS against concurrent duplicate runs.
-        # Round 12: the tick's key-histogram summary rides in the commit
-        # sidecar — stats and state are one atomic publish, so any later
-        # consumer (monitoring, a backfill sizing its chunks) reads the
-        # skew profile without a data scan (io/atomic.read_sidecar).
+        # Atomic versioned sink: crash-safe publish, CAS against a
+        # concurrent duplicate run. The tick's key-histogram summary
+        # rides in the commit sidecar, so stats and state are one
+        # publish and a later reader gets the skew profile without a
+        # data scan (io/atomic.read_sidecar).
         upsert_versioned(
             spark, batch, points_path,
             keys=["art_id", "point_date"], order_col="updated_at",

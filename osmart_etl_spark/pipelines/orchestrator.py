@@ -44,6 +44,9 @@ def run_etl(
     with failure isolation — a failing store records its error and the
     run continues (ref: try/except-continue per store).
 
+    ``watermark_path`` holds the inventory stages' watermarks; sales
+    commits its own in the manifest of ``ventas_path``.
+
     ``jdbc_ventas`` / ``jdbc_points`` (optional {"url","table","driver"})
     forward to the respective pipelines' live-database landing — the
     full reference deployment shape, where every tick upserts into
@@ -60,8 +63,7 @@ def run_etl(
             "sales",
             lambda store: run_sales_incremental(
                 spark, events_path=events_path, sink_path=ventas_path,
-                watermark_path=watermark_path, tienda=store,
-                jdbc=jdbc_ventas,
+                tienda=store, jdbc=jdbc_ventas,
             ),
         ),
         (

@@ -29,25 +29,8 @@ from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import (
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 from osmart_etl_spark.io import atomic
-
-#: Row layout of the earlier parquet format of the watermark table (one
-#: row per pipeline/store). Only read, to upgrade an existing store.
-WATERMARK_SCHEMA = StructType(
-    [
-        StructField("pipeline", StringType(), False),
-        StructField("store", StringType(), False),
-        StructField("wm_value", StringType(), True),  # stringified watermark
-        StructField("updated_at", TimestampType(), True),
-    ]
-)
 
 _WM_FILE = "_watermarks.json"
 
@@ -65,10 +48,10 @@ class WatermarkStore:
     instead of losing an update. Values are stored stringified
     (timestamps ISO, ids decimal); parsing is the caller's contract.
 
-    A current version without ``_watermarks.json`` is the earlier
-    parquet format (``WATERMARK_SCHEMA`` rows); it is read once per call
-    and the next ``set`` rewrites it as JSON, so an upgraded lake keeps
-    its watermarks rather than re-extracting its whole history.
+    A current version without ``_watermarks.json`` holds the earlier
+    parquet rows (or foreign data): every read raises ``RuntimeError``
+    and keeps every file, rather than passing for an empty store whose
+    next run would re-extract the whole history.
     """
 
     def __init__(self, spark: SparkSession, path: str):
@@ -82,13 +65,15 @@ class WatermarkStore:
             return 0, {}
         ver = f"{self.path}/_v-{cur[1]}"
         _, fs, hpath = atomic._fs(self.spark, f"{ver}/{_WM_FILE}")
-        if fs.exists(hpath):
-            text = atomic._read_small_text(self.spark, f"{ver}/{_WM_FILE}")
-            return cur[0], json.loads(text)["wm"]
-        wm: dict[str, dict[str, str]] = {}
-        for r in self.spark.read.schema(WATERMARK_SCHEMA).parquet(ver).collect():
-            wm.setdefault(r["pipeline"], {})[r["store"]] = r["wm_value"]
-        return cur[0], wm
+        if not fs.exists(hpath):
+            raise RuntimeError(
+                f"{self.path}: committed version {cur[0]} has no {_WM_FILE} — "
+                "a watermark table in the earlier parquet format, or foreign "
+                "data. Refusing to read it as empty; rebuild the lake (delete "
+                "its sinks and this table, then run a backfill)."
+            )
+        text = atomic._read_small_text(self.spark, f"{ver}/{_WM_FILE}")
+        return cur[0], json.loads(text)["wm"]
 
     def _publish(self, seq: int, wm: dict[str, dict[str, str]]) -> None:
         if seq == 0:

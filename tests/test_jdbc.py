@@ -295,11 +295,10 @@ def test_sales_pipeline_lands_in_jdbc(spark, derby_url, tmp_path):
     events_path = str(tmp_path / "events")
     read_table(spark, SF_SMALL, "events").write.parquet(events_path)
     sink = str(tmp_path / "ventas")
-    wmp = str(tmp_path / "wm")
     jdbc = {"url": derby_url, "table": "ventas_limpias", "driver": DRIVER}
 
     wm1 = run_sales_incremental(
-        spark, events_path=events_path, sink_path=sink, watermark_path=wmp, jdbc=jdbc
+        spark, events_path=events_path, sink_path=sink, jdbc=jdbc
     )
     assert wm1 is not None
     new = spark.createDataFrame(
@@ -311,7 +310,7 @@ def test_sales_pipeline_lands_in_jdbc(spark, derby_url, tmp_path):
     )
     new.write.mode("append").parquet(events_path)
     wm3 = run_sales_incremental(
-        spark, events_path=events_path, sink_path=sink, watermark_path=wmp, jdbc=jdbc
+        spark, events_path=events_path, sink_path=sink, jdbc=jdbc
     )
     assert wm3 == wm1 + 2
 

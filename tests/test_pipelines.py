@@ -5,6 +5,7 @@ store, upsert sinks, DQ module — the reference's operational semantics
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 
@@ -14,6 +15,11 @@ from osmart_etl_spark.io.atomic import read_committed
 from osmart_etl_spark.io.sinks import read_merge_table
 
 from tests.conftest import SF_SMALL
+
+EVENTS_DDL = (
+    "event_id long, ts timestamp, user_id long, event_type string, "
+    "value double, props string"
+)
 
 
 @pytest.fixture()
@@ -25,6 +31,37 @@ def events_parquet(spark, tmp_path):
     p = str(tmp_path / "events")
     read_table(spark, SF_SMALL, "events").write.parquet(p)
     return p
+
+
+def sales_totals(df):
+    """{user_id: (efectivo_in, tarjeta_in, total_venta, last_event_id)} —
+    the raw columns a sales table must agree on with a one-shot extract."""
+    cols = ["efectivo_in", "tarjeta_in", "total_venta", "last_event_id"]
+    return {r["user_id"]: tuple(r[c] for c in cols) for r in df.collect()}
+
+
+@pytest.fixture()
+def small_events(spark, tmp_path):
+    """36 events over three days, five users and all four event kinds."""
+    kinds = ["purchase", "click", "signup", "error"]
+    p = str(tmp_path / "small_events")
+    spark.createDataFrame(
+        [
+            (i, dt.datetime(2025, 1, 1 + i // 12, i % 12), i % 5, kinds[i % 4],
+             float(i), "{}")
+            for i in range(36)
+        ],
+        EVENTS_DDL,
+    ).write.parquet(p)
+    return p
+
+
+def append_events(spark, path, rows):
+    """Land ``rows`` = (event_id, ts, user_id, event_type, value) in the
+    events table at ``path``."""
+    spark.createDataFrame(
+        [(*r, "{}") for r in rows], EVENTS_DDL
+    ).write.mode("append").parquet(path)
 
 
 def test_watermark_store_roundtrip(spark, tmp_path):
@@ -42,11 +79,11 @@ def test_watermark_store_roundtrip(spark, tmp_path):
     assert ws.get("sales", "s2") == "7"
 
 
-def test_watermark_store_is_versioned_and_adopts_legacy(spark, tmp_path):
+def test_watermark_store_is_versioned_and_refuses_legacy(spark, tmp_path):
     """The watermark map is a JSON file inside each committed version of
     a commit-log table: an unpublished stage is never read, writes are a
     CAS on the sequence, and a store in the earlier parquet format
-    (upsert_versioned rows) keeps its watermarks across the upgrade."""
+    (upsert_versioned rows) is refused with every file kept."""
     import json
     import os
 
@@ -55,34 +92,43 @@ def test_watermark_store_is_versioned_and_adopts_legacy(spark, tmp_path):
         current_version,
         upsert_versioned,
     )
-    from osmart_etl_spark.streaming.incremental import (
-        WATERMARK_SCHEMA,
-        WatermarkStore,
-    )
+    from osmart_etl_spark.streaming.incremental import WatermarkStore
 
     # earlier parquet format, written the way the old set() wrote it
-    p = str(tmp_path / "wm_parquet")
+    legacy = str(tmp_path / "wm_parquet")
     upsert_versioned(
         spark,
         spark.createDataFrame(
-            [("sales", "s1", "100", None), ("stock_points", "s1", "2025-01-03", None)],
-            WATERMARK_SCHEMA,
+            [("sales", "s1", "100", None)],
+            "pipeline string, store string, wm_value string, updated_at timestamp",
         ),
-        p, keys=["pipeline", "store"], order_col="updated_at",
+        legacy, keys=["pipeline", "store"], order_col="updated_at",
     )
+
+    def files():
+        return sorted(
+            os.path.relpath(os.path.join(d, f), legacy)
+            for d, _, fs in os.walk(legacy) for f in fs
+        )
+
+    kept = files()
+    ws = WatermarkStore(spark, legacy)
+    with pytest.raises(RuntimeError, match="earlier parquet format"):
+        ws.get("sales", "s1")
+    with pytest.raises(RuntimeError, match="earlier parquet format"):
+        ws.set("sales", "s1", "200")
+    assert files() == kept
+
+    p = str(tmp_path / "wm")
     ws = WatermarkStore(spark, p)
-    assert ws.get("sales", "s1") == "100"
-    assert ws.get("stock_points", "s1") == "2025-01-03"
-    ws.set("raw_movements", "s1", "42")  # first write upgrades to JSON
-    assert ws.get("sales", "s1") == "100"  # parquet rows survived
-    assert ws.get("stock_points", "s1") == "2025-01-03"
-    assert ws.get("raw_movements", "s1") == "42"
+    ws.set("sales", "s1", "100")
+    ws.set("raw_movements", "s1", "42")
     assert os.path.exists(f"{p}/_v-{current_version(spark, p)[1]}/_watermarks.json")
 
     # crash mid-set: a fully staged but unpublished version is invisible
     ws.set("sales", "s1", "200")
     seq_before = current_version(spark, p)[0]
-    orphan = tmp_path / "wm_parquet" / "_v-deadbeef0000"
+    orphan = tmp_path / "wm" / "_v-deadbeef0000"
     orphan.mkdir()
     (orphan / "_watermarks.json").write_text(
         json.dumps({"v": 1, "wm": {"sales": {"s1": "999"}}})
@@ -127,17 +173,16 @@ def test_sales_incremental_two_runs(spark, tmp_path, events_parquet):
     from osmart_etl_spark.pipelines.sales import run_sales_incremental
 
     sink = str(tmp_path / "ventas")
-    wmp = str(tmp_path / "wm")
 
     wm1 = run_sales_incremental(
-        spark, events_path=events_parquet, sink_path=sink, watermark_path=wmp
+        spark, events_path=events_parquet, sink_path=sink
     )
     assert wm1 is not None
     n1 = read_merge_table(spark, sink).count()
     assert n1 > 0
 
     wm2 = run_sales_incremental(
-        spark, events_path=events_parquet, sink_path=sink, watermark_path=wmp
+        spark, events_path=events_parquet, sink_path=sink
     )
     assert wm2 is None  # nothing past the watermark
 
@@ -152,7 +197,7 @@ def test_sales_incremental_two_runs(spark, tmp_path, events_parquet):
     new.write.mode("append").parquet(events_parquet)
 
     wm3 = run_sales_incremental(
-        spark, events_path=events_parquet, sink_path=sink, watermark_path=wmp
+        spark, events_path=events_parquet, sink_path=sink
     )
     assert wm3 == wm1 + 2
     final = read_merge_table(spark, sink)
@@ -180,54 +225,38 @@ def test_sales_incremental_two_runs(spark, tmp_path, events_parquet):
 def test_sales_pipeline_crash_mid_publish_keeps_previous_version(
     spark, tmp_path, events_parquet, monkeypatch
 ):
-    """Round-7 adoption check: the SALES PIPELINE's actual sink is the
-    atomic versioned table, so a crash between staging and publish
-    during an incremental run leaves the previously committed batch
-    fully readable, the watermark un-advanced, and a rerun recovers."""
-    import datetime as dtm
-
+    """The sales pipeline's one sink is the versioned merge table, so a
+    crash between the sink's staging and its publish leaves the
+    previously committed rows fully readable, the committed watermark at
+    the previous tick, and a rerun folds the delta once."""
     from osmart_etl_spark.io import atomic
-    from osmart_etl_spark.pipelines.sales import run_sales_incremental
+    from osmart_etl_spark.io.sinks import read_merge_watermark
+    from osmart_etl_spark.pipelines.sales import extract_sales, run_sales_incremental
 
     sink = str(tmp_path / "ventas")
-    wmp = str(tmp_path / "wm")
-    wm1 = run_sales_incremental(
-        spark, events_path=events_parquet, sink_path=sink, watermark_path=wmp
-    )
+    wm1 = run_sales_incremental(spark, events_path=events_parquet, sink_path=sink)
     v1 = sorted(tuple(r) for r in read_merge_table(spark, sink).drop(
         "extracted_at", "last_event_id"
     ).collect())
-
-    new = spark.createDataFrame(
-        [(wm1 + 1, dtm.datetime(2025, 2, 1, 9), 2, "purchase", 42.0, "{}")],
-        spark.read.parquet(events_parquet).schema,
-    )
-    new.write.mode("append").parquet(events_parquet)
+    append_events(spark, events_parquet, [
+        (wm1 + 1, dt.datetime(2025, 2, 1, 9), 2, "purchase", 42.0),
+    ])
 
     class Boom(RuntimeError):
         pass
 
-    real_log = atomic._commit_log
-    calls = {"n": 0}
+    staged = []
 
-    def die_at_publish(spark_, base):
-        # Crash between the SINK's staging and publish. The sink is the
-        # bucket-granular merge table, whose one commit log sits at the
-        # sink root; die on the SECOND read of it: the first is the
-        # merge's snapshot (current_version), the second is inside
-        # publish_staged — i.e. AFTER the new version is written.
-        if str(base).rstrip("/") == sink:
-            calls["n"] += 1
-            if calls["n"] >= 2:
-                raise Boom()
-        return real_log(spark_, base)
+    def die_at_publish(spark_, table, token, **kw):
+        # the new version directory is complete; its publish never runs
+        staged.append(f"{table}/_v-{token}")
+        raise Boom()
 
-    monkeypatch.setattr(atomic, "_commit_log", die_at_publish)
+    monkeypatch.setattr(atomic, "publish_staged", die_at_publish)
     with pytest.raises(Boom):
-        run_sales_incremental(
-            spark, events_path=events_parquet, sink_path=sink, watermark_path=wmp
-        )
-    monkeypatch.setattr(atomic, "_commit_log", real_log)
+        run_sales_incremental(spark, events_path=events_parquet, sink_path=sink)
+    monkeypatch.undo()
+    assert len(staged) == 1 and os.path.isdir(staged[0])
 
     # previous version intact, watermark NOT advanced past wm1
     assert sorted(
@@ -236,12 +265,13 @@ def test_sales_pipeline_crash_mid_publish_keeps_previous_version(
             "extracted_at", "last_event_id"
         ).collect()
     ) == v1
-    # rerun picks the delta up and commits it
-    wm3 = run_sales_incremental(
-        spark, events_path=events_parquet, sink_path=sink, watermark_path=wmp
-    )
+    assert read_merge_watermark(spark, sink, "sales:tienda_01") == wm1
+    # rerun picks the delta up and commits it once
+    wm3 = run_sales_incremental(spark, events_path=events_parquet, sink_path=sink)
     assert wm3 == wm1 + 1
-    assert read_merge_table(spark, sink).filter(F.col("user_id") == 2).count() >= 1
+    assert sales_totals(read_merge_table(spark, sink)) == sales_totals(
+        extract_sales(spark.read.parquet(events_parquet), None)
+    )
 
 
 @pytest.mark.slow
@@ -507,7 +537,7 @@ def test_orchestrator_full_tick(spark, tmp_path, events_parquet):
     assert read_committed(spark, str(tmp_path / "points3")).count() > 0
 
 
-def test_noop_tick_commits_nothing_and_launches_few_jobs(spark, tmp_path):
+def test_noop_tick_commits_nothing_and_launches_few_jobs(spark, tmp_path, small_events):
     """A tick with nothing past any watermark is the tick a cron loop
     runs most: it must leave the watermark table and every sink at its
     committed version, and its fixed cost must stay small — watermark
@@ -516,19 +546,8 @@ def test_noop_tick_commits_nothing_and_launches_few_jobs(spark, tmp_path):
     from osmart_etl_spark.io.atomic import current_version
     from osmart_etl_spark.pipelines.orchestrator import run_etl
 
-    kinds = ["purchase", "click", "signup", "error"]
-    events = str(tmp_path / "events")
-    spark.createDataFrame(
-        [
-            (i, dt.datetime(2025, 1, 1 + i // 12, i % 12), i % 5, kinds[i % 4],
-             float(i), "{}")
-            for i in range(36)
-        ],
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string",
-    ).write.parquet(events)
     paths = {
-        "events_path": events,
+        "events_path": small_events,
         "ventas_path": str(tmp_path / "ventas"),
         "raw_log_path": str(tmp_path / "raw"),
         "points_path": str(tmp_path / "points"),
@@ -536,11 +555,7 @@ def test_noop_tick_commits_nothing_and_launches_few_jobs(spark, tmp_path):
     }
 
     def versions():
-        tables = [
-            paths["watermark_path"], paths["points_path"],
-            f"{paths['ventas_path']}_accum",
-            paths["ventas_path"],
-        ]
+        tables = [paths["watermark_path"], paths["points_path"], paths["ventas_path"]]
         return {t: current_version(spark, t) for t in tables}
 
     def last_job_id():
@@ -561,13 +576,53 @@ def test_noop_tick_commits_nothing_and_launches_few_jobs(spark, tmp_path):
     assert jobs <= 12, f"no-op tick launched {jobs} Spark jobs"
 
 
+def test_stock_points_extract_prunes_raw_log_days(spark, tmp_path, small_events, monkeypatch):
+    """Past a watermark, the stock-points extract filters the raw log's
+    ``fecha_dia`` partition column, so its scan lists and opens only the
+    days after the watermark."""
+    from osmart_etl_spark.pipelines import inventory
+
+    raw, wm = str(tmp_path / "raw"), str(tmp_path / "wm")
+    points = str(tmp_path / "points")
+
+    def tick():
+        inventory.run_raw_movements_incremental(
+            spark, events_path=small_events, raw_log_path=raw, watermark_path=wm
+        )
+        return inventory.run_stock_points_incremental(
+            spark, raw_log_path=raw, points_path=points, watermark_path=wm
+        )
+
+    assert tick() == "2025-01-03"
+    append_events(spark, small_events, [(36, dt.datetime(2025, 1, 4, 10), 1, "purchase", 40.0)])
+    extracts = []
+    real = inventory.compute_stock_points
+
+    def spy(movements, *a, **kw):
+        extracts.append(movements)
+        return real(movements, *a, **kw)
+
+    monkeypatch.setattr(inventory, "compute_stock_points", spy)
+    assert tick() == "2025-01-04"
+    scans = [
+        line for line in extracts[0]._jdf.queryExecution().executedPlan().toString().splitlines()
+        if "PartitionFilters" in line
+    ]
+    assert scans
+    for line in scans:
+        filters = line.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
+        assert "fecha_dia" in filters, line
+
+
 @pytest.mark.xfail(
     strict=True,
     raises=AssertionError,
     reason="raw-log crash window: the raw log is appended before the "
     "watermark advances, so a crash between the two re-appends the slice",
 )
-def test_raw_log_crash_before_watermark_does_not_duplicate(spark, tmp_path, monkeypatch):
+def test_raw_log_crash_before_watermark_does_not_duplicate(
+    spark, tmp_path, monkeypatch, small_events
+):
     """A crash after the raw-movements append but before its watermark
     advances must not leave the slice twice in the raw log once the
     next run has gone through. Today it does: nothing dedups the
@@ -575,19 +630,8 @@ def test_raw_log_crash_before_watermark_does_not_duplicate(spark, tmp_path, monk
     from osmart_etl_spark.pipelines.inventory import run_raw_movements_incremental
     from osmart_etl_spark.streaming.incremental import WatermarkStore
 
-    kinds = ["purchase", "click", "signup", "error"]
-    events = str(tmp_path / "events")
-    spark.createDataFrame(
-        [
-            (i, dt.datetime(2025, 1, 1 + i // 12, i % 12), i % 5, kinds[i % 4],
-             float(i), "{}")
-            for i in range(36)
-        ],
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string",
-    ).write.parquet(events)
     paths = {
-        "events_path": events,
+        "events_path": small_events,
         "raw_log_path": str(tmp_path / "raw"),
         "watermark_path": str(tmp_path / "wm"),
     }
@@ -606,7 +650,7 @@ def test_raw_log_crash_before_watermark_does_not_duplicate(spark, tmp_path, monk
         run_raw_movements_incremental(spark, **paths)
     assert run_raw_movements_incremental(spark, **paths) is not None
 
-    landed = sorted(r[0] for r in spark.read.parquet(events).select("event_id").collect())
+    landed = sorted(r[0] for r in spark.read.parquet(small_events).select("event_id").collect())
     raw = sorted(r[0] for r in spark.read.parquet(paths["raw_log_path"]).select("id").collect())
     assert raw == landed
 
@@ -840,56 +884,114 @@ def test_merge_accumulate_versioned_crash_between_stage_and_publish(spark, tmp_p
     )
 
 
-@pytest.mark.slow
-def test_sales_crash_window_no_double_count(spark, tmp_path, events_parquet):
-    """ADVICE r12: crash AFTER the accumulator fold commits but BEFORE
-    the watermark advances, with new events landing before the retry.
-    The retry's slice then spans already-folded + new events with a
-    HIGHER max event_id, so the ledger hwm alone accepts it — the
-    event-level re-filter against the committed hwm must excise the
-    already-folded prefix, or monetary totals double-count silently."""
-    from osmart_etl_spark.pipelines.sales import (
-        extract_sales,
-        run_sales_incremental,
-    )
-    from osmart_etl_spark.streaming.incremental import WatermarkStore
+def test_sales_crash_window_no_double_count(spark, tmp_path, small_events, monkeypatch):
+    """A crash right after the sales sink's publish, with new events
+    landing before the rerun: the fold and the watermark were one
+    commit, so the rerun folds exactly the new events and the totals
+    equal a one-shot extract over every landed event."""
+    from osmart_etl_spark.io import atomic
+    from osmart_etl_spark.pipelines.sales import extract_sales, run_sales_incremental
 
     sink = str(tmp_path / "ventas")
-    wmp = str(tmp_path / "wm")
+    real_publish = atomic.publish_staged
 
-    wm1 = run_sales_incremental(
-        spark, events_path=events_parquet, sink_path=sink, watermark_path=wmp
+    def publish_then_die(*a, **kw):
+        real_publish(*a, **kw)
+        raise RuntimeError("injected crash after the publish")
+
+    monkeypatch.setattr(atomic, "publish_staged", publish_then_die)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_sales_incremental(spark, events_path=small_events, sink_path=sink)
+    monkeypatch.undo()
+
+    append_events(spark, small_events, [
+        (36, dt.datetime(2025, 1, 4, 10), 1, "purchase", 40.0),
+        (37, dt.datetime(2025, 1, 4, 11), 7, "click", 7.0),
+    ])
+    assert run_sales_incremental(spark, events_path=small_events, sink_path=sink) == 37
+    assert sales_totals(read_merge_table(spark, sink)) == sales_totals(
+        extract_sales(spark.read.parquet(small_events), None)
     )
-    assert wm1 is not None
 
-    # simulate the crash window: the fold committed (tick 1 above) but
-    # the watermark write never happened
-    WatermarkStore(spark, wmp).reset("sales", "tienda_01")
 
-    # new events land before the retry
-    new = spark.createDataFrame(
-        [
-            (wm1 + 1, dt.datetime(2025, 1, 2, 10), 1, "purchase", 40.0, "{}"),
-            (wm1 + 2, dt.datetime(2025, 1, 2, 11), 2, "click", 7.0, "{}"),
-        ],
-        spark.read.parquet(events_parquet).schema,
+def test_sales_stale_watermark_commits_nothing(spark, tmp_path, small_events):
+    """A fold extracted past a watermark that is no longer the committed
+    one (a concurrent run committed in between) is refused before any
+    Spark work, and the table stays at its version."""
+    from osmart_etl_spark.io.atomic import ConcurrentCommitError, current_version
+    from osmart_etl_spark.io.sinks import merge_upsert_partitioned, read_merge_watermark
+    from osmart_etl_spark.pipelines.sales import run_sales_incremental
+
+    sink = str(tmp_path / "ventas")
+    assert run_sales_incremental(spark, events_path=small_events, sink_path=sink) == 35
+    assert read_merge_watermark(spark, sink, "sales:tienda_01") == 35
+    before = current_version(spark, sink)
+    rows = read_merge_table(spark, sink)
+    with pytest.raises(ConcurrentCommitError, match="sales:tienda_01"):
+        merge_upsert_partitioned(
+            spark, rows, sink, keys=["user_id", "tienda", "source_system"],
+            order_col="extracted_at", watermark=("sales:tienda_01", None, 99),
+        )
+    assert current_version(spark, sink) == before
+    assert read_merge_watermark(spark, sink, "sales:tienda_01") == 35
+
+
+def test_sales_refuses_table_without_watermarks(spark, tmp_path, small_events):
+    """A ``ventas`` whose manifest has no watermarks map was written when
+    the sums lived in a ``_accum`` sibling table: folding into it from
+    an empty watermark would count every sale twice, so the run raises
+    and keeps every file."""
+    import json
+
+    from osmart_etl_spark.io.atomic import MANIFEST, current_version
+    from osmart_etl_spark.pipelines.sales import run_sales_incremental
+
+    sink = str(tmp_path / "ventas")
+    run_sales_incremental(spark, events_path=small_events, sink_path=sink)
+    manifest = f"{sink}/_v-{current_version(spark, sink)[1]}/{MANIFEST}"
+    with open(manifest) as fh:
+        doc = json.load(fh)
+    del doc["watermarks"]
+    with open(manifest, "w") as fh:
+        json.dump(doc, fh)
+    os.remove(os.path.join(os.path.dirname(manifest), f".{MANIFEST}.crc"))
+
+    def files():
+        return {
+            os.path.relpath(os.path.join(d, f), sink): os.path.getsize(os.path.join(d, f))
+            for d, _, fs in os.walk(sink) for f in fs
+        }
+
+    kept = files()
+    with pytest.raises(RuntimeError, match="no watermarks map"):
+        run_sales_incremental(spark, events_path=small_events, sink_path=sink)
+    assert files() == kept
+
+
+def test_sales_jdbc_failure_commits_nothing(spark, tmp_path, small_events):
+    """The JDBC mirror lands before the lake publish: when it fails the
+    lake keeps its version and watermark, and the next run lands the
+    slice once."""
+    from osmart_etl_spark.io.atomic import current_version
+    from osmart_etl_spark.io.sinks import read_merge_watermark
+    from osmart_etl_spark.pipelines.sales import extract_sales, run_sales_incremental
+
+    sink = str(tmp_path / "ventas")
+    run_sales_incremental(spark, events_path=small_events, sink_path=sink)
+    before = current_version(spark, sink)
+    append_events(spark, small_events, [(36, dt.datetime(2025, 1, 4, 10), 1, "purchase", 40.0)])
+    with pytest.raises(Exception):
+        run_sales_incremental(
+            spark, events_path=small_events, sink_path=sink,
+            jdbc={"url": "jdbc:nosuchdriver:nowhere", "table": "x"},
+        )
+    assert current_version(spark, sink) == before
+    assert read_merge_watermark(spark, sink, "sales:tienda_01") == 35
+
+    assert run_sales_incremental(spark, events_path=small_events, sink_path=sink) == 36
+    assert sales_totals(read_merge_table(spark, sink)) == sales_totals(
+        extract_sales(spark.read.parquet(small_events), None)
     )
-    new.write.mode("append").parquet(events_parquet)
-
-    # the retry: watermark is gone, so the slice is the FULL history +
-    # the new rows — only the unfolded suffix may fold
-    wm2 = run_sales_incremental(
-        spark, events_path=events_parquet, sink_path=sink, watermark_path=wmp
-    )
-    assert wm2 == wm1 + 2
-
-    final = read_merge_table(spark, sink)
-    expect = {
-        r["user_id"]: str(r["total_venta"])
-        for r in extract_sales(spark.read.parquet(events_parquet), None).collect()
-    }
-    got = {r["user_id"]: str(r["total_venta"]) for r in final.collect()}
-    assert got == expect  # pre-fix: every pre-crash event counted twice
 
 
 @pytest.mark.slow
@@ -904,10 +1006,9 @@ def test_sales_publish_is_bucket_incremental(spark, tmp_path, events_parquet):
     from osmart_etl_spark.pipelines.sales import run_sales_incremental
 
     sink = str(tmp_path / "ventas")
-    wmp = str(tmp_path / "wm")
     wm1 = run_sales_incremental(
         spark, events_path=events_parquet, sink_path=sink,
-        watermark_path=wmp, n_buckets=8,
+        n_buckets=8,
     )
     assert wm1 is not None
 
@@ -931,7 +1032,7 @@ def test_sales_publish_is_bucket_incremental(spark, tmp_path, events_parquet):
     new.write.mode("append").parquet(events_parquet)
     wm2 = run_sales_incremental(
         spark, events_path=events_parquet, sink_path=sink,
-        watermark_path=wmp, n_buckets=8,
+        n_buckets=8,
     )
     assert wm2 == wm1 + 1
     after = snap()
