@@ -67,6 +67,7 @@ import re
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _MARKER_RE = re.compile(r"^(\d{8})-([0-9a-f]{12})$")
 _LOCK_RE = re.compile(r"^(\d{8})\.lock$")
@@ -84,6 +85,10 @@ MANIFEST = "_manifest.json"
 #: Partition column of a merge version's data: Spark's ``partitionBy``
 #: writes bucket ``b`` to ``<version dir>/__bucket=<b>/``.
 BUCKET_COL = "__bucket"
+
+#: The table schema (DDL) of a ``commit_version`` version, which
+#: ``read_committed`` reads it with.
+SCHEMA_FILE = "_schema.json"
 
 log = logging.getLogger(__name__)
 
@@ -178,6 +183,14 @@ def _read_small_text(spark: SparkSession, path: str) -> str:
         stream.close()
 
 
+def _read_small_json(spark: SparkSession, path: str) -> dict | None:
+    """One small metadata file → JSON, or None when it does not exist."""
+    _, fs, hpath = _fs(spark, path)
+    if not fs.exists(hpath):
+        return None
+    return json.loads(_read_small_text(spark, path))
+
+
 def _write_small_json(
     spark: SparkSession, path: str, obj, *, overwrite: bool = True
 ) -> None:
@@ -221,11 +234,7 @@ def manifest_runs(held: dict[int, str]) -> dict[str, list[list[int]]]:
 def read_manifest(spark: SparkSession, table: str, token: str) -> dict | None:
     """The ``MANIFEST`` of version ``_v-<token>``, or None when that
     version carries none (a table no merge sink wrote)."""
-    path = f"{table.rstrip('/')}/_v-{token}/{MANIFEST}"
-    _, fs, hpath = _fs(spark, path)
-    if not fs.exists(hpath):
-        return None
-    return json.loads(_read_small_text(spark, path))
+    return _read_small_json(spark, f"{table.rstrip('/')}/_v-{token}/{MANIFEST}")
 
 
 def _listdir(spark: SparkSession, path: str) -> list[str]:
@@ -255,7 +264,9 @@ def current_version(spark: SparkSession, table: str) -> tuple[int, str] | None:
 def read_committed(spark: SparkSession, table: str, at: int | None = None) -> DataFrame:
     """Read the latest committed version (or, with ``at``, a retained
     historical sequence — bounded time travel for free from the
-    immutable-version layout)."""
+    immutable-version layout). A version ``commit_version`` wrote is
+    read with the schema it recorded, which spares a schema-inference
+    job; other versions infer it."""
     log = _commit_log(spark, table)
     if not log:
         raise FileNotFoundError(f"no committed version at {table}")
@@ -269,7 +280,10 @@ def read_committed(spark: SparkSession, table: str, at: int | None = None) -> Da
                 f"(have {[s for s, _ in log]})"
             )
         seq, token = match[0]
-    return spark.read.parquet(f"{table.rstrip('/')}/_v-{token}")
+    ver = f"{table.rstrip('/')}/_v-{token}"
+    recorded = _read_small_json(spark, f"{ver}/{SCHEMA_FILE}")
+    reader = spark.read if recorded is None else spark.read.schema(recorded["schema"])
+    return reader.parquet(ver)
 
 
 def commit_version(
@@ -302,7 +316,8 @@ def commit_version(
     directory before publish, so stats and data are one atomic commit
     (the same transactional trick as the accumulate sink's ledger).
     Underscore-prefixed, invisible to parquet reads; read it back with
-    :func:`read_sidecar`.
+    :func:`read_sidecar`. The version's schema is recorded the same way
+    (``SCHEMA_FILE``), so ``read_committed`` reads it without inference.
 
     Returns the committed sequence number.
     """
@@ -313,6 +328,12 @@ def commit_version(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(f"{base}/_v-{token}")
+    # partition columns read back last, after the data columns
+    fields = [f for f in df.schema if f.name not in partition_by]
+    fields += [df.schema[c] for c in partition_by]
+    _write_small_json(
+        spark, f"{base}/_v-{token}/{SCHEMA_FILE}", {"schema": StructType(fields).toDDL()}
+    )
     if sidecar is not None:
         _write_small_json(spark, f"{base}/_v-{token}/_sidecar.json", sidecar)
 
@@ -507,11 +528,7 @@ def read_sidecar(spark: SparkSession, table: str) -> dict | None:
     cur = current_version(spark, base)
     if cur is None:
         return None
-    jvm, fs, _ = _fs(spark, base)
-    p = f"{base}/_v-{cur[1]}/_sidecar.json"
-    if not fs.exists(jvm.org.apache.hadoop.fs.Path(p)):
-        return None
-    return json.loads(_read_small_text(spark, p))
+    return _read_small_json(spark, f"{base}/_v-{cur[1]}/_sidecar.json")
 
 
 def upsert_versioned(

@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -85,6 +85,7 @@ def merge_upsert_partitioned(
     n_buckets: int = 64,
     combine: Callable[[DataFrame | None, DataFrame], DataFrame] | None = None,
     watermark: tuple[str, object, object] | None = None,
+    touched: list[int] | None = None,
 ) -> list[int]:
     """MERGE-style upsert with O(delta) write cost (S7/S8 scale path).
 
@@ -123,8 +124,15 @@ def merge_upsert_partitioned(
     (Delta Lake's transaction ids), so each batch folds exactly once.
     ``read_merge_watermark`` reads a writer's watermark.
 
-    Per-batch cost: O(|delta| + size of touched buckets) and one commit;
-    ``new`` is localCheckpointed unless it already is a checkpoint.
+    Per-batch cost: O(|delta| + size of touched buckets) and one commit.
+    The touched-bucket set and the written rows come from one
+    evaluation of ``new``: the sink localCheckpoints it, reads the set
+    from an ``Observation`` on that checkpoint (no extra job) and
+    releases the checkpoint before it returns. A caller that already
+    holds ``new`` as a checkpoint passes the set it observed on it as
+    ``touched`` (``F.collect_set(bucket_column(keys, n_buckets))``) and
+    the sink takes no checkpoint of its own; ``touched`` with a ``new``
+    that is not a checkpoint raises ``ValueError``.
     With Delta Lake available the same call is one ``MERGE INTO``.
 
     The layout (n_buckets, key list, order column) lives in every
@@ -175,55 +183,68 @@ def merge_upsert_partitioned(
                 f"this batch was extracted past {expected!r}"
             )
         marks = {**marks, writer: new_mark}
-    bucket = F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(n_buckets))
+    bucket = bucket_column(keys, n_buckets)
     # ONE materialization of the incoming batch: the touched-bucket set
     # and the written rows must come from the same evaluation — a
     # nondeterministic source re-evaluated at write time could emit rows
     # into buckets absent from `touched`, silently losing pre-existing
-    # rows of those buckets. A checkpoint already is one.
-    if not _is_checkpoint(new):
-        new = new.localCheckpoint(eager=True)
-    # ≤ n_buckets small ints — a bounded driver-side read, not a data scan.
-    touched = sorted(r[0] for r in new.select(bucket).distinct().collect())
-    if not touched:
-        return []
+    # rows of those buckets.
+    own = None
+    if touched is None:
+        obs = Observation()
+        new = own = new.observe(obs, F.collect_set(bucket).alias("b")).localCheckpoint(eager=True)
+        touched = obs.get["b"]
+    elif not _is_checkpoint(new):
+        raise ValueError("touched= needs `new` to be the checkpoint it was observed on")
+    touched = sorted(touched)
+    try:
+        if not touched:
+            return []
+        held = manifest_buckets(manifest) if manifest else {}
+        old = [f"{base}/{bucket_dir(held[b], b)}" for b in touched if b in held]
+        # bucket dirs hold user columns only (the bucket is the dir); the
+        # manifest's schema spares a schema-inference job
+        old_rows = spark.read.schema(manifest["schema"]).parquet(*old) if old else None
+        if combine is None:
+            merged = new if old_rows is None else upsert_keep_latest(old_rows, new, keys, order_col)
+        else:
+            merged = combine(old_rows, new)
+        merged = merged.withColumn(BUCKET_COL, bucket)
+        if seq == 0:
+            # a crashed creator's dead lock on seq 1 would otherwise wedge
+            # creation: _gc (TTL-gated) normally runs only after a commit
+            _gc(spark, base, 2, 3600.0)
 
-    held = manifest_buckets(manifest) if manifest else {}
-    old = [f"{base}/{bucket_dir(held[b], b)}" for b in touched if b in held]
-    # bucket dirs hold user columns only (the bucket is the dir); the
-    # manifest's schema spares a schema-inference job
-    old_rows = spark.read.schema(manifest["schema"]).parquet(*old) if old else None
-    if combine is None:
-        merged = new if old_rows is None else upsert_keep_latest(old_rows, new, keys, order_col)
-    else:
-        merged = combine(old_rows, new)
-    merged = merged.withColumn(BUCKET_COL, bucket)
-    if seq == 0:
-        # a crashed creator's dead lock on seq 1 would otherwise wedge
-        # creation: _gc (TTL-gated) normally runs only after a commit
-        _gc(spark, base, 2, 3600.0)
+        token = uuid.uuid4().hex[:12]
+        # a bucket hashes to one write task, so each bucket dir is one file
+        # whatever the task count; a few tasks beat one per touched bucket
+        n_tasks = min(len(touched), spark.sparkContext.defaultParallelism)
+        (
+            merged.repartition(n_tasks, F.col(BUCKET_COL))
+            .write.mode("overwrite")
+            .partitionBy(BUCKET_COL)
+            .parquet(f"{base}/_v-{token}")
+        )
+        held.update(dict.fromkeys(touched, token))
+        doc = {
+            "layout": layout,
+            "schema": merged.drop(BUCKET_COL).schema.toDDL(),
+            "buckets": manifest_runs(held),
+        }
+        if marks is not None:
+            doc["watermarks"] = marks
+        _write_small_json(spark, f"{base}/_v-{token}/{MANIFEST}", doc)
+        publish_staged(spark, base, token, expected_seq=seq)
+        return touched
+    finally:
+        if own is not None:
+            release_checkpoint(own)
 
-    token = uuid.uuid4().hex[:12]
-    # a bucket hashes to one write task, so each bucket dir is one file
-    # whatever the task count; a few tasks beat one per touched bucket
-    n_tasks = min(len(touched), spark.sparkContext.defaultParallelism)
-    (
-        merged.repartition(n_tasks, F.col(BUCKET_COL))
-        .write.mode("overwrite")
-        .partitionBy(BUCKET_COL)
-        .parquet(f"{base}/_v-{token}")
-    )
-    held.update(dict.fromkeys(touched, token))
-    doc = {
-        "layout": layout,
-        "schema": merged.drop(BUCKET_COL).schema.toDDL(),
-        "buckets": manifest_runs(held),
-    }
-    if marks is not None:
-        doc["watermarks"] = marks
-    _write_small_json(spark, f"{base}/_v-{token}/{MANIFEST}", doc)
-    publish_staged(spark, base, token, expected_seq=seq)
-    return touched
+
+def bucket_column(keys: list[str], n_buckets: int) -> Column:
+    """The ``merge_upsert_partitioned`` bucket of a row: a deterministic
+    function of its key, so a key never changes bucket."""
+    return F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(n_buckets))
 
 
 def _snapshot(spark: SparkSession, base: str) -> tuple[int, dict | None]:
@@ -261,6 +282,13 @@ def _is_checkpoint(df: DataFrame) -> bool:
     as they are, so evaluating it twice reads the same rows."""
     plan = df._jdf.queryExecution().logical()
     return plan.getClass().getSimpleName() == "LogicalRDD" and plan.rdd().isCheckpointed()
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks of ``df``, a ``localCheckpoint`` (a local
+    checkpoint lives in the block manager until its RDD is unpersisted
+    or garbage-collected). ``df`` must not be read afterwards."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def _watermarks(base: str, manifest: dict | None) -> dict:

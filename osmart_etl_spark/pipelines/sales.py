@@ -28,10 +28,15 @@ tests/test_pipelines.py::test_sales_incremental_two_runs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from osmart_etl_spark.io.sinks import merge_upsert_partitioned, read_merge_watermark
+from osmart_etl_spark.io.sinks import (
+    bucket_column,
+    merge_upsert_partitioned,
+    read_merge_watermark,
+    release_checkpoint,
+)
 from osmart_etl_spark.ops.relational import (
     conditional_override,
     enrich_extract,
@@ -161,15 +166,7 @@ def run_sales_incremental(
     """
     writer = f"sales:{tienda}"
     last = read_merge_watermark(spark, sink_path, writer)
-    batch = (
-        extract_sales(spark.read.parquet(events_path), last)
-        .withColumn("tienda", F.lit(tienda))
-        .withColumn("source_system", F.lit("sicar"))
-        .localCheckpoint(eager=True)
-    )
-    new_wm = batch.agg(F.max("last_event_id")).first()[0]
-    if new_wm is None:
-        return None  # nothing past the watermark
+    held: list[DataFrame] = []  # checkpoints released before returning
 
     def fold(old: DataFrame | None, new: DataFrame) -> DataFrame:
         out = _fold(old, new)
@@ -177,6 +174,7 @@ def run_sales_incremental(
             from osmart_etl_spark.io.jdbc_sink import jdbc_upsert
 
             out = out.localCheckpoint(eager=True)
+            held.append(out)
             jdbc_upsert(
                 spark,
                 out.filter("__new").drop("__new"),
@@ -188,9 +186,31 @@ def run_sales_incremental(
             )
         return out.drop("__new")
 
-    merge_upsert_partitioned(
-        spark, batch, sink_path,
-        keys=KEYS, order_col="extracted_at", n_buckets=n_buckets,
-        combine=fold, watermark=(writer, last, new_wm),
+    # one Observation on the one checkpoint gives the watermark and the
+    # touched buckets, from the evaluation whose rows the merge writes
+    obs = Observation()
+    batch = (
+        extract_sales(spark.read.parquet(events_path), last)
+        .withColumn("tienda", F.lit(tienda))
+        .withColumn("source_system", F.lit("sicar"))
+        .observe(
+            obs,
+            F.max("last_event_id").alias("wm"),
+            F.collect_set(bucket_column(KEYS, n_buckets)).alias("buckets"),
+        )
+        .localCheckpoint(eager=True)
     )
-    return new_wm
+    held.append(batch)
+    try:
+        new_wm = obs.get["wm"]
+        if new_wm is None:
+            return None  # nothing past the watermark
+        merge_upsert_partitioned(
+            spark, batch, sink_path,
+            keys=KEYS, order_col="extracted_at", n_buckets=n_buckets,
+            combine=fold, watermark=(writer, last, new_wm), touched=obs.get["buckets"],
+        )
+        return new_wm
+    finally:
+        for df in held:
+            release_checkpoint(df)

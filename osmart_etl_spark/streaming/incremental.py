@@ -12,6 +12,8 @@ advance the watermark in the same run (update_raw_stock_movements.py:
 - extraction is any DataFrame-producing callable; the watermark predicate
   composes onto it and pushes down to the scan. An extract that already
   knows its slice is empty returns None and the run stops there;
+- the batch is checkpointed once, and the new watermark is an
+  ``Observation`` on that checkpoint, so computing it launches no job;
 - the sink is idempotent by construction (append of a deterministic
   slice, or keyed upsert), so re-runs after failure are safe (T6) —
   the watermark only advances after the sink commits.
@@ -28,9 +30,10 @@ import uuid
 from collections.abc import Callable
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 from osmart_etl_spark.io import atomic
+from osmart_etl_spark.io.sinks import release_checkpoint
 
 _WM_FILE = "_watermarks.json"
 
@@ -111,34 +114,50 @@ def run_incremental(
     source_name: str,
     extract: Callable[[SparkSession, Any | None], DataFrame | None],
     load: Callable[[DataFrame], None],
-    wm_expr: Callable[[DataFrame], Any],
+    wm_expr: Column | Callable[[], Any],
 ) -> Any | None:
     """One incremental run for one (pipeline, store): extract past the
     watermark, load, advance the watermark (T1/T2/T6).
 
     ``extract(spark, last_wm)`` returns only rows beyond ``last_wm``
     (None = full backfill — the seed_* scripts' default-epoch path), or
-    None when it already knows nothing lies past it;
-    ``wm_expr(df)`` computes the new high-water mark (scalar, A4).
+    None when it already knows nothing lies past it.
+
+    The batch is materialized once (``localCheckpoint``), and ``load``
+    reads that checkpoint. ``wm_expr`` gives the new high-water mark
+    (scalar, A4). An aggregate ``Column`` (``F.max("fecha")``) is read
+    by an ``Observation`` on that checkpoint: the same evaluation as
+    the loaded rows, and no Spark job of its own. A callable with no
+    arguments is for an extract that has already computed the mark. A
+    mark of None means an empty batch: nothing is loaded.
     The watermark writes only after ``load`` returns, so a crash between
     load and checkpoint re-processes the slice — which the idempotent
-    sink absorbs, the reference's exact recovery story (T6).
+    sink absorbs, the reference's exact recovery story (T6). The
+    checkpoint is released before the run returns.
     """
     last = store.get(pipeline, source_name)
     batch = extract(spark, last)
     if batch is None:
         return None  # extract found nothing past the watermark
-    # ONE evaluation of the extract lineage (round-12 review): wm_expr's
-    # aggregate and load's sink write used to each run the full DAG —
+    # ONE evaluation of the extract lineage (round-12 review): a
+    # watermark job and the sink write used to each run the full DAG —
     # doubling every tick's scan/groupBy cost and letting the two
     # evaluations observe different source states (files landing between
     # the wm job and the load job) or different nondeterministic columns
     # (extracted_at timestamps). localCheckpoint materializes on the
-    # executors once; both consumers read the same rows.
-    batch = batch.localCheckpoint(eager=True)
-    new_wm = wm_expr(batch)
-    if new_wm is None:
-        return None  # empty batch — nothing past the watermark
-    load(batch)
+    # executors once; the observed mark and the load read the same rows.
+    if isinstance(wm_expr, Column):
+        obs = Observation()
+        batch = batch.observe(obs, wm_expr.alias("wm")).localCheckpoint(eager=True)
+        new_wm = obs.get["wm"]
+    else:
+        batch = batch.localCheckpoint(eager=True)
+        new_wm = wm_expr()
+    try:
+        if new_wm is None:
+            return None  # empty batch — nothing past the watermark
+        load(batch)
+    finally:
+        release_checkpoint(batch)
     store.set(pipeline, source_name, str(new_wm))
     return new_wm

@@ -34,6 +34,19 @@ def test_commit_and_read_roundtrip(spark, tmp_path):
     assert _rows(read_committed(spark, t)) == _rows(df)
 
 
+def test_read_committed_uses_the_recorded_schema(spark, tmp_path):
+    """A version commit_version wrote is read with the schema it
+    recorded: the same schema inference finds, and no Spark job."""
+    t = str(tmp_path / "tbl")
+    commit_version(spark, _mk(spark, [(1, "a", 10)]), t)
+    inferred = spark.read.parquet(f"{t}/_v-{current_version(spark, t)[1]}").schema
+    sc = spark.sparkContext
+    j0 = max(sc.statusTracker().getJobIdsForGroup(None))
+    df = read_committed(spark, t)
+    assert max(sc.statusTracker().getJobIdsForGroup(None)) == j0
+    assert df.schema == inferred
+
+
 def test_upsert_keep_latest_semantics_and_gc(spark, tmp_path):
     t = str(tmp_path / "tbl")
     upsert_versioned(spark, _mk(spark, [(1, "a", 10), (2, "b", 10)]), t, ["k"], "ts")

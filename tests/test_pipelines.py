@@ -573,7 +573,7 @@ def test_noop_tick_commits_nothing_and_launches_few_jobs(spark, tmp_path, small_
     assert second.failed == {}
     assert second.watermarks and all(v is None for v in second.watermarks.values())
     assert versions() == before
-    assert jobs <= 12, f"no-op tick launched {jobs} Spark jobs"
+    assert jobs <= 6, f"no-op tick launched {jobs} Spark jobs"
 
 
 def test_stock_points_extract_prunes_raw_log_days(spark, tmp_path, small_events, monkeypatch):
@@ -1086,3 +1086,231 @@ def test_inventory_imports_without_session():
     )
     assert out.returncode == 0, out.stderr
     assert "imported" in out.stdout
+
+
+def _fake_stages(monkeypatch, spark, sales, raw, points):
+    """Replace run_etl's three stages with ``sales(store)``, ``raw(store)``
+    and ``points(store)``; each call records the Spark job tags its
+    thread carries."""
+    from osmart_etl_spark.pipelines import inventory
+    from osmart_etl_spark.pipelines import sales as sales_mod
+
+    tags: dict[str, set] = {}
+
+    def wrap(name, fn):
+        def stage(spark_, **kw):
+            tags[name] = set(spark.sparkContext.getJobTags())
+            return fn(kw.get("tienda") or kw.get("store_name"))
+        return stage
+
+    monkeypatch.setattr(sales_mod, "run_sales_incremental", wrap("sales", sales))
+    monkeypatch.setattr(inventory, "run_raw_movements_incremental", wrap("raw_movements", raw))
+    monkeypatch.setattr(inventory, "run_stock_points_incremental", wrap("stock_points", points))
+    return tags
+
+
+def _run_fake_tick(spark, tmp_path):
+    from osmart_etl_spark.pipelines.orchestrator import run_etl
+
+    return run_etl(
+        spark, events_path=str(tmp_path / "ev"), ventas_path=str(tmp_path / "v"),
+        raw_log_path=str(tmp_path / "r"), points_path=str(tmp_path / "p"),
+        watermark_path=str(tmp_path / "wm"), stores=("s1",),
+    )
+
+
+def test_run_etl_runs_sales_beside_the_inventory_chain(spark, tmp_path, monkeypatch):
+    """Sales overlaps raw movements: it waits for an event only the raw
+    stage sets, so an orchestrator that runs the stages one after the
+    other times the wait out. Sales then finishes last, and the report
+    still lists the stages in the reference's order. Each stage's jobs
+    carry its own tag only."""
+    import threading
+
+    raw_ran, inventory_done = threading.Event(), threading.Event()
+
+    def sales(store):
+        if not raw_ran.wait(timeout=20):
+            raise TimeoutError("sales ran before raw_movements started")
+        assert inventory_done.wait(timeout=20)
+        return 7
+
+    def raw(store):
+        raw_ran.set()
+        return "2025-01-03T00:00:00.000000"
+
+    def points(store):
+        inventory_done.set()
+        return "2025-01-03"
+
+    tags = _fake_stages(monkeypatch, spark, sales, raw, points)
+    report = _run_fake_tick(spark, tmp_path)
+    assert report.failed == {}
+    order = ["sales:s1", "raw_movements:s1", "stock_points:s1"]
+    assert report.succeeded == order
+    assert list(report.watermarks) == order
+    assert report.watermarks["sales:s1"] == 7
+    assert tags == {s.split(":")[0]: {s} for s in order}
+    assert not spark.sparkContext.getJobTags()
+
+
+def test_run_etl_sales_failure_does_not_stop_the_inventory_branch(spark, tmp_path, monkeypatch):
+    def sales(store):
+        raise RuntimeError("sales sink down")
+
+    _fake_stages(monkeypatch, spark, sales, lambda s: "t", lambda s: "d")
+    report = _run_fake_tick(spark, tmp_path)
+    assert report.failed == {"sales:s1": "sales sink down"}
+    assert report.succeeded == ["raw_movements:s1", "stock_points:s1"]
+    assert list(report.watermarks) == ["raw_movements:s1", "stock_points:s1"]
+
+
+def test_run_etl_releases_its_checkpoints(spark, tmp_path, small_events):
+    """Every stage releases the localCheckpoints it took: after a landing
+    tick and a no-op tick no RDD blocks and no cached plans remain."""
+    from osmart_etl_spark.pipelines.orchestrator import run_etl
+
+    sc = spark.sparkContext
+    spark.catalog.clearCache()
+    for rdd in sc._jsc.getPersistentRDDs().values():
+        rdd.unpersist(True)
+    assert len(sc._jsc.sc().getRDDStorageInfo()) == 0
+    paths = {
+        "events_path": small_events,
+        "ventas_path": str(tmp_path / "ventas"),
+        "raw_log_path": str(tmp_path / "raw"),
+        "points_path": str(tmp_path / "points"),
+        "watermark_path": str(tmp_path / "wm"),
+    }
+    for _ in range(2):
+        assert run_etl(spark, **paths).failed == {}
+    assert len(sc._jsc.sc().getRDDStorageInfo()) == 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _spine_stock_points(movements, prior_points):
+    """The dense-calendar formulation of compute_stock_points, kept as
+    its oracle: replay → daily net → a calendar spine per key from the
+    first movement day to the day after the last → EOD running sum →
+    SOD = previous EOD → keep the days whose SOD changes."""
+    from pyspark.sql import Window
+
+    from osmart_etl_spark.ops.windows import change_points, replay_running_balance
+
+    zero = F.lit(0).cast("decimal(18,2)")
+    mv, init_col = movements, None
+    if prior_points is not None:
+        w = Window.partitionBy("art_id").orderBy(F.col("point_date").desc())
+        latest = (
+            prior_points.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .select("art_id", F.col("sod_stock").alias("init_balance"))
+        )
+        mv = mv.join(latest, "art_id", "left").withColumn(
+            "init_balance", F.coalesce(F.col("init_balance"), zero)
+        )
+        init_col = "init_balance"
+    eff = replay_running_balance(
+        mv, key="art_id", order=["fecha", "id"],
+        delta_col="delta_cantidad", is_absolute_col="is_absolute",
+        abs_value_col="abs_stock_after", init_col=init_col,
+    )
+    daily = eff.groupBy("art_id", F.to_date("fecha").alias("d")).agg(
+        F.sum("effective_delta").alias("net")
+    )
+    bounds = daily.groupBy("art_id").agg(
+        F.min("d").alias("dmin"), F.date_add(F.max("d"), 1).alias("dmax")
+    )
+    spine = bounds.select(
+        "art_id", F.explode(F.sequence("dmin", "dmax", F.expr("interval 1 day"))).alias("cal_date")
+    )
+    dense = spine.join(
+        daily.withColumnRenamed("d", "cal_date"), ["art_id", "cal_date"], "left"
+    ).select("art_id", "cal_date", F.coalesce(F.col("net"), zero).alias("net"))
+    w_cum = (
+        Window.partitionBy("art_id").orderBy("cal_date")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    base = F.coalesce(F.col("init_balance"), zero) if init_col else zero
+    eod = dense
+    if init_col:
+        eod = dense.join(mv.select("art_id", "init_balance").dropDuplicates(["art_id"]), "art_id", "left")
+    eod = eod.withColumn("eod_stock", base + F.sum("net").over(w_cum))
+    sod = eod.select(
+        "art_id", "cal_date",
+        F.coalesce(
+            F.lag("eod_stock").over(Window.partitionBy("art_id").orderBy("cal_date")), base
+        ).alias("sod_stock"),
+    )
+    points = change_points(sod, ["art_id"], ["cal_date"], "sod_stock")
+    return points.select("art_id", F.col("cal_date").alias("point_date"), "sod_stock")
+
+
+MOVEMENTS_DDL = (
+    "id long, fecha timestamp, art_id long, is_absolute boolean, "
+    "abs_stock_after decimal(18,2), delta_cantidad decimal(20,2)"
+)
+
+
+def _history(spark, seed: int):
+    """A generated movement history and a prior points state: per SKU,
+    events on scattered days with multi-day gaps, same-day +x/−x pairs
+    (net 0), absolute resets (some with a NULL target); a prior point
+    for every other SKU, some of them on several dates."""
+    import random
+    from decimal import Decimal
+
+    rng = random.Random(seed)
+    rows, prior, eid = [], [], 0
+    for sku in range(1, 13):
+        day = dt.datetime(2025, 3, 1) + dt.timedelta(days=rng.randrange(3))
+        for _ in range(rng.randrange(1, 7)):
+            day += dt.timedelta(days=rng.choice([0, 1, 1, 2, 5]))
+            kind = rng.choice(["delta", "delta", "pair", "reset", "reset_null"])
+            x = Decimal(rng.randrange(-500, 900)) / 100
+            at = day + dt.timedelta(hours=rng.randrange(20))
+            if kind == "pair":
+                evs = [(False, None, abs(x)), (False, None, -abs(x))]
+            elif kind == "reset":
+                evs = [(True, abs(x), Decimal(0))]
+            elif kind == "reset_null":
+                evs = [(True, None, Decimal(0))]
+            else:
+                evs = [(False, None, x)]
+            for k, (is_abs, target, delta) in enumerate(evs):
+                eid += 1
+                rows.append((eid, at + dt.timedelta(minutes=k), sku, is_abs, target, delta))
+        if sku % 2:
+            for back in range(rng.randrange(1, 4)):
+                prior.append((sku, dt.date(2025, 2, 20) - dt.timedelta(days=back),
+                              Decimal(rng.randrange(0, 3000)) / 100))
+    mv = spark.createDataFrame(rows, MOVEMENTS_DDL)
+    prior_df = spark.createDataFrame(prior, "art_id long, point_date date, sod_stock decimal(38,2)")
+    return mv, prior_df
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_compute_stock_points_equals_spine_oracle(spark, seed):
+    """The change-point form emits exactly the rows and the schema of
+    the dense-calendar form, with and without a prior state."""
+    from osmart_etl_spark.pipelines.inventory import compute_stock_points
+
+    mv, prior = _history(spark, seed)
+    for state in (None, prior):
+        got = compute_stock_points(mv, state, spark)
+        want = _spine_stock_points(mv, state)
+        assert got.schema.simpleString() == (
+            "struct<art_id:bigint,point_date:date,sod_stock:decimal(38,2)>"
+        )
+        assert sorted(got.collect()) == sorted(want.collect())
+
+
+def test_compute_stock_points_plans_two_exchanges(spark):
+    """With a prior state, the flat form shuffles twice: the replay's
+    exchange on art_id and the prior frontier's aggregate. Everything
+    after the replay keys on art_id and reuses its partitioning."""
+    from osmart_etl_spark.pipelines.inventory import compute_stock_points
+
+    mv, prior = _history(spark, 1)
+    plan = compute_stock_points(mv, prior, spark)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") <= 2, plan
