@@ -520,12 +520,15 @@ def _gc(
             fs.delete(jvm.org.apache.hadoop.fs.Path(full), False)
 
 
-def read_sidecar(spark: SparkSession, table: str) -> dict | None:
-    """Stats sidecar (``_sidecar.json``) of the table's CURRENT committed
-    version, or None when the version carries none. One file read at the
-    commit log's altitude — never a Spark job."""
+def read_sidecar(
+    spark: SparkSession, table: str, version: tuple[int, str] | None = None
+) -> dict | None:
+    """Stats sidecar (``_sidecar.json``) of ``version`` (a
+    ``current_version`` pair; default the table's CURRENT committed
+    version), or None when the version carries none. One file read at
+    the commit log's altitude — never a Spark job."""
     base = table.rstrip("/")
-    cur = current_version(spark, base)
+    cur = version or current_version(spark, base)
     if cur is None:
         return None
     return _read_small_json(spark, f"{base}/_v-{cur[1]}/_sidecar.json")
@@ -540,6 +543,7 @@ def upsert_versioned(
     *,
     keep_versions: int = 2,
     sidecar: dict | None = None,
+    expected_seq: int | None = None,
 ) -> int:
     """Keep-latest upsert (S7/S8 semantics, io/sinks.upsert_keep_latest)
     materialized through the commit log:
@@ -558,6 +562,12 @@ def upsert_versioned(
     with a ``RuntimeError`` naming it and is left untouched: merging
     without it would drop its rows, and deleting it is not this sink's
     call. Move such files aside, or load them as the first batch.
+
+    ``expected_seq`` is the sequence the caller derived ``new`` from (0
+    for an empty table). If the log has moved past it, the upsert raises
+    ``ConcurrentCommitError`` before any Spark work; otherwise it merges
+    with that version and publishes with a CAS on it. None takes the
+    current version.
     """
     from osmart_etl_spark.io.sinks import upsert_keep_latest
 
@@ -570,6 +580,9 @@ def upsert_versioned(
             "the sink."
         )
     cur = current_version(spark, base)
+    seq = cur[0] if cur else 0
+    if expected_seq is not None and expected_seq != seq:
+        raise ConcurrentCommitError(f"{base}: derived from seq {expected_seq} but log is at {seq}")
     if cur is None:
         # Round-9 (ADVICE): the create path CAS-claims exactly lock
         # 00000001, and _gc — the only thing that TTL-sweeps a crashed
@@ -586,11 +599,10 @@ def upsert_versioned(
         # next_seq past the first's lock and silently shadows its
         # batch). Claiming exactly seq 1 makes the loser surface as
         # ConcurrentCommitError — the same CAS every later upsert gets.
-        merged, expected = upsert_keep_latest(None, new, keys, order_col), 0
+        merged = upsert_keep_latest(None, new, keys, order_col)
     else:
-        old = read_committed(spark, base)
-        merged, expected = upsert_keep_latest(old, new, keys, order_col), cur[0]
+        merged = upsert_keep_latest(read_committed(spark, base), new, keys, order_col)
     return commit_version(
-        spark, merged, base, expected_seq=expected,
+        spark, merged, base, expected_seq=seq,
         keep_versions=keep_versions, sidecar=sidecar,
     )

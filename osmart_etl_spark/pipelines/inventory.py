@@ -8,11 +8,13 @@ buffer and client-side re-filter (T2), append to the raw log
 EP3 (stock points incremental): filter/normalize the raw log, load prior
 SOD state (as-of, J7), replay with state continuity (W2/T5), daily net →
 sparse change-points (no calendar scaffold: a day without movements
-changes nothing), upsert into the points table, advance the date
-watermark (update_stock_points.py).
+changes nothing), upsert into the points table together with the date
+watermark, which rides in the points commit (update_stock_points.py).
+Only EP2 keeps its watermark in ``streaming/incremental.WatermarkStore``.
 
-Each run covers one store, as in the reference (the orchestrator loops
-stores). Sink layout: the raw log partitions by event date so
+Each EP2 run covers one store, as in the reference (the orchestrator
+loops stores); the points table has no store column, so EP3 keeps one
+watermark. Sink layout: the raw log partitions by event date so
 incremental reads prune to the slice (the Spark analogue of the
 reference's (art_id,tienda_id,fecha) index, §4).
 """
@@ -24,8 +26,13 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from osmart_etl_spark.io.atomic import read_committed, upsert_versioned
-from osmart_etl_spark.io.sinks import write_append
+from osmart_etl_spark.io.atomic import (
+    current_version,
+    read_committed,
+    read_sidecar,
+    upsert_versioned,
+)
+from osmart_etl_spark.io.sinks import release_checkpoint, write_append
 from osmart_etl_spark.ops.windows import (
     REPLAY_TASK_ROW_BUDGET,
     replay_running_balance,
@@ -222,20 +229,33 @@ def run_stock_points_incremental(
     *,
     raw_log_path: str,
     points_path: str,
-    watermark_path: str,
-    store_name: str = "tienda_01",
     complete_days_before: dt.date | None = None,
     jdbc: dict | None = None,
     task_row_budget: int = REPLAY_TASK_ROW_BUDGET,
 ) -> str | None:
     """EP3: compute/refresh stock points from movements past the date
-    watermark, upsert on (art_id, point_date).
+    watermark, upsert on (art_id, point_date). Returns the new
+    watermark, or None when no movement lies past it.
+
+    The watermark is ``tick_wm`` in the points commit's sidecar. The
+    run reads it and the prior points from one points version, and
+    publishes the new points, watermark and key histogram as one commit
+    with a CAS on that version's sequence (io/atomic.upsert_versioned):
+    a crash leaves the previous version and its watermark, and a run
+    that committed in between makes this one raise
+    ``ConcurrentCommitError``, so a slice is never applied twice. The
+    points table has no store column, so it keeps one watermark. A
+    current version without ``tick_wm`` (a table whose watermark lived
+    in the watermark table) raises ``RuntimeError`` and keeps every
+    file, rather than replaying the whole raw log on top of its points.
 
     ``jdbc`` = {"url", "table", "driver"} (optional): ALSO land the
     refreshed points in a live relational table via the staged MERGE —
     the reference's actual EP3 sink (temp-staging bulk upsert into
     MySQL, update_stock_points.py:237-256). Same composite PK and
-    keep-latest order as the lake copy.
+    keep-latest order as the lake copy. The batch is materialized once
+    and reaches the mirror before the lake publish: a mirror failure
+    commits nothing, and the next run lands the slice in both.
 
     ``complete_days_before`` enforces the reference's T3 rule
     ("only process complete days" — update_stock_points.py:86): only
@@ -244,91 +264,71 @@ def run_stock_points_incremental(
     the reference's movements-through-yesterday behavior; None processes
     everything (tests / backfills of closed history).
     """
-    store = WatermarkStore(spark, watermark_path)
-    # The watermark must track the max PROCESSED MOVEMENT date — NOT the
-    # max emitted point_date, which is movement-day + 1 (a day's net moves
-    # the next day's SOD): advancing to it would make the next run's strict
-    # `>` filter silently drop one full day of movements. (The bug is
-    # insidious because any later absolute reset masks it in final
-    # balances.) Computed eagerly per run and carried via this cell.
-    new_wm_holder: list = [None]
-    stats_holder: list = [None]
-
-    def extract(spark_, last):
-        mv = spark_.read.schema(RAW_LOG_SCHEMA).parquet(raw_log_path)
-        if last is not None:
-            after = F.lit(last).cast("date")
-            # fecha_dia, the raw log's partition column, is to_date(fecha):
-            # its predicate prunes the scan to the days past the watermark
-            mv = mv.filter(F.col("fecha_dia") > after).filter(F.to_date("fecha") > after)
-        if complete_days_before is not None:
-            mv = mv.filter(F.to_date("fecha") < F.lit(complete_days_before))
-        # ONE pass computes both the watermark and the slice's key
-        # histogram summary (VERDICT r11 #2): group by key first (the
-        # shuffle carries one row per key per map partition), then fold
-        # to a scalar row. This replaces the old global max(fecha)
-        # aggregate — the skew number arrives with ZERO extra input
-        # passes, which is what SCALE.md's call-site policy demands of
-        # the incremental path.
-        row = (
-            mv.groupBy("art_id")
-            .agg(
-                F.count(F.lit(1)).alias("__n"),
-                F.max(F.to_date("fecha")).alias("__d"),
+    cur = current_version(spark, points_path)
+    last = None
+    if cur is not None:
+        last = (read_sidecar(spark, points_path, cur) or {}).get("tick_wm")
+        if last is None:
+            raise RuntimeError(
+                f"{points_path}: committed version {cur[0]} carries no tick_wm — "
+                "a points table whose watermark lived in the watermark table. "
+                "Refusing to replay the raw log on top of its points; rebuild "
+                "the lake (delete its sinks and the watermark table, then run "
+                "a backfill)."
             )
-            .agg(
-                F.max("__d").alias("m"),
-                F.max("__n").alias("max_key_rows"),
-                F.count(F.lit(1)).alias("n_keys"),
-            )
-            .first()
+    mv = spark.read.schema(RAW_LOG_SCHEMA).parquet(raw_log_path)
+    if last is not None:
+        after = F.lit(last).cast("date")
+        # fecha_dia, the raw log's partition column, is to_date(fecha):
+        # its predicate prunes the scan to the days past the watermark
+        mv = mv.filter(F.col("fecha_dia") > after).filter(F.to_date("fecha") > after)
+    if complete_days_before is not None:
+        mv = mv.filter(F.to_date("fecha") < F.lit(complete_days_before))
+    # ONE pass computes both the watermark and the slice's key histogram
+    # summary (VERDICT r11 #2): group by key first (the shuffle carries
+    # one row per key per map partition), then fold to a scalar row. The
+    # watermark is the max PROCESSED MOVEMENT date, not the max emitted
+    # point_date (movement day + 1): the next run's strict `>` filter
+    # would otherwise drop one full day of movements.
+    row = (
+        mv.groupBy("art_id")
+        .agg(F.count(F.lit(1)).alias("__n"), F.max(F.to_date("fecha")).alias("__d"))
+        .agg(
+            F.max("__d").alias("m"),
+            F.max("__n").alias("max_key_rows"),
+            F.count(F.lit(1)).alias("n_keys"),
         )
-        if row["m"] is None:
-            return None  # empty slice: no prior-points read, no replay
-        new_wm_holder[0] = row["m"].isoformat()
-        stats_holder[0] = {
-            "max_key_rows": int(row["max_key_rows"] or 0),
-            "n_keys": int(row["n_keys"] or 0),
-            "tick_wm": new_wm_holder[0],
-        }
-        try:
-            prior = read_committed(spark_, points_path)
-        except FileNotFoundError:
-            prior = None
-        pts = compute_stock_points(
-            mv, prior, spark_,
-            max_key_rows=stats_holder[0]["max_key_rows"],
-            task_row_budget=task_row_budget,
+        .first()
+    )
+    if row["m"] is None:
+        return None  # empty slice: no prior-points read, no replay
+    stats = {
+        "max_key_rows": int(row["max_key_rows"] or 0),
+        "n_keys": int(row["n_keys"] or 0),
+        "tick_wm": row["m"].isoformat(),
+    }
+    prior = None if cur is None else read_committed(spark, points_path, at=cur[0])
+    batch = (
+        compute_stock_points(
+            mv, prior, spark,
+            max_key_rows=stats["max_key_rows"], task_row_budget=task_row_budget,
         )
-        return pts.withColumn("updated_at", F.current_timestamp())
-
-    def load(batch: DataFrame) -> None:
-        # Atomic versioned sink: crash-safe publish, CAS against a
-        # concurrent duplicate run. The tick's key-histogram summary
-        # rides in the commit sidecar, so stats and state are one
-        # publish and a later reader gets the skew profile without a
-        # data scan (io/atomic.read_sidecar). The batch is
-        # run_incremental's checkpoint, so the JDBC mirror gets the rows
-        # (and updated_at stamps) the lake commits.
-        upsert_versioned(
-            spark, batch, points_path,
-            keys=["art_id", "point_date"], order_col="updated_at",
-            sidecar=stats_holder[0],
-        )
+        .withColumn("updated_at", F.current_timestamp())
+        .localCheckpoint(eager=True)
+    )
+    keys = ["art_id", "point_date"]
+    try:
         if jdbc:
             from osmart_etl_spark.io.jdbc_sink import jdbc_upsert
 
             jdbc_upsert(
-                spark,
-                batch,
-                jdbc["url"],
-                jdbc["table"],
-                keys=["art_id", "point_date"],
-                order_col="updated_at",
-                driver=jdbc.get("driver"),
+                spark, batch, jdbc["url"], jdbc["table"],
+                keys=keys, order_col="updated_at", driver=jdbc.get("driver"),
             )
-
-    return run_incremental(
-        spark, store=store, pipeline="stock_points", source_name=store_name,
-        extract=extract, load=load, wm_expr=lambda: new_wm_holder[0],
-    )
+        upsert_versioned(
+            spark, batch, points_path, keys=keys, order_col="updated_at",
+            sidecar=stats, expected_seq=cur[0] if cur else 0,
+        )
+    finally:
+        release_checkpoint(batch)
+    return stats["tick_wm"]

@@ -15,10 +15,10 @@ each stage is a few short, fixed-cost jobs, so the tick takes about as
 long as its longer branch. Stores stay serial, as in the reference: they
 share the sink paths.
 
-Each stage runs once per store, with its own watermark and its own
-failure isolation (one broken store DB must not block the others), and
-under the Spark job tag ``<stage>:<store>``, so the status tracker
-attributes each job to the stage that launched it.
+Each stage runs once per store, with its own failure isolation (one
+broken store DB must not block the others), and under the Spark job tag
+``<stage>:<store>``, so the status tracker attributes each job to the
+stage that launched it.
 """
 
 from __future__ import annotations
@@ -76,8 +76,10 @@ def run_etl(
     movements, stock points) per store, whichever branch finished first:
     ``succeeded`` and the keys of ``failed`` and ``watermarks``.
 
-    ``watermark_path`` holds the inventory stages' watermarks; sales
-    commits its own in the manifest of ``ventas_path``.
+    ``watermark_path`` holds only the raw-movements watermark. Sales
+    commits its own in the manifest of ``ventas_path``, and stock points
+    in the commit of ``points_path`` (one for the table, which has no
+    store column).
 
     ``jdbc_ventas`` / ``jdbc_points`` (optional {"url","table","driver"})
     forward to the respective pipelines' live-database landing — the
@@ -99,9 +101,7 @@ def run_etl(
             watermark_path=watermark_path, store_name=store,
         ),
         "stock_points": lambda store: run_stock_points_incremental(
-            spark, raw_log_path=raw_log_path, points_path=points_path,
-            watermark_path=watermark_path, store_name=store,
-            jdbc=jdbc_points,
+            spark, raw_log_path=raw_log_path, points_path=points_path, jdbc=jdbc_points,
         ),
     }
     sc = spark.sparkContext

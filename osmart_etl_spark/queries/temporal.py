@@ -495,78 +495,28 @@ def calendar_scaffold(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stock_points_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EP3 end-to-end — the reference's flagship stock-points pipeline
-    (update_stock_points.py, SURVEY §3 EP3) as ONE lazy Catalyst DAG:
-    event normalization → segmented-reset replay (W2) → daily net (A3) →
-    per-key calendar scaffold (U8) → cumulative EOD → SOD lag (W4) →
-    sparse change-point encode (W5). The reference crosses a
-    process/engine boundary at every stage; here the only boundaries are
-    the source scan and the sink, and every window shares the user_id
-    partitioning so the whole chain runs off two exchanges (key, then
-    key+day).
+    (update_stock_points.py, SURVEY §3 EP3), run by the ETL tick's own
+    code: ``pipelines/inventory.compute_stock_points`` over the
+    normalized events, with no prior state. The oracle keeps the
+    reference's dense form (per-key calendar spine → cumulative EOD →
+    SOD lag → change points); the pipeline reaches the same points from
+    the daily nets alone, every operator inside the head exchange.
     """
     from osmart_etl_spark.ops.partitioning import scaled_partitions
-    from osmart_etl_spark.ops.windows import change_points, replay_running_balance
-
-    mv = movement_events(spark, sf_dir)
-    # ONE volume-scaled numbered exchange on user_id at the head of the
-    # chain: every downstream window/groupBy keys on user_id (or
-    # user_id+day, which hash(user_id) also satisfies), so this is the
-    # only fact-volume shuffle — and the fixed count keeps AQE's
-    # byte-based coalescing from serializing the narrow-row window
-    # sorts (measured round 10: 1-task stages reading 4.6M records at
-    # x100 amplification, 26 s -> see SCALE.md).
-    mv = mv.repartition(scaled_partitions(mv), "user_id")
-    zero = F.lit(0).cast("decimal(18,2)")
-
-    eff = replay_running_balance(
-        mv, key="user_id", order=["ts", "event_id"],
-        delta_col="delta", is_absolute_col="is_abs", abs_value_col="abs_value",
-    )
-    daily = eff.groupBy("user_id", F.to_date("ts").alias("d")).agg(
-        F.sum("effective_delta").alias("net")
-    )
-    # Join-free scaffold (round 10): the spine⋈daily left join made
-    # EnsureRequirements re-exchange BOTH sides on (user_id, cal_date)
-    # and then re-exchange back to user_id for the cumsum window (AQE
-    # also serialized those narrow exchanges to 1-2 tasks at x100).
-    # Collapsing daily to a per-user day→net MAP keeps everything on
-    # the head exchange's hash(user_id) partitioning: the per-user agg,
-    # the sequence explode, the map lookup, and every downstream window
-    # are all exchange-free. Map size = that user's active-day count,
-    # bounded by the calendar span — never corpus-proportional.
-    per_user = daily.groupBy("user_id").agg(
-        F.map_from_entries(F.collect_list(F.struct("d", "net"))).alias("__nets"),
-        F.min("d").alias("dmin"),
-        F.date_add(F.max("d"), 1).alias("dmax"),
-    )
-    dense = per_user.select(
-        "user_id",
-        F.explode(F.sequence("dmin", "dmax", F.expr("interval 1 day"))).alias(
-            "cal_date"
-        ),
-        "__nets",
-    ).select(
-        "user_id",
-        "cal_date",
-        F.coalesce(F.element_at("__nets", F.col("cal_date")), zero).alias("net"),
+    from osmart_etl_spark.pipelines.inventory import (
+        compute_stock_points,
+        normalize_movements,
     )
 
-    w_cum = (
-        Window.partitionBy("user_id")
-        .orderBy("cal_date")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w = Window.partitionBy("user_id").orderBy("cal_date")
-    # Two steps: Spark forbids a window function as another window
-    # function's argument (lag(sum over) must materialize first).
-    eod = dense.withColumn("eod_stock", F.sum("net").over(w_cum))
-    sod = eod.select(
-        "user_id", "cal_date",
-        F.coalesce(F.lag("eod_stock").over(w), zero).alias("sod_stock"),
-    )
-    points = change_points(sod, ["user_id"], ["cal_date"], "sod_stock")
-    return points.select(
-        "user_id", F.col("cal_date").alias("point_date"),
+    mv = normalize_movements(read_table(spark, sf_dir, "events"))
+    # ONE volume-scaled numbered exchange on the key at the head of the
+    # chain: the fixed count keeps AQE's byte-based coalescing from
+    # serializing the narrow-row window sorts (measured round 10:
+    # 1-task stages reading 4.6M records at x100 amplification, 26 s ->
+    # see SCALE.md).
+    mv = mv.repartition(scaled_partitions(mv), "art_id")
+    return compute_stock_points(mv, None, spark).select(
+        F.col("art_id").alias("user_id"), "point_date",
         dbl(F.col("sod_stock")).alias("sod_stock"),
     )
 

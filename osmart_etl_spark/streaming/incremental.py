@@ -10,17 +10,19 @@ advance the watermark in the same run (update_raw_stock_movements.py:
   ``io/atomic`` commit-log table, read and CAS-published on the driver —
   reading or advancing a watermark launches no Spark job;
 - extraction is any DataFrame-producing callable; the watermark predicate
-  composes onto it and pushes down to the scan. An extract that already
-  knows its slice is empty returns None and the run stops there;
+  composes onto it and pushes down to the scan;
 - the batch is checkpointed once, and the new watermark is an
   ``Observation`` on that checkpoint, so computing it launches no job;
-- the sink is idempotent by construction (append of a deterministic
-  slice, or keyed upsert), so re-runs after failure are safe (T6) —
-  the watermark only advances after the sink commits.
+- the watermark only advances after the sink commits, so a crash
+  between the two re-processes the slice (T6): harmless for a keyed
+  upsert, a duplicate slice for the raw log's append (ROADMAP
+  direction 1).
 
-The Structured Streaming variant (replay_stream.py) subsumes this for
-true streams; this driver covers the reference's cron-style cadence and
-works against any batch source.
+Raw movements (EP2) is the one pipeline on this loop. Sales and stock
+points commit their watermarks with their data, in the sink's own
+commit. The Structured Streaming variant (replay_stream.py) subsumes
+this for true streams; this driver covers the reference's cron-style
+cadence and works against any batch source.
 """
 
 from __future__ import annotations
@@ -112,33 +114,26 @@ def run_incremental(
     store: WatermarkStore,
     pipeline: str,
     source_name: str,
-    extract: Callable[[SparkSession, Any | None], DataFrame | None],
+    extract: Callable[[SparkSession, Any | None], DataFrame],
     load: Callable[[DataFrame], None],
-    wm_expr: Column | Callable[[], Any],
+    wm_expr: Column,
 ) -> Any | None:
     """One incremental run for one (pipeline, store): extract past the
     watermark, load, advance the watermark (T1/T2/T6).
 
     ``extract(spark, last_wm)`` returns only rows beyond ``last_wm``
-    (None = full backfill — the seed_* scripts' default-epoch path), or
-    None when it already knows nothing lies past it.
+    (None = full backfill — the seed_* scripts' default-epoch path).
 
     The batch is materialized once (``localCheckpoint``), and ``load``
-    reads that checkpoint. ``wm_expr`` gives the new high-water mark
-    (scalar, A4). An aggregate ``Column`` (``F.max("fecha")``) is read
-    by an ``Observation`` on that checkpoint: the same evaluation as
-    the loaded rows, and no Spark job of its own. A callable with no
-    arguments is for an extract that has already computed the mark. A
-    mark of None means an empty batch: nothing is loaded.
-    The watermark writes only after ``load`` returns, so a crash between
-    load and checkpoint re-processes the slice — which the idempotent
-    sink absorbs, the reference's exact recovery story (T6). The
-    checkpoint is released before the run returns.
+    reads that checkpoint. ``wm_expr``, an aggregate ``Column``
+    (``F.max("fecha")``), gives the new high-water mark (scalar, A4). An
+    ``Observation`` on that checkpoint reads it: the same evaluation as
+    the loaded rows, and no Spark job of its own. A mark of None means
+    an empty batch: nothing is loaded. The watermark writes only after
+    ``load`` returns (T6), and the checkpoint is released before the run
+    returns.
     """
-    last = store.get(pipeline, source_name)
-    batch = extract(spark, last)
-    if batch is None:
-        return None  # extract found nothing past the watermark
+    batch = extract(spark, store.get(pipeline, source_name))
     # ONE evaluation of the extract lineage (round-12 review): a
     # watermark job and the sink write used to each run the full DAG —
     # doubling every tick's scan/groupBy cost and letting the two
@@ -146,13 +141,9 @@ def run_incremental(
     # the wm job and the load job) or different nondeterministic columns
     # (extracted_at timestamps). localCheckpoint materializes on the
     # executors once; the observed mark and the load read the same rows.
-    if isinstance(wm_expr, Column):
-        obs = Observation()
-        batch = batch.observe(obs, wm_expr.alias("wm")).localCheckpoint(eager=True)
-        new_wm = obs.get["wm"]
-    else:
-        batch = batch.localCheckpoint(eager=True)
-        new_wm = wm_expr()
+    obs = Observation()
+    batch = batch.observe(obs, wm_expr.alias("wm")).localCheckpoint(eager=True)
+    new_wm = obs.get["wm"]
     try:
         if new_wm is None:
             return None  # empty batch — nothing past the watermark

@@ -347,36 +347,51 @@ def test_build_unique_index_sql():
 
 
 @pytest.mark.slow
-def test_stock_points_pipeline_lands_in_jdbc(spark, derby_url, tmp_path):
+def test_stock_points_pipeline_lands_in_jdbc(spark, derby_url, tmp_path, monkeypatch):
     """EP3 with the reference's real sink shape (update_stock_points.py:
     237-256, temp-staging bulk upsert): two incremental runs land stock
-    points in Derby; the DB table must equal the parquet points table."""
+    points in Derby; the DB table must equal the parquet points table.
+    The mirror is written before the lake commit."""
     import datetime as dt
 
+    from osmart_etl_spark.io import jdbc_sink
     from osmart_etl_spark.io.sources import jdbc_scan, read_table
+    from osmart_etl_spark.pipelines import inventory
     from osmart_etl_spark.pipelines.inventory import (
         run_raw_movements_incremental,
         run_stock_points_incremental,
     )
     from tests.conftest import SF_SMALL
 
+    order = []
+
+    def spy(name, fn):
+        def call(*a, **kw):
+            order.append(name)
+            return fn(*a, **kw)
+        return call
+
+    monkeypatch.setattr(jdbc_sink, "jdbc_upsert", spy("mirror", jdbc_sink.jdbc_upsert))
+    monkeypatch.setattr(inventory, "upsert_versioned", spy("lake", inventory.upsert_versioned))
+
     events_path = str(tmp_path / "events")
     read_table(spark, SF_SMALL, "events").write.parquet(events_path)
     raw = str(tmp_path / "raw_log")
     points = str(tmp_path / "points")
-    wmp = str(tmp_path / "wm")
     jdbc = {"url": derby_url, "table": "stock_points_db", "driver": DRIVER}
 
     assert run_raw_movements_incremental(
-        spark, events_path=events_path, raw_log_path=raw, watermark_path=wmp
+        spark, events_path=events_path, raw_log_path=raw, watermark_path=str(tmp_path / "wm")
     ) is not None
     assert run_stock_points_incremental(
-        spark, raw_log_path=raw, points_path=points, watermark_path=wmp, jdbc=jdbc
+        spark, raw_log_path=raw, points_path=points, jdbc=jdbc
     ) is not None
+    assert order == ["mirror", "lake"]
     # idempotent second run: no new movements -> no-op, DB unchanged
     assert run_stock_points_incremental(
-        spark, raw_log_path=raw, points_path=points, watermark_path=wmp, jdbc=jdbc
+        spark, raw_log_path=raw, points_path=points, jdbc=jdbc
     ) is None
+    assert order == ["mirror", "lake"]
 
     lake = {
         (r["art_id"], r["point_date"]): round(r["sod_stock"], 6)

@@ -300,17 +300,13 @@ def test_stock_points_incremental_matches_full(spark, tmp_path, events_parquet):
     assert run_raw_movements_incremental(
         spark, events_path=part1, raw_log_path=raw, watermark_path=wmp
     ) is not None
-    assert run_stock_points_incremental(
-        spark, raw_log_path=raw, points_path=points, watermark_path=wmp
-    ) is not None
+    assert run_stock_points_incremental(spark, raw_log_path=raw, points_path=points) is not None
 
     # phase 2: full history visible; only post-watermark rows extracted
     assert run_raw_movements_incremental(
         spark, events_path=events_parquet, raw_log_path=raw, watermark_path=wmp
     ) is not None
-    run_stock_points_incremental(
-        spark, raw_log_path=raw, points_path=points, watermark_path=wmp
-    )
+    run_stock_points_incremental(spark, raw_log_path=raw, points_path=points)
 
     incremental = {
         (r["art_id"], r["point_date"]): r["sod_stock"]
@@ -358,7 +354,6 @@ def test_stock_points_incremental_hot_sku_dispatches_chunked(spark, tmp_path, mo
 
     raw = str(tmp_path / "raw_hot")
     points = str(tmp_path / "points_hot")
-    wmp = str(tmp_path / "wm_hot")
 
     start = F.lit("2024-01-01 00:00:00").cast("timestamp")
     hot = spark.range(3000).select(
@@ -403,8 +398,7 @@ def test_stock_points_incremental_hot_sku_dispatches_chunked(spark, tmp_path, mo
     monkeypatch.setattr(windows_mod, "replay_running_balance_chunked", spy_chunked)
 
     assert run_stock_points_incremental(
-        spark, raw_log_path=raw, points_path=points, watermark_path=wmp,
-        task_row_budget=500,
+        spark, raw_log_path=raw, points_path=points, task_row_budget=500,
     ) is not None
     assert calls["chunked"] == 1  # hot SKU (3000 rows) > budget (500)
 
@@ -576,22 +570,41 @@ def test_noop_tick_commits_nothing_and_launches_few_jobs(spark, tmp_path, small_
     assert jobs <= 6, f"no-op tick launched {jobs} Spark jobs"
 
 
+def _inventory_tick(spark, base, events):
+    """Raw movements, then stock points, on the sinks under ``base``;
+    returns the stock-points watermark."""
+    from osmart_etl_spark.pipelines import inventory
+
+    raw = str(base / "raw")
+    inventory.run_raw_movements_incremental(
+        spark, events_path=events, raw_log_path=raw, watermark_path=str(base / "wm")
+    )
+    return inventory.run_stock_points_incremental(
+        spark, raw_log_path=raw, points_path=str(base / "points")
+    )
+
+
+def _points(spark, base):
+    return {
+        (r["art_id"], r["point_date"]): r["sod_stock"]
+        for r in read_committed(spark, str(base / "points")).collect()
+    }
+
+
+_DAY4 = [
+    (36, dt.datetime(2025, 1, 4, 10), 1, "purchase", 40.0),
+    (37, dt.datetime(2025, 1, 4, 11), 0, "error", 5.0),
+]
+
+
 def test_stock_points_extract_prunes_raw_log_days(spark, tmp_path, small_events, monkeypatch):
     """Past a watermark, the stock-points extract filters the raw log's
     ``fecha_dia`` partition column, so its scan lists and opens only the
     days after the watermark."""
     from osmart_etl_spark.pipelines import inventory
 
-    raw, wm = str(tmp_path / "raw"), str(tmp_path / "wm")
-    points = str(tmp_path / "points")
-
     def tick():
-        inventory.run_raw_movements_incremental(
-            spark, events_path=small_events, raw_log_path=raw, watermark_path=wm
-        )
-        return inventory.run_stock_points_incremental(
-            spark, raw_log_path=raw, points_path=points, watermark_path=wm
-        )
+        return _inventory_tick(spark, tmp_path, small_events)
 
     assert tick() == "2025-01-03"
     append_events(spark, small_events, [(36, dt.datetime(2025, 1, 4, 10), 1, "purchase", 40.0)])
@@ -612,6 +625,108 @@ def test_stock_points_extract_prunes_raw_log_days(spark, tmp_path, small_events,
     for line in scans:
         filters = line.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
         assert "fecha_dia" in filters, line
+
+
+def test_stock_points_crash_after_commit_does_not_replay(
+    spark, tmp_path, small_events, monkeypatch
+):
+    """A crash right after the points commit: the watermark rode in
+    that commit, so the next run finds nothing past it and the points
+    equal a clean two-tick run."""
+    from osmart_etl_spark.pipelines import inventory
+
+    clean, crash = tmp_path / "clean", tmp_path / "crash"
+    assert _inventory_tick(spark, clean, small_events) == "2025-01-03"
+    assert _inventory_tick(spark, crash, small_events) == "2025-01-03"
+    append_events(spark, small_events, _DAY4)
+    assert _inventory_tick(spark, clean, small_events) == "2025-01-04"
+
+    real = inventory.upsert_versioned
+
+    def commit_then_die(*a, **kw):
+        real(*a, **kw)
+        raise RuntimeError("injected crash after the points commit")
+
+    monkeypatch.setattr(inventory, "upsert_versioned", commit_then_die)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        _inventory_tick(spark, crash, small_events)
+    monkeypatch.undo()
+
+    assert _inventory_tick(spark, crash, small_events) is None
+    assert _points(spark, crash) == _points(spark, clean)
+
+
+def test_stock_points_concurrent_run_commits_once(spark, tmp_path, small_events, monkeypatch):
+    """Two runs start from one points snapshot. The first to publish
+    commits; the other raises ``ConcurrentCommitError`` and commits
+    nothing, so the points equal one run."""
+    from osmart_etl_spark.io.atomic import ConcurrentCommitError, current_version
+    from osmart_etl_spark.pipelines import inventory
+
+    _inventory_tick(spark, tmp_path, small_events)
+    append_events(spark, small_events, _DAY4)
+    inventory.run_raw_movements_incremental(
+        spark, events_path=small_events, raw_log_path=str(tmp_path / "raw"),
+        watermark_path=str(tmp_path / "wm"),
+    )
+
+    real = inventory.compute_stock_points
+    racer: dict = {}
+
+    def race(*a, **kw):
+        # the slower run has read its snapshot; a racer runs from the
+        # same one and commits before it
+        monkeypatch.setattr(inventory, "compute_stock_points", real)
+        racer["wm"] = _inventory_tick(spark, tmp_path, small_events)
+        racer["version"] = current_version(spark, str(tmp_path / "points"))
+        racer["points"] = _points(spark, tmp_path)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(inventory, "compute_stock_points", race)
+    with pytest.raises(ConcurrentCommitError):
+        _inventory_tick(spark, tmp_path, small_events)
+    monkeypatch.undo()
+
+    wm, version, points = racer["wm"], racer["version"], racer["points"]
+    assert wm == "2025-01-04"
+    assert current_version(spark, str(tmp_path / "points")) == version
+    assert _points(spark, tmp_path) == points
+    assert _inventory_tick(spark, tmp_path, small_events) is None
+
+
+def test_stock_points_refuses_table_without_tick_wm(spark, tmp_path):
+    """A points table whose current commit carries no ``tick_wm`` kept
+    its watermark in the watermark table: replaying the raw log from an
+    empty watermark would apply every movement twice, so the run raises,
+    naming the rebuild, and keeps every file."""
+    from decimal import Decimal
+
+    from osmart_etl_spark.io.atomic import upsert_versioned
+    from osmart_etl_spark.pipelines.inventory import run_stock_points_incremental
+
+    points = str(tmp_path / "points")
+    upsert_versioned(
+        spark,
+        spark.createDataFrame(
+            [(1, dt.date(2025, 1, 2), Decimal("20.00"), dt.datetime(2025, 1, 3))],
+            "art_id BIGINT, point_date DATE, sod_stock DECIMAL(38,2), updated_at TIMESTAMP",
+        ),
+        points, keys=["art_id", "point_date"], order_col="updated_at",
+        sidecar={"max_key_rows": 1, "n_keys": 1},
+    )
+
+    def files():
+        return {
+            os.path.relpath(os.path.join(d, f), points): os.path.getsize(os.path.join(d, f))
+            for d, _, fs in os.walk(points) for f in fs
+        }
+
+    kept = files()
+    with pytest.raises(RuntimeError, match="no tick_wm.*rebuild"):
+        run_stock_points_incremental(
+            spark, raw_log_path=str(tmp_path / "raw"), points_path=points
+        )
+    assert files() == kept
 
 
 @pytest.mark.xfail(
@@ -674,8 +789,7 @@ def test_stock_points_complete_days_only(spark, tmp_path, events_parquet):
     cutoff = dt2.date(2024, 1, 15)
     pts_cut = str(tmp_path / "pts_cut")
     wm = run_stock_points_incremental(
-        spark, raw_log_path=raw, points_path=pts_cut, watermark_path=str(tmp_path / "wm2"),
-        complete_days_before=cutoff,
+        spark, raw_log_path=raw, points_path=pts_cut, complete_days_before=cutoff,
     )
     # watermark and points never reach the incomplete-day region
     assert wm is not None and wm <= "2024-01-15"
